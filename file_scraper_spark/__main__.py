@@ -77,8 +77,8 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument(
         "--no-created-stat",
         action="store_true",
-        help="skip the per-file stat that fills `created` on fs "
-        "sources (halves metadata I/O; created stays NULL)",
+        help="leave `created` NULL on fs sources instead of filling "
+        "it from the walk's stat",
     )
     p.add_argument("--verbose", "-v", action="store_true")
     args = p.parse_args(argv)

@@ -48,8 +48,8 @@ DELETED_AT = "2024-02-01 00:00:00"
 )
 def scrape_fs_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1-A6 end-to-end: the real fs source scraping sf_dir itself
-    (distributed binaryFile metadata listing -> FileInfo projection ->
-    broadcast mime join). Oracle lists the same directory via DuckDB
+    (executor-sharded walk + stat -> FileInfo projection -> mime
+    lookup). Oracle lists the same directory via DuckDB
     glob(); the oracle path is fixed at sf0.01 — the driver's t2 scale
     (TESTDATA.md) — because oracle SQL cannot receive sf_dir.
     """

@@ -25,18 +25,20 @@ snapshot DataFrame, faithfully reproducing the reference semantics
 
 Scale design: the per-batch DB round-trip (the reference ships <=200
 rows as array params) becomes either (a) driver-batched executemany
-over ``df.toLocalIterator`` — bounded driver memory, used for tests
-and small scrapes — or (b) executor-parallel JDBC append into the
-staging table *outside* the transaction, followed by the same
-single-transaction merge; staging is truncated per scrape so a
-partial stage is retry-safe and the visible table still moves
-atomically between snapshots. The DB-side SQL is dialect-neutral
-(tested against DuckDB; targets Postgres).
+over one ``df.collect()`` — a single Spark job that fetches every
+partition in parallel, holding the whole snapshot on the driver; the
+default, for snapshots that fit there — or (b) executor-parallel
+staging *outside* the transaction (``sync_snapshot_parallel``),
+followed by the same single-transaction merge, for snapshots too large
+for the driver; staging is truncated per scrape so a partial stage is
+retry-safe and the visible table still moves atomically between
+snapshots. The DB-side SQL is dialect-neutral (tested against DuckDB;
+targets Postgres).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable, Iterable
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -282,16 +284,15 @@ class MergeSink:
     ) -> None:
         """Merge a snapshot DataFrame (driver-batched path).
 
-        ``toLocalIterator`` streams one partition at a time to the
-        driver — bounded memory, no full collect. For huge snapshots
+        One ``collect`` fetches the snapshot in a single Spark job, all
+        partitions in parallel (a ``toLocalIterator`` pull would run one
+        job per partition, serially), before the transaction opens; the
+        rows then go through :meth:`sync_rows` batching. The whole
+        snapshot is held on the driver: for snapshots too large for it
         use :meth:`sync_snapshot_parallel`.
         """
-
-        def _rows() -> Iterator[tuple]:
-            for r in found.select(*FILE_COLUMNS).toLocalIterator():
-                yield tuple(r)
-
-        self.sync_rows(_rows(), external_source, scrape_time)
+        rows = found.select(*FILE_COLUMNS).collect()
+        self.sync_rows(rows, external_source, scrape_time)
 
     def sync_snapshot_parallel(
         self,

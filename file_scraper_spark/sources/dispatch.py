@@ -30,8 +30,8 @@ def source_for_path(
     """Scheme-sniff a CLI path into a Source (s3 first, fs fallback).
 
     ``created_from_stat`` applies only to fs sources (S3 has no create
-    time — src/s3.rs:123): False skips the per-file stat enrichment
-    and leaves `created` NULL (see sources/fs.py)."""
+    time — src/s3.rs:123): False leaves `created` NULL (see
+    sources/fs.py)."""
     loc = parse_s3_url(path)
     if loc is not None:
         from file_scraper_spark.sources.s3 import scrape_s3  # noqa: PLC0415

@@ -1,183 +1,52 @@
 """Filesystem listing source (reference A1/A3/A4/A13, src/fs.rs).
 
-Spark-first design: the recursive walk is Spark's own distributed file
-listing (`binaryFile` format with `recursiveFileLookup`), which runs
-the directory scan on the JVM with parallel partition discovery — the
-analog of the reference's async WalkDir + per-batch concurrent stat
-(src/fs.rs:85-100). File *contents are never read*: we select only the
-metadata columns, and the binaryFile reader prunes `content` away
-(checked by tests/test_sources.py via the physical plan's ReadSchema).
+Spark-first design: the recursive walk is the executor-sharded
+``pylisting`` Python DataSource (sources/pyds.py). The driver shards
+the tree's top entries; each executor task walks its shard and
+``lstat``s every entry once — the analog of the reference's async
+WalkDir + per-batch concurrent stat (src/fs.rs:85-100). File *contents
+are never read*. Like WalkDir, the walk records every regular file:
+zero-byte files, dot-files, files in dot-directories and ``_``-prefixed
+names included (a JVM ``binaryFile`` listing silently drops all four).
+Symlinks are not followed and are not file records.
 
 The projected schema mirrors FileInfo (src/db.rs:10-18 -> FIXTURES.md §4):
 external_source, path, filename, mime_type, created, modified, size.
+``modified`` and ``created`` keep the stat's microseconds.
 
 Quirk parity: the reference populates `created` from the platform's
 file-creation time and *errors* where btime is unavailable
 (`metadata.created()?`, src/fs.rs:65). Erroring a 1000-executor job
-for a missing btime is wrong at scale, so we relax: ``enrich_created``
-stats each listed file executor-side and fills `created` from
-st_birthtime where the platform exposes it (macOS/Windows/BSD),
-falling back to st_ctime (Linux: inode-change time — the closest
-os.stat field; it moves when a file is replaced, which is what the
-A8 change predicate needs), and NULL only if the stat itself fails.
-Spark's binaryFile listing exposes only (modificationTime, length),
-so this costs one extra executor-side stat per file — exactly the
-stat the reference performs (src/fs.rs:60-66). Pass
-``created_from_stat=False`` to skip it when the sink does not use
-`created` (halves metadata I/O on remote stores).
+for a missing btime is wrong at scale, so we relax: the walk's lstat
+fills `created` from st_birthtime where the platform exposes it
+(macOS/Windows/BSD), falling back to st_ctime (Linux: inode-change
+time — the closest stat field; it moves when a file is replaced, which
+is what the A8 change predicate needs). ``strict_created=True`` keeps
+the reference's error instead; ``created_from_stat=False`` leaves
+`created` NULL. Both go to the reader as its ``created`` option.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from file_scraper_spark.sources import pyds
 from file_scraper_spark.sources.mime import with_mime_type
 from file_scraper_spark.sources.url import default_fs_identifier
 
-if TYPE_CHECKING:
-    import pandas as pd
 
-
-def list_files(spark: SparkSession, root: str) -> DataFrame:
-    """Recursive metadata-only listing of a directory tree."""
-    raw = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-        .select("path", "modificationTime", "length")  # prunes `content`
-    )
-    return raw
-
-
-class BirthtimeUnavailableError(OSError):
-    """Strict-mode parity with the reference's ``metadata.created()?``
-    (src/fs.rs:65): raised when the platform/filesystem exposes no
-    file-creation time. The default (relaxed) mode falls back to
-    st_ctime instead — erroring a 1000-executor job over a missing
-    btime is wrong at scale, but the flag lets users who rely on the
-    reference's fail-fast contract keep it."""
-
-
-def _stat_created_ns(full_path: str, strict: bool = False) -> int | None:
-    """Creation time in epoch-ns: st_birthtime if the platform has it,
-    else st_ctime (see module docstring); None when the file vanished
-    between listing and stat (OSError) — a tolerated per-entry anomaly,
-    matching the reference walk's filter_map_ok (src/fs.rs:92).
-
-    The listing path may be URI percent-encoded depending on the
-    Spark/Hadoop version (observed unencoded on Spark 4.1.2, but
-    older file-source code paths emit ``Path.toUri`` strings where a
-    space becomes ``%20``). Stat the raw path first so a file whose
-    real name contains a literal ``%`` sequence (e.g. ``per%20cent``)
-    is never mis-decoded; retry percent-decoded ONLY when the raw stat
-    failed with ENOENT (a permission/IO error is not a naming mismatch
-    and must not trigger a different-path stat) AND the path actually
-    contains a ``%XX`` escape. Residual ambiguity: a raw-named file
-    vanishing between listing and stat while a decoded-name twin
-    exists would resolve to the twin — indistinguishable from an
-    encoded listing without a second listing pass; tolerated (same
-    class of races the reference walk's filter_map_ok accepts,
-    src/fs.rs:92)."""
-    import errno
-    import os
-    import re
-    from urllib.parse import unquote
-
-    try:
-        st = os.stat(full_path)
-    except OSError as exc:
-        if exc.errno != errno.ENOENT or not re.search(
-            "%[0-9A-Fa-f]{2}", full_path
-        ):
-            return None
-        try:
-            st = os.stat(unquote(full_path))
-        except OSError:
-            return None
-    bt = getattr(st, "st_birthtime_ns", None)
-    if bt is not None:
-        return bt
-    bt = getattr(st, "st_birthtime", None)
-    if bt is not None:
-        return int(bt * 1_000_000_000)
-    if strict:
-        # reference behavior: error, don't fall back (src/fs.rs:65).
-        # A *vanished* file is still tolerated above even in strict
-        # mode — the reference walk drops unreadable entries before
-        # ever calling metadata.created() (filter_map_ok, fs.rs:92).
-        raise BirthtimeUnavailableError(
-            f"no file-creation time available for {full_path!r} "
-            "(platform exposes no st_birthtime); use "
-            "strict_created=False for the st_ctime fallback"
-        )
-    return st.st_ctime_ns
-
-
-def enrich_created(projected: DataFrame, strict: bool = False) -> DataFrame:
-    """Fill the `created` column by stat-ing each file on executors.
-
-    Arrow-batched mapInPandas (never row-at-a-time serialization); the
-    per-file os.stat is the same syscall the reference's walk performs
-    per entry. Schema is unchanged, so batch and streaming paths can
-    both layer this on top of ``project_listing``.
-
-    ``strict=True`` reproduces the reference's error-on-missing-btime
-    (src/fs.rs:65): the job fails with BirthtimeUnavailableError
-    instead of falling back to st_ctime."""
-    schema = projected.schema
-
-    def add_created(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            us = [
-                None if ns is None else ns // 1_000
-                for ns in (
-                    _stat_created_ns(f"{p}/{f}", strict=strict)
-                    for p, f in zip(pdf["path"], pdf["filename"])
-                )
-            ]
-            pdf = pdf.copy()
-            # naive UTC datetimes, pre-truncated to micros (Spark
-            # TimestampType precision — Arrow refuses a lossy ns->us
-            # cast); session timezone is UTC-pinned (tables.load), so
-            # Arrow round-trips them unshifted
-            pdf["created"] = pd.to_datetime(
-                pd.Series(us, index=pdf.index, dtype="object"), unit="us"
-            )
-            yield pdf
-
-    return projected.mapInPandas(add_created, schema)
-
-
-def project_listing(
-    listed: DataFrame, spark: SparkSession, identifier: str
-) -> DataFrame:
-    """(path, modificationTime, length) listing -> FileInfo rows
-    (shared by the batch and streaming scrape paths so the projection
-    semantics can never drift between them)."""
-    # strip the scheme Spark prepends (file:/...) to match os paths
-    clean = F.regexp_replace("path", r"^file:", "")
-    projected = listed.select(
-        F.lit(identifier).alias("external_source"),
-        F.regexp_extract(clean, r"^(.*)/[^/]*$", 1).alias("path"),
-        F.substring_index(clean, "/", -1).alias("filename"),
-        F.lit(None).cast("timestamp").alias("created"),
-        F.col("modificationTime").alias("modified"),
-        F.col("length").cast("long").alias("size"),
-    )
-    return with_mime_type(projected, spark).select(
-        "external_source",
-        "path",
-        "filename",
-        "mime_type",
-        "created",
-        "modified",
-        "size",
+def list_files(spark: SparkSession, root: str, created: str = "stat") -> DataFrame:
+    """Recursive metadata-only listing of a directory tree, one input
+    partition per core: (path, filename, size, modified, created).
+    ``created`` is one of ``pyds.CREATED_MODES``."""
+    pyds.register(spark)
+    return (
+        spark.read.format("pylisting")
+        .option("path", root)
+        .option("numPartitions", spark.sparkContext.defaultParallelism)
+        .option("created", created)
+        .load()
     )
 
 
@@ -188,17 +57,27 @@ def scrape_fs(
     created_from_stat: bool = True,
     strict_created: bool = False,
 ) -> DataFrame:
-    """Full fs scrape dataflow: list -> project FileInfo -> mime join
-    -> created stat enrichment.
+    """Full fs scrape dataflow: walk + stat -> FileInfo projection ->
+    mime lookup.
 
     Equivalent of the reference walk pipeline minus the sink
     (src/fs.rs:98-117); feed the result to sinks.merge_sink.
     ``strict_created=True`` keeps the reference's error-on-missing-
-    btime contract (see enrich_created); the default relaxes it to
-    the st_ctime fallback.
+    btime contract (pyds.BirthtimeUnavailableError); the default
+    relaxes it to the st_ctime fallback.
     """
     identifier = identifier or default_fs_identifier(root)
-    out = project_listing(list_files(spark, root), spark, identifier)
-    if created_from_stat:
-        out = enrich_created(out, strict=strict_created)
-    return out
+    if not created_from_stat:
+        created = "none"
+    else:
+        created = "strict" if strict_created else "stat"
+    listed = list_files(spark, root, created)
+    return with_mime_type(listed).select(
+        F.lit(identifier).alias("external_source"),
+        "path",
+        "filename",
+        "mime_type",
+        "created",
+        "modified",
+        "size",
+    )

@@ -1,14 +1,15 @@
 """Extension -> MIME type lookup (reference A6, src/fs.rs:56-58).
 
-The reference calls a per-file library lookup; the scalable Spark form
-is a broadcast dimension join: the mapping is a tiny static table, the
-fact side never shuffles, and the lookup runs JVM-side inside
-whole-stage codegen (no Python UDF in the hot path).
+The reference calls a per-file library lookup; the Spark form is a
+literal map probed with ``try_element_at``: the mapping is a tiny static
+table, so it is folded into the plan as a constant and the lookup runs
+JVM-side inside whole-stage codegen — no join, no broadcast job, no
+Python UDF in the hot path.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Deterministic subset of the IANA registry (public knowledge), lowercase.
@@ -45,22 +46,19 @@ EXTENSION_MIME: dict[str, str] = {
 }
 
 
-def mime_dim(spark: SparkSession) -> DataFrame:
-    """The extension->mime mapping as a broadcastable dimension."""
-    return spark.createDataFrame(
-        sorted(EXTENSION_MIME.items()), schema="ext string, mime_type string"
-    )
-
-
 def extension_col(filename: Column) -> Column:
     """Lowercased extension, NULL when the name has no '.'."""
     ext = F.lower(F.substring_index(filename, ".", -1))
     return F.when(filename.contains("."), ext).otherwise(F.lit(None))
 
 
-def with_mime_type(df: DataFrame, spark: SparkSession, filename_col: str = "filename") -> DataFrame:
-    """Attach mime_type via broadcast lookup; NULL when unknown
-    (matches the reference's Option<String>, src/db.rs:13)."""
-    dim = F.broadcast(mime_dim(spark))
-    out = df.withColumn("_ext", extension_col(F.col(filename_col)))
-    return out.join(dim, out._ext == dim.ext, "left").drop("_ext", "ext")
+def with_mime_type(df: DataFrame, filename_col: str = "filename") -> DataFrame:
+    """Attach mime_type by literal-map lookup; NULL when unknown or the
+    name has no extension (matches the reference's Option<String>,
+    src/db.rs:13)."""
+    mime_map = F.create_map(
+        *(F.lit(x) for kv in sorted(EXTENSION_MIME.items()) for x in kv)
+    )
+    return df.withColumn(
+        "mime_type", F.try_element_at(mime_map, extension_col(F.col(filename_col)))
+    )

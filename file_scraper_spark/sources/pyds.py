@@ -2,22 +2,27 @@
 reference's filesystem listing (/root/reference/src/fs.rs:99 WalkDir
 walk -> FileInfo projection, src/fs.rs:50-76) as a FIRST-CLASS
 pluggable Spark source — `spark.read.format("pylisting")` — instead of
-a driver-side helper.
+a driver-side helper. It is the listing behind ``sources.fs.scrape_fs``.
 
 Design for scale (the part that matters at a 100 TB tree):
 
 - `partitions()` runs on the DRIVER but does NOT walk the tree: it
-  only lists the root's immediate children and shards them into
-  input partitions (the prefix-sharding strategy of S3 listers —
+  lists the root's immediate children and shards them into input
+  partitions (the prefix-sharding strategy of S3 listers —
   ListObjectsV2 with delimiter '/' then fan out per prefix,
-  src/s3.rs:87-100 is the single-worker version of this).
+  src/s3.rs:87-100 is the single-worker version of this). Only when
+  the root has fewer children than the target shard count does it
+  descend, one directory at a time, until there are enough entries.
 - `read(partition)` runs on EXECUTORS and does the recursive walk +
   stat for its shard — the expensive, embarrassingly-parallel part.
   Equivalent to the reference's intra-batch concurrent stat
-  (src/fs.rs:85-89), but across machines.
+  (src/fs.rs:85-89), but across machines. The walk's one `lstat` per
+  entry yields every column, `created` included.
 
 The row schema is the reference's FileInfo (src/db.rs:10-18) minus
-mime (a downstream broadcast join, operators/relational.mime_lookup).
+mime (a JVM-side literal-map lookup, sources/mime.with_mime_type).
+Timestamps are built from the integer ``st_*_ns`` fields, truncated to
+microseconds (Spark's TimestampType and the reference's precision).
 """
 
 from __future__ import annotations
@@ -25,7 +30,8 @@ from __future__ import annotations
 import fnmatch
 import os
 import stat as stat_mod
-from datetime import datetime, timezone
+from collections import deque
+from datetime import datetime, timedelta, timezone
 from typing import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -35,13 +41,84 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-SCHEMA = "path string, filename string, size long, modified timestamp"
+SCHEMA = (
+    "path string, filename string, size long, modified timestamp, "
+    "created timestamp"
+)
+
+#: Values of the ``created`` option: birthtime, else ctime (default);
+#: birthtime or fail; always NULL.
+CREATED_MODES = ("stat", "strict", "none")
+
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+
+class BirthtimeUnavailableError(OSError):
+    """Strict-mode parity with the reference's ``metadata.created()?``
+    (src/fs.rs:65): raised when the platform/filesystem exposes no
+    file-creation time. The default (relaxed) mode falls back to
+    st_ctime instead — erroring a 1000-executor job over a missing
+    btime is wrong at scale, but the flag lets users who rely on the
+    reference's fail-fast contract keep it."""
+
+
+def _ts(ns: int) -> datetime:
+    """Epoch-ns -> UTC datetime, floored to microseconds in integer
+    arithmetic (a float st_mtime loses sub-microsecond digits and can
+    round the microsecond itself)."""
+    return _EPOCH + timedelta(microseconds=ns // 1_000)
+
+
+def created_time(st: os.stat_result, mode: str, path: str) -> datetime | None:
+    """`created` from one stat result: st_birthtime where the platform
+    has it (macOS/Windows/BSD), else st_ctime (Linux: inode-change
+    time, the closest field; it moves when a file is replaced, which
+    is what the A8 change predicate needs). ``mode="strict"`` raises
+    instead of falling back (the reference's src/fs.rs:65);
+    ``mode="none"`` leaves it NULL."""
+    if mode == "none":
+        return None
+    bt = getattr(st, "st_birthtime_ns", None)
+    if bt is not None:
+        return _ts(bt)
+    bt = getattr(st, "st_birthtime", None)  # Python < 3.12: float only
+    if bt is not None:
+        return _EPOCH + timedelta(microseconds=int(bt * 1_000_000))
+    if mode == "strict":
+        raise BirthtimeUnavailableError(
+            f"no file-creation time available for {path!r} "
+            "(platform exposes no st_birthtime); use "
+            "strict_created=False for the st_ctime fallback"
+        )
+    return _ts(st.st_ctime_ns)
+
+
+def file_row(dirpath: str, name: str, st: os.stat_result, created: str) -> tuple:
+    """One SCHEMA row from the walk's lstat of ``dirpath/name``."""
+    # u64->i64 overflow -> NULL, like the reference's
+    # size.try_into().ok() (src/db.rs:85)
+    size = st.st_size if st.st_size <= 2**63 - 1 else None
+    return (
+        dirpath,
+        name,
+        size,
+        _ts(st.st_mtime_ns),
+        created_time(st, created, os.path.join(dirpath, name)),
+    )
+
+
+def _created_option(options: dict) -> str:
+    mode = options.get("created", "stat")
+    if mode not in CREATED_MODES:
+        raise ValueError(f"created must be one of {CREATED_MODES}, got {mode!r}")
+    return mode
 
 
 class ListingDataSource(DataSource):
     """`format("pylisting")` — options: path (root dir, required),
     pattern (fnmatch glob on filenames, default '*'),
-    numPartitions (target shard count, default 8)."""
+    numPartitions (target shard count, default 8),
+    created (one of CREATED_MODES, default 'stat')."""
 
     @classmethod
     def name(cls) -> str:
@@ -59,23 +136,49 @@ class _Shard(InputPartition):
         self.entries = entries
 
 
+def _scan_children(d: str) -> tuple[list[str], list[str]]:
+    """(non-directories, directories) directly under ``d``; a symlink
+    to a directory is a non-directory (never followed)."""
+    files, dirs = [], []
+    with os.scandir(d) as it:
+        for e in it:
+            (dirs if e.is_dir(follow_symlinks=False) else files).append(e.path)
+    return files, dirs
+
+
 class ListingReader(DataSourceReader):
     def __init__(self, options: dict):
         self.root = options["path"]
         self.pattern = options.get("pattern", "*")
         self.nparts = int(options.get("numpartitions", "8"))
+        self.created = _created_option(options)
 
     def partitions(self) -> Sequence[InputPartition]:
-        # Driver-side: shard the root's immediate children round-robin;
-        # never recurse here — subtree size is unknown and walking a
-        # 100 TB tree on the driver is the anti-pattern.
-        children = sorted(
-            os.path.join(self.root, e) for e in os.listdir(self.root)
-        )
-        if not children:
+        # Driver-side: shard the root's immediate children round-robin.
+        # Subtree sizes are unknown and walking a 100 TB tree on the
+        # driver is the anti-pattern, so descend (breadth-first, one
+        # directory at a time) only while there are fewer entries than
+        # shards — a root holding one directory would otherwise walk
+        # in one task.
+        if not os.path.isdir(self.root):
+            os.stat(self.root)  # a missing root fails the scrape
+            return [_Shard([self.root])]  # WalkDir of a file: the file
+        files, dirs = _scan_children(self.root)
+        pending, unreadable = deque(dirs), []
+        while pending and len(files) + len(unreadable) + len(pending) < self.nparts:
+            d = pending.popleft()
+            try:
+                sub_files, sub_dirs = _scan_children(d)
+            except OSError:
+                unreadable.append(d)  # the executor walk skips it
+                continue
+            files += sub_files
+            pending.extend(sub_dirs)
+        entries = sorted(files + unreadable + list(pending))
+        if not entries:
             return [_Shard([])]
-        n = min(self.nparts, len(children))
-        return [_Shard(children[i::n]) for i in range(n)]
+        n = min(self.nparts, len(entries))
+        return [_Shard(entries[i::n]) for i in range(n)]
 
     def read(self, partition: _Shard) -> Iterator[tuple]:
         # Executor-side: recursive walk + stat of this shard. Per-entry
@@ -101,18 +204,9 @@ class ListingReader(DataSourceReader):
                 continue
             if not stat_mod.S_ISREG(st.st_mode):
                 continue  # symlink / fifo / socket: not a file record
-            name = os.path.basename(p)
-            if not fnmatch.fnmatch(name, self.pattern):
-                continue
-            # u64->i64 overflow -> NULL, like the reference's
-            # size.try_into().ok() (src/db.rs:85)
-            size = st.st_size if st.st_size <= 2**63 - 1 else None
-            yield (
-                os.path.dirname(p),
-                name,
-                size,
-                datetime.fromtimestamp(st.st_mtime, tz=timezone.utc),
-            )
+            dirpath, name = os.path.split(p)
+            if fnmatch.fnmatch(name, self.pattern):
+                yield file_row(dirpath, name, st, self.created)
 
 
 def register(spark) -> None:  # noqa: ANN001
@@ -138,6 +232,7 @@ class ListingStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, options: dict):
         self.root = options["path"]
         self.pattern = options.get("pattern", "*")
+        self.created = _created_option(options)
 
     def initialOffset(self) -> dict:
         return {"mtime_ns": -1}
@@ -145,35 +240,28 @@ class ListingStreamReader(SimpleDataSourceStreamReader):
     def _scan(self, after_ns: int, until_ns: int | None = None):
         """Files with after_ns < mtime_ns (<= until_ns if given).
         os.walk never follows symlinked dirs (followlinks=False) and
-        tolerates unreadable dirs; the per-file stat is additionally
+        tolerates unreadable dirs; the per-file lstat is additionally
         guarded so entries vanishing mid-scan are skipped, not fatal
-        (the reference walk's filter_map_ok, src/fs.rs:88)."""
+        (the reference walk's filter_map_ok, src/fs.rs:88), and, like
+        the batch reader, keeps only regular files (a symlink is not
+        followed)."""
         newest = after_ns
         rows = []
         for dirpath, _, files in os.walk(self.root):
             for f in files:
                 if not fnmatch.fnmatch(f, self.pattern):
                     continue
-                p = os.path.join(dirpath, f)
                 try:
-                    st = os.stat(p)
+                    st = os.lstat(os.path.join(dirpath, f))
                 except OSError:
-                    continue  # deleted / broken link between list+stat
+                    continue  # deleted between list and stat
+                if not stat_mod.S_ISREG(st.st_mode):
+                    continue
                 if st.st_mtime_ns > after_ns and (
                     until_ns is None or st.st_mtime_ns <= until_ns
                 ):
                     newest = max(newest, st.st_mtime_ns)
-                    size = st.st_size if st.st_size <= 2**63 - 1 else None
-                    rows.append(
-                        (
-                            dirpath,
-                            f,
-                            size,
-                            datetime.fromtimestamp(
-                                st.st_mtime, tz=timezone.utc
-                            ),
-                        )
-                    )
+                    rows.append(file_row(dirpath, f, st, self.created))
         return rows, newest
 
     def read(self, start: dict):

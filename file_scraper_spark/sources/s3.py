@@ -2,8 +2,8 @@
 
 Two scale paths:
 
-1. **S3A connector** (default on a real cluster): the same
-   `binaryFile` metadata listing as the fs source pointed at
+1. **S3A connector** (default on a real cluster): a `binaryFile`
+   metadata listing (``content`` pruned) of
    ``s3a://bucket/prefix`` — listing pagination, prefix pushdown
    (reference src/s3.rs:91-92) and parallelism are handled by the
    Hadoop S3A client on executors.
@@ -184,9 +184,7 @@ def list_objects_boto3(
     return spark.createDataFrame(rows, schema=_LIST_SCHEMA)
 
 
-def project_objects(
-    spark: SparkSession, listed: DataFrame, identifier: str
-) -> DataFrame:
+def project_objects(listed: DataFrame, identifier: str) -> DataFrame:
     """Object (key, modified, size) -> FileInfo rows.
 
     dir/filename split at the last '/' — a key without '/' yields
@@ -202,7 +200,7 @@ def project_objects(
         F.col("modified"),
         F.col("size").cast("long").alias("size"),
     )
-    return with_mime_type(projected, spark).select(
+    return with_mime_type(projected).select(
         "external_source",
         "path",
         "filename",
@@ -223,12 +221,14 @@ def scrape_s3(
     """Full S3 scrape dataflow (minus sink)."""
     identifier = identifier or loc.url  # reference src/s3.rs:71
     if use_s3a:
-        from file_scraper_spark.sources.fs import list_files  # noqa: PLC0415
-
         configure_s3a(spark)  # env-driven credentials/endpoint, no-op if unset
         s3a_root = f"s3a://{loc.bucket}/{loc.path}".rstrip("/")
         try:
-            listed = list_files(spark, s3a_root).select(
+            listed = (
+                spark.read.format("binaryFile")
+                .option("recursiveFileLookup", "true")
+                .load(s3a_root)
+            ).select(
                 F.regexp_replace("path", r"^s3a://[^/]+/", "").alias("key"),
                 F.col("modificationTime").alias("modified"),
                 F.col("length").cast("long").alias("size"),
@@ -237,4 +237,4 @@ def scrape_s3(
             raise_translated_s3a_error(e)
     else:
         listed = list_objects_boto3(spark, loc, client=client)
-    return project_objects(spark, listed, identifier)
+    return project_objects(listed, identifier)

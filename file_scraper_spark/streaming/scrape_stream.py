@@ -10,8 +10,9 @@ flowing through incrementally like the reference's chunks_timeout
 pipeline (src/fs.rs:98-117).
 
 foreachBatch executes on the driver, so all batches share the sink
-connection; per-batch row extraction streams partition-at-a-time
-(toLocalIterator) to keep driver memory bounded.
+connection; each micro-batch is fetched with one ``collect`` (one
+Spark job for all its partitions), so driver memory holds one batch
+(bounded by ``max_files_per_trigger``).
 """
 
 from __future__ import annotations
@@ -22,8 +23,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from file_scraper_spark.sinks.merge_sink import FILE_COLUMNS, MergeSink
-from file_scraper_spark.sources.fs import project_listing
+from file_scraper_spark.sources.mime import with_mime_type
 from file_scraper_spark.sources.url import default_fs_identifier
+
+
+def project_listing(listed: DataFrame, identifier: str) -> DataFrame:
+    """(path, modificationTime, length) ``binaryFile`` listing ->
+    FileInfo rows; `created` is NULL (the listing carries no stat)."""
+    # strip the scheme Spark prepends (file:/...) to match os paths
+    clean = F.regexp_replace("path", r"^file:", "")
+    projected = listed.select(
+        F.lit(identifier).alias("external_source"),
+        F.regexp_extract(clean, r"^(.*)/[^/]*$", 1).alias("path"),
+        F.substring_index(clean, "/", -1).alias("filename"),
+        F.lit(None).cast("timestamp").alias("created"),
+        F.col("modificationTime").alias("modified"),
+        F.col("length").cast("long").alias("size"),
+    )
+    return with_mime_type(projected).select(*FILE_COLUMNS)
 
 
 def scrape_stream(
@@ -61,7 +78,7 @@ def scrape_stream(
         )
 
         raise_translated_s3a_error(e)
-    found = project_listing(listed, spark, identifier)
+    found = project_listing(listed, identifier)
     _fold_stream_into_sink(
         found, sink, identifier, scrape_time, available_now=True
     )
@@ -87,9 +104,7 @@ def _fold_stream_into_sink(
     session = sink.open_scrape(identifier, scrape_time)
 
     def merge_batch(batch_df: DataFrame, _epoch: int) -> None:
-        session.add_rows(
-            tuple(r) for r in batch_df.select(*FILE_COLUMNS).toLocalIterator()
-        )
+        session.add_rows(batch_df.select(*FILE_COLUMNS).collect())
 
     writer = found.writeStream.foreachBatch(merge_batch)
     if available_now:
@@ -124,11 +139,9 @@ def scrape_stream_pylisting(
     binaryFile stream — same FileInfo projection, same one-
     transaction merge semantics as ``scrape_stream``.
 
-    The pyds row schema has no created/mime columns; mime joins from
-    the broadcast extension table (with_mime_type) and created stays
-    NULL (callers wanting it layer ``sources.fs.enrich_created``)."""
+    The pyds rows carry `created` from the walk's lstat; mime comes
+    from the extension lookup (with_mime_type)."""
     from file_scraper_spark.sources import pyds  # noqa: PLC0415
-    from file_scraper_spark.sources.mime import with_mime_type  # noqa: PLC0415
 
     identifier = identifier or default_fs_identifier(root)
     scrape_time = scrape_time or datetime.now(timezone.utc).replace(tzinfo=None)
@@ -142,15 +155,7 @@ def scrape_stream_pylisting(
         .load()
     )
     found = with_mime_type(
-        listed.select(
-            F.lit(identifier).alias("external_source"),
-            "path",
-            "filename",
-            F.lit(None).cast("timestamp").alias("created"),
-            "modified",
-            F.col("size").cast("long").alias("size"),
-        ),
-        spark,
+        listed.withColumn("external_source", F.lit(identifier))
     ).select(*FILE_COLUMNS)
     _fold_stream_into_sink(
         found, sink, identifier, scrape_time, available_now=False

@@ -198,3 +198,50 @@ def test_spark_dataframe_end_to_end(db, spark, sf_dir):
     # second identical scrape: all no-ops, nothing deleted
     sink.sync_snapshot(found, "t", T2)
     assert all(r[7] is None for r in fetch(connect))
+
+
+def test_rescrape_truncated_file_stays_live(db, spark, tmp_path):
+    """A file truncated to 0 bytes between scrapes is still a file: its
+    row is updated to size 0, never soft-deleted."""
+    import os
+
+    from file_scraper_spark.sources.fs import scrape_fs
+
+    sink, connect = db
+    tree = tmp_path / "tree"
+    tree.mkdir()
+    (tree / "keep.txt").write_bytes(b"k")
+    (tree / "shrink.txt").write_bytes(b"s" * 10)
+    sink.sync_snapshot(scrape_fs(spark, str(tree), identifier="t"), "t", T1)
+
+    with open(tree / "shrink.txt", "wb"):
+        pass
+    os.utime(tree / "shrink.txt", ns=(1_800_000_000_000_000_000,) * 2)
+    sink.sync_snapshot(scrape_fs(spark, str(tree), identifier="t"), "t", T2)
+    rows = {r[2]: r for r in fetch(connect)}
+    assert rows["shrink.txt"][6] == 0
+    assert rows["shrink.txt"][5] == datetime(2027, 1, 15, 8, 0)
+    assert rows["shrink.txt"][7] is None
+    assert rows["keep.txt"][6] == 1 and rows["keep.txt"][7] is None
+
+
+def test_sync_snapshot_fetches_in_one_job(db, spark):
+    """The driver-batched fetch runs one Spark job however many
+    partitions the snapshot has."""
+    sink, connect = db
+    rows = [row(filename=f"f{i}.txt") for i in range(20)]
+    found = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 4),
+        "external_source string, path string, filename string, "
+        "mime_type string, created timestamp, modified timestamp, size long",
+    )
+    assert found.rdd.getNumPartitions() >= 4
+    sc = spark.sparkContext
+    sc.setJobGroup("sync_snapshot_jobs", "sync_snapshot_jobs")
+    try:
+        sink.sync_snapshot(found, SRC, T1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("sync_snapshot_jobs")) == 1
+    assert len(fetch(connect)) == 20

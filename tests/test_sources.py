@@ -65,22 +65,30 @@ def test_scrape_fs_schema_and_rows(spark, sf_dir):
     assert all(r.created is not None for r in rows)
 
 
+def _us(ns: int):
+    """Epoch-ns -> naive UTC datetime floored to micros, computed
+    independently of the package."""
+    from datetime import datetime, timedelta
+
+    return datetime(1970, 1, 1) + timedelta(microseconds=ns // 1_000)
+
+
 def test_scrape_fs_created_matches_stat(spark, tmp_path):
-    """created must equal os.stat's birthtime/ctime (micros precision)
-    and switch off cleanly with created_from_stat=False."""
+    """created and modified must equal the stat's birthtime/ctime and
+    mtime to the microsecond, and created switches off cleanly with
+    created_from_stat=False."""
     import os
-    from datetime import datetime, timezone
 
     f = tmp_path / "x.bin"
     f.write_bytes(b"\x00" * 64)
+    os.utime(f, ns=(1_700_000_000_123_456_789,) * 2)  # sub-ms mtime
     st = os.stat(f)
     expect_ns = getattr(st, "st_birthtime_ns", None) or st.st_ctime_ns
 
     rows = scrape_fs(spark, str(tmp_path), identifier="t").collect()
     assert len(rows) == 1
-    got = rows[0].created.replace(tzinfo=timezone.utc)
-    expect = datetime.fromtimestamp(expect_ns / 1e9, tz=timezone.utc)
-    assert abs((got - expect).total_seconds()) < 0.002
+    assert rows[0].created == _us(expect_ns)
+    assert rows[0].modified == _us(st.st_mtime_ns)
 
     plain = scrape_fs(
         spark, str(tmp_path), identifier="t", created_from_stat=False
@@ -95,7 +103,12 @@ def test_scrape_fs_strict_created_modes(spark, tmp_path):
     job; where btime exists, both modes agree."""
     import os
 
-    from file_scraper_spark.sources.fs import _stat_created_ns
+    from file_scraper_spark.sources.pyds import (
+        BirthtimeUnavailableError,
+        ListingReader,
+        _Shard,
+        created_time,
+    )
 
     f = tmp_path / "x.bin"
     f.write_bytes(b"\x00")
@@ -104,25 +117,23 @@ def test_scrape_fs_strict_created_modes(spark, tmp_path):
     rows = scrape_fs(spark, str(tmp_path)).collect()
     assert rows[0].created is not None
 
-    has_btime = hasattr(os.stat(f), "st_birthtime") or hasattr(
-        os.stat(f), "st_birthtime_ns"
-    )
-    if has_btime:
+    st = os.lstat(f)
+    if hasattr(st, "st_birthtime") or hasattr(st, "st_birthtime_ns"):
         strict_rows = scrape_fs(
             spark, str(tmp_path), strict_created=True
         ).collect()
         assert strict_rows[0].created == rows[0].created
     else:
-        from file_scraper_spark.sources.fs import BirthtimeUnavailableError
-
-        # unit level: the stat helper raises the typed error
+        # unit level: the walk's created helper raises the typed error
         with pytest.raises(BirthtimeUnavailableError):
-            _stat_created_ns(str(f), strict=True)
+            created_time(st, "strict", str(f))
         # job level: the failure propagates out of the executor
         with pytest.raises(Exception, match="BirthtimeUnavailable"):
             scrape_fs(spark, str(tmp_path), strict_created=True).collect()
-    # strict never affects the vanished-file tolerance
-    assert _stat_created_ns(str(tmp_path / "gone.bin"), strict=True) is None
+    # strict never affects the vanished-file tolerance: an entry gone
+    # between the driver's sharding and the executor's lstat is skipped
+    reader = ListingReader({"path": str(tmp_path), "created": "strict"})
+    assert list(reader.read(_Shard([str(tmp_path / "gone.bin")]))) == []
 
 
 def test_scrape_fs_special_char_filenames(spark, tmp_path):
@@ -144,36 +155,87 @@ def test_scrape_fs_special_char_filenames(spark, tmp_path):
         assert rows[n].path == str(tmp_path)
 
 
-def test_enrich_created_decodes_encoded_listing(spark, tmp_path):
-    """If an upstream listing hands percent-ENCODED paths (older
-    Spark/Hadoop file-source behavior: space -> %20), the stat
-    fallback must decode and still fill `created` — while a file
-    whose real name contains a literal escape sequence is statted
-    as-is, never mis-decoded."""
-    from file_scraper_spark.sources.fs import enrich_created
+def test_scrape_fs_edge_case_tree(spark, tmp_path):
+    """Every regular file WalkDir records reaches the scrape — empty,
+    dot, dot-dir, `_`-prefixed, space and literal `%20` names — and
+    symlinks (to a file or dangling) do not, compared against an
+    independent os.walk + lstat. The tree hangs below one directory,
+    so the listing must shard below the root to use several tasks."""
+    import os
+    import stat
 
-    (tmp_path / "has space.txt").write_bytes(b"x")
-    (tmp_path / "per%20cent.txt").write_bytes(b"y")
+    top = tmp_path / "only"
+    (top / ".hidden").mkdir(parents=True)
+    (top / "sub").mkdir()
+    (top / "empty.txt").write_bytes(b"")
+    (top / ".dotfile").write_bytes(b"d")
+    (top / ".hidden" / "inside.csv").write_bytes(b"h" * 3)
+    (top / "_underscore.json").write_bytes(b"u" * 4)
+    (top / "sub" / "has space.txt").write_bytes(b"s" * 5)
+    (top / "sub" / "per%20cent.md").write_bytes(b"p" * 6)
+    (top / "sub" / "x._COPYING_").write_bytes(b"c" * 7)
+    os.symlink(top / "sub" / "has space.txt", top / "link.txt")
+    os.symlink(tmp_path / "nowhere", top / "dangling.txt")
 
-    listing = spark.createDataFrame(
-        [
-            ("t", str(tmp_path), "has%20space.txt", "text/plain", None, None, 1),
-            ("t", str(tmp_path), "per%20cent.txt", "text/plain", None, None, 1),
-        ],
-        "external_source string, path string, filename string, "
-        "mime_type string, created timestamp, modified timestamp, size long",
-    )
-    rows = {r.filename: r for r in enrich_created(listing).collect()}
+    expect = {}
+    for dirpath, _, files in os.walk(tmp_path):
+        for f in files:
+            st = os.lstat(os.path.join(dirpath, f))
+            if stat.S_ISREG(st.st_mode):
+                created = getattr(st, "st_birthtime_ns", None) or st.st_ctime_ns
+                expect[(dirpath, f)] = (
+                    st.st_size, _us(st.st_mtime_ns), _us(created)
+                )
+    assert len(expect) == 7
+
+    df = scrape_fs(spark, str(tmp_path), identifier="t")
+    assert df.rdd.getNumPartitions() > 1
+    got = {
+        (r.path, r.filename): (r.size, r.modified, r.created)
+        for r in df.collect()
+    }
+    assert got == expect
+
+
+def test_listing_shards_below_single_child_root(tmp_path):
+    """A root whose only child is a directory is split at the first
+    level that has enough entries; no file is lost or duplicated."""
     import os
 
-    # encoded name decoded to the real file
-    assert rows["has%20space.txt"].created is not None
-    # literal %20 in the real name: raw stat wins, no double-decode
-    got_ns = rows["per%20cent.txt"].created
-    assert got_ns is not None
-    st = os.stat(tmp_path / "per%20cent.txt")
-    expect = getattr(st, "st_birthtime_ns", None) or st.st_ctime_ns
-    assert abs(got_ns.timestamp() * 1e9 - expect) < 2e6
+    from file_scraper_spark.sources.pyds import ListingReader
+
+    for i in range(6):
+        d = tmp_path / "one" / f"d{i}"
+        d.mkdir(parents=True)
+        (d / "f.txt").write_bytes(b"x")
+    (tmp_path / "one" / "top.txt").write_bytes(b"x")
+
+    reader = ListingReader({"path": str(tmp_path), "numpartitions": "4"})
+    shards = reader.partitions()
+    assert len(shards) == 4
+    rows = [r for s in shards for r in reader.read(s)]
+    assert sorted((os.path.basename(r[0]), r[1]) for r in rows) == sorted(
+        [(f"d{i}", "f.txt") for i in range(6)] + [("one", "top.txt")]
+    )
+
+
+def test_mime_type_lookup_nulls(spark):
+    """Known extensions map case-insensitively; unknown extensions and
+    names without a '.' stay NULL."""
+    from file_scraper_spark.sources.mime import with_mime_type
+
+    df = spark.createDataFrame(
+        [("a.PNG",), ("b.unknownext",), ("noext",), ("trailing.",), (None,)],
+        "filename string",
+    )
+    got = dict(with_mime_type(df).collect())
+    assert got == {
+        "a.PNG": "image/png",
+        "b.unknownext": None,
+        "noext": None,
+        "trailing.": None,
+        None: None,
+    }
 
 
 def test_python_datasource_stat_fidelity(spark, tmp_path):
