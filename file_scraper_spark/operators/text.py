@@ -255,7 +255,6 @@ def _redact_batches(batches):
     with ASCII spans substituted — multi-byte chars pass through
     untouched (ASCII classes cannot match inside a multi-byte
     UTF-8 char)."""
-    import numpy as np  # noqa: PLC0415
     import pyarrow as pa  # noqa: PLC0415
     import pyarrow.compute as pc  # noqa: PLC0415
 
@@ -264,13 +263,14 @@ def _redact_batches(batches):
             continue
         doc_id = batch.column(0)
         text = batch.column(1)
-        d = doc_id.to_numpy(zero_copy_only=False)
-        m = np.where(d >= 0, d % 10, -((-d) % 10))
+        # doc_id - (doc_id / 10) * 10 with truncating integer division:
+        # sign-preserving, NULL-propagating, no overflow at INT64_MIN
+        digit = pc.subtract(doc_id, pc.multiply(pc.divide(doc_id, 10), 10))
         dirty = pc.binary_join_element_wise(
             "contact user",
             pc.cast(doc_id, pa.string()),
             "@example.com or +1-555-010",
-            pc.cast(pa.array(m, pa.int64()), pa.string()),
+            pc.cast(digit, pa.string()),
             " re: ",
             text,
             "",

@@ -24,9 +24,11 @@ snapshot DataFrame, faithfully reproducing the reference semantics
   (src/fs.rs:103-116).
 
 Scale design: the per-batch DB round-trip (the reference ships <=200
-rows as array params) becomes either (a) driver-batched executemany
-over one ``df.collect()`` — a single Spark job that fetches every
-partition in parallel, holding the whole snapshot on the driver; the
+rows as array params) becomes either (a) driver-batched staging over
+one ``df.collect()`` — a single Spark job that fetches every partition
+in parallel, holding the whole snapshot on the driver; each batch is
+staged by one multi-row ``INSERT ... VALUES (...), (...)`` (split to
+stay under Postgres's bind-parameter limit), not row-at-a-time; the
 default, for snapshots that fit there — or (b) executor-parallel
 staging *outside* the transaction (``sync_snapshot_parallel``),
 followed by the same single-transaction merge, for snapshots too large
@@ -54,6 +56,11 @@ FILE_COLUMNS = (
 )
 
 I64_MAX = 2**63 - 1
+
+#: Rows per staging INSERT: Postgres caps a statement at 65535 bind
+#: parameters, and each staged row binds one per FILE_COLUMNS entry.
+STAGE_ROWS_PER_STATEMENT = 65535 // len(FILE_COLUMNS)
+_STAGE_ROW = "(" + ", ".join("?" * len(FILE_COLUMNS)) + ")"
 
 TARGET_DDL = """
 CREATE SEQUENCE IF NOT EXISTS external_file_seq;
@@ -167,8 +174,7 @@ class ScrapeSession:
     many batches, still exactly one visible snapshot transition.
 
     ``paramstyle``: SQL here is written qmark-style; "format" rewrites
-    placeholders to %s for psycopg. executemany goes through a cursor
-    when the connection object lacks it (psycopg Connection does).
+    placeholders to %s for psycopg.
     """
 
     def __init__(
@@ -188,21 +194,21 @@ class ScrapeSession:
     def _sql(self, sql: str) -> str:
         return sql if self._ph == "?" else sql.replace("?", "%s")
 
-    def _executemany(self, sql: str, rows: list[tuple]) -> None:
-        if hasattr(self.con, "executemany"):
-            self.con.executemany(sql, rows)
-        else:  # psycopg: executemany lives on the cursor
-            with self.con.cursor() as cur:
-                cur.executemany(sql, rows)
-
     def add_rows(self, rows: Iterable[tuple]) -> None:
+        """Merge one batch: stage it with one multi-row INSERT per
+        STAGE_ROWS_PER_STATEMENT rows, then upsert and record seen."""
         batch = [(*r[:6], clamp_size(r[6])) for r in rows]
         if not batch:
             return
-        self._executemany(
-            self._sql("INSERT INTO staging_found VALUES (?, ?, ?, ?, ?, ?, ?)"),
-            batch,
-        )
+        for i in range(0, len(batch), STAGE_ROWS_PER_STATEMENT):
+            chunk = batch[i : i + STAGE_ROWS_PER_STATEMENT]
+            self.con.execute(
+                self._sql(
+                    "INSERT INTO staging_found VALUES "
+                    + ", ".join([_STAGE_ROW] * len(chunk))
+                ),
+                [v for r in chunk for v in r],
+            )
         self.con.execute(UPSERT_SQL)
         self.con.execute(SEEN_SQL)
         self.con.execute("DELETE FROM staging_found")

@@ -44,8 +44,25 @@ class PsqlError(RuntimeError):
     pass
 
 
+def substitute(sql: str, params) -> str:
+    """Replace each placeholder of ``sql`` (all ``%s`` if it has any,
+    else all ``?``) by the matching parameter's literal, in one
+    left-to-right pass: a placeholder character inside a substituted
+    value is never substituted again."""
+    ph = "%s" if "%s" in sql else "?"
+    parts = sql.split(ph)
+    if len(parts) != len(params) + 1:
+        raise PsqlError(
+            f"{len(parts) - 1} placeholders for {len(params)} parameters"
+        )
+    out = [parts[0]]
+    for p, rest in zip(params, parts[1:]):
+        out += (quote_literal(p), rest)
+    return "".join(out)
+
+
 class PsqlConnection:
-    """Just enough DB-API for MergeSink (execute/executemany/fetchall/
+    """Just enough DB-API for the sinks (execute/executemany/fetchall/
     commit/rollback/close), over one psql session == one DB session
     (temp tables and transactions behave normally)."""
 
@@ -95,9 +112,7 @@ class PsqlConnection:
 
     def execute(self, sql: str, params: tuple | None = None):
         if params:
-            for p in params:
-                ph = "%s" if "%s" in sql else "?"
-                sql = sql.replace(ph, quote_literal(p), 1)
+            sql = substitute(sql, params)
         self._last_rows = [
             tuple(None if c == NULL_TOKEN else c for c in l.split(SEP))
             for l in self._roundtrip(sql)

@@ -1,10 +1,13 @@
 """Filesystem listing source (reference A1/A3/A4/A13, src/fs.rs).
 
-Spark-first design: the recursive walk is the executor-sharded
-``pylisting`` Python DataSource (sources/pyds.py). The driver shards
-the tree's top entries; each executor task walks its shard and
-``lstat``s every entry once — the analog of the reference's async
-WalkDir + per-batch concurrent stat (src/fs.rs:85-100). File *contents
+Spark-first design: the recursive walk is executor-sharded. The
+driver shards the tree's top entries (``pyds.plan_shards``) into one
+RDD partition each; each executor task walks its shard
+(``pyds.walk_shard``) and ``lstat``s every entry once — the analog of
+the reference's async WalkDir + per-batch concurrent stat
+(src/fs.rs:85-100). The RDD needs no Python DataSource planner
+process, which the ``pylisting`` format (same two functions) starts
+once to build and once to execute a read. File *contents
 are never read*. Like WalkDir, the walk records every regular file:
 zero-byte files, dot-files, files in dot-directories and ``_``-prefixed
 names included (a JVM ``binaryFile`` listing silently drops all four).
@@ -23,10 +26,12 @@ fills `created` from st_birthtime where the platform exposes it
 time — the closest stat field; it moves when a file is replaced, which
 is what the A8 change predicate needs). ``strict_created=True`` keeps
 the reference's error instead; ``created_from_stat=False`` leaves
-`created` NULL. Both go to the reader as its ``created`` option.
+`created` NULL. Both reach the walk as its ``created`` mode.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,16 +43,15 @@ from file_scraper_spark.sources.url import default_fs_identifier
 
 def list_files(spark: SparkSession, root: str, created: str = "stat") -> DataFrame:
     """Recursive metadata-only listing of a directory tree, one input
-    partition per core: (path, filename, size, modified, created).
-    ``created`` is one of ``pyds.CREATED_MODES``."""
-    pyds.register(spark)
-    return (
-        spark.read.format("pylisting")
-        .option("path", root)
-        .option("numPartitions", spark.sparkContext.defaultParallelism)
-        .option("created", created)
-        .load()
+    partition per shard (at most one per core): (path, filename, size,
+    modified, created). ``created`` is one of ``pyds.CREATED_MODES``."""
+    pyds.check_created_mode(created)
+    sc = spark.sparkContext
+    shards = pyds.plan_shards(root, sc.defaultParallelism)
+    rows = sc.parallelize(shards, len(shards)).flatMap(
+        partial(pyds.walk_shard, created=created)
     )
+    return spark.createDataFrame(rows, pyds.SCHEMA)
 
 
 def scrape_fs(

@@ -1,23 +1,30 @@
-"""Python DataSource (Spark 4 `pyspark.sql.datasource` API): the
-reference's filesystem listing (/root/reference/src/fs.rs:99 WalkDir
-walk -> FileInfo projection, src/fs.rs:50-76) as a FIRST-CLASS
-pluggable Spark source — `spark.read.format("pylisting")` — instead of
-a driver-side helper. It is the listing behind ``sources.fs.scrape_fs``.
+"""The reference's filesystem listing (src/fs.rs:99 WalkDir walk ->
+FileInfo projection, src/fs.rs:50-76) as two plain functions, plus
+the Spark 4 Python DataSource pair (`pyspark.sql.datasource` API)
+that exposes the listing as pluggable sources:
+`spark.read.format("pylisting")` and
+`spark.readStream.format("pylisting_stream")`.
 
 Design for scale (the part that matters at a 100 TB tree):
 
-- `partitions()` runs on the DRIVER but does NOT walk the tree: it
-  lists the root's immediate children and shards them into input
+- :func:`plan_shards` runs on the DRIVER but does NOT walk the tree:
+  it lists the root's immediate children and shards them into input
   partitions (the prefix-sharding strategy of S3 listers —
   ListObjectsV2 with delimiter '/' then fan out per prefix,
   src/s3.rs:87-100 is the single-worker version of this). Only when
   the root has fewer children than the target shard count does it
   descend, one directory at a time, until there are enough entries.
-- `read(partition)` runs on EXECUTORS and does the recursive walk +
+- :func:`walk_shard` runs on EXECUTORS and does the recursive walk +
   stat for its shard — the expensive, embarrassingly-parallel part.
   Equivalent to the reference's intra-batch concurrent stat
   (src/fs.rs:85-89), but across machines. The walk's one `lstat` per
   entry yields every column, `created` included.
+
+``sources.fs.list_files`` (the listing behind ``scrape_fs``) runs the
+two functions through an RDD, with no Python planner process;
+``ListingReader`` is the ``pylisting`` adapter over the same two
+functions (its ``partitions()`` / ``read()``), so there is one listing
+implementation.
 
 The row schema is the reference's FileInfo (src/db.rs:10-18) minus
 mime (a JVM-side literal-map lookup, sources/mime.with_mime_type).
@@ -107,11 +114,84 @@ def file_row(dirpath: str, name: str, st: os.stat_result, created: str) -> tuple
     )
 
 
-def _created_option(options: dict) -> str:
-    mode = options.get("created", "stat")
+def check_created_mode(mode: str) -> str:
     if mode not in CREATED_MODES:
         raise ValueError(f"created must be one of {CREATED_MODES}, got {mode!r}")
     return mode
+
+
+def _scan_children(d: str) -> tuple[list[str], list[str]]:
+    """(non-directories, directories) directly under ``d``; a symlink
+    to a directory is a non-directory (never followed)."""
+    files, dirs = [], []
+    with os.scandir(d) as it:
+        for e in it:
+            (dirs if e.is_dir(follow_symlinks=False) else files).append(e.path)
+    return files, dirs
+
+
+def plan_shards(root: str, nparts: int) -> list[list[str]]:
+    """Driver-side: shard the root's immediate children round-robin
+    into at most ``nparts`` entry lists (never empty: a tree with no
+    entries is one empty shard).
+
+    Subtree sizes are unknown and walking a 100 TB tree on the driver
+    is the anti-pattern, so descend (breadth-first, one directory at a
+    time) only while there are fewer entries than shards — a root
+    holding one directory would otherwise walk in one task."""
+    if not os.path.isdir(root):
+        os.stat(root)  # a missing root fails the scrape
+        return [[root]]  # WalkDir of a file: the file
+    files, dirs = _scan_children(root)
+    pending, unreadable = deque(dirs), []
+    while pending and len(files) + len(unreadable) + len(pending) < nparts:
+        d = pending.popleft()
+        try:
+            sub_files, sub_dirs = _scan_children(d)
+        except OSError:
+            unreadable.append(d)  # the executor walk skips it
+            continue
+        files += sub_files
+        pending.extend(sub_dirs)
+    entries = sorted(files + unreadable + list(pending))
+    if not entries:
+        return [[]]
+    n = min(nparts, len(entries))
+    return [entries[i::n] for i in range(n)]
+
+
+def walk_shard(
+    entries: Sequence[str], created: str = "stat", pattern: str = "*"
+) -> Iterator[tuple]:
+    """Executor-side: recursive walk + stat of one shard, yielding
+    SCHEMA rows for the regular files whose name matches ``pattern``.
+
+    Per-entry anomalies are TOLERATED, not fatal (parity with the
+    reference walk's filter_map_ok, src/fs.rs:88): a file deleted
+    mid-walk or an unreadable directory is skipped, never a job
+    failure. lstat (never following links) makes symlinks non-dir
+    non-reg entries, so symlink cycles cannot loop the walk and
+    symlinked subtrees are not double-counted — matching WalkDir's
+    default no-follow + the reference's is_file() filter
+    (src/fs.rs:55)."""
+    stack = list(entries)
+    while stack:
+        p = stack.pop()
+        try:
+            st = os.lstat(p)
+        except OSError:
+            continue  # vanished or unreadable between list and stat
+        if stat_mod.S_ISDIR(st.st_mode):
+            try:
+                stack.extend(os.path.join(p, e) for e in os.listdir(p))
+            except OSError:
+                pass  # unreadable dir: skip its subtree
+            continue
+        if not stat_mod.S_ISREG(st.st_mode):
+            continue  # symlink / fifo / socket: not a file record
+        dirpath, name = os.path.split(p)
+        if fnmatch.fnmatch(name, pattern):
+            yield file_row(dirpath, name, st, created)
 
 
 class ListingDataSource(DataSource):
@@ -136,77 +216,21 @@ class _Shard(InputPartition):
         self.entries = entries
 
 
-def _scan_children(d: str) -> tuple[list[str], list[str]]:
-    """(non-directories, directories) directly under ``d``; a symlink
-    to a directory is a non-directory (never followed)."""
-    files, dirs = [], []
-    with os.scandir(d) as it:
-        for e in it:
-            (dirs if e.is_dir(follow_symlinks=False) else files).append(e.path)
-    return files, dirs
-
-
 class ListingReader(DataSourceReader):
+    """DataSource adapter over :func:`plan_shards` (driver) and
+    :func:`walk_shard` (executors)."""
+
     def __init__(self, options: dict):
         self.root = options["path"]
         self.pattern = options.get("pattern", "*")
         self.nparts = int(options.get("numpartitions", "8"))
-        self.created = _created_option(options)
+        self.created = check_created_mode(options.get("created", "stat"))
 
     def partitions(self) -> Sequence[InputPartition]:
-        # Driver-side: shard the root's immediate children round-robin.
-        # Subtree sizes are unknown and walking a 100 TB tree on the
-        # driver is the anti-pattern, so descend (breadth-first, one
-        # directory at a time) only while there are fewer entries than
-        # shards — a root holding one directory would otherwise walk
-        # in one task.
-        if not os.path.isdir(self.root):
-            os.stat(self.root)  # a missing root fails the scrape
-            return [_Shard([self.root])]  # WalkDir of a file: the file
-        files, dirs = _scan_children(self.root)
-        pending, unreadable = deque(dirs), []
-        while pending and len(files) + len(unreadable) + len(pending) < self.nparts:
-            d = pending.popleft()
-            try:
-                sub_files, sub_dirs = _scan_children(d)
-            except OSError:
-                unreadable.append(d)  # the executor walk skips it
-                continue
-            files += sub_files
-            pending.extend(sub_dirs)
-        entries = sorted(files + unreadable + list(pending))
-        if not entries:
-            return [_Shard([])]
-        n = min(self.nparts, len(entries))
-        return [_Shard(entries[i::n]) for i in range(n)]
+        return [_Shard(s) for s in plan_shards(self.root, self.nparts)]
 
     def read(self, partition: _Shard) -> Iterator[tuple]:
-        # Executor-side: recursive walk + stat of this shard. Per-entry
-        # anomalies are TOLERATED, not fatal (parity with the reference
-        # walk's filter_map_ok, src/fs.rs:88): a file deleted mid-walk
-        # or an unreadable directory is skipped, never a job failure.
-        # lstat (never following links) makes symlinks non-dir non-reg
-        # entries, so symlink cycles cannot loop the walk and symlinked
-        # subtrees are not double-counted — matching WalkDir's default
-        # no-follow + the reference's is_file() filter (src/fs.rs:55).
-        stack = list(partition.entries)
-        while stack:
-            p = stack.pop()
-            try:
-                st = os.lstat(p)
-            except OSError:
-                continue  # vanished or unreadable between list and stat
-            if stat_mod.S_ISDIR(st.st_mode):
-                try:
-                    stack.extend(os.path.join(p, e) for e in os.listdir(p))
-                except OSError:
-                    pass  # unreadable dir: skip its subtree
-                continue
-            if not stat_mod.S_ISREG(st.st_mode):
-                continue  # symlink / fifo / socket: not a file record
-            dirpath, name = os.path.split(p)
-            if fnmatch.fnmatch(name, self.pattern):
-                yield file_row(dirpath, name, st, self.created)
+        return walk_shard(partition.entries, self.created, self.pattern)
 
 
 def register(spark) -> None:  # noqa: ANN001
@@ -232,7 +256,7 @@ class ListingStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, options: dict):
         self.root = options["path"]
         self.pattern = options.get("pattern", "*")
-        self.created = _created_option(options)
+        self.created = check_created_mode(options.get("created", "stat"))
 
     def initialOffset(self) -> dict:
         return {"mtime_ns": -1}

@@ -132,3 +132,34 @@ def test_pq_family_matches_oracle_on_subseed_corpora(spark, tmp_path):
             assert value_hash(sdf.columns, s_rows) == value_hash(
                 o_cols, o_rows
             ), (q, n)
+
+
+def test_redact_kernel_null_and_int64_min_doc_ids():
+    """The text_redact kernel's id%10 digit is truncated (sign-keeping)
+    modulo: a NULL doc_id yields a NULL redaction instead of a crash,
+    and INT64_MIN neither overflows nor loses its sign."""
+    import re
+
+    from file_scraper_spark.operators.text import _redact_batches
+
+    ids = [None, -(2**63), -17, 0, 42, 2**63 - 1]
+    texts = ["call 555-123-4567", "mail a.b@c.org", "héllo", None, "x", ""]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(ids, pa.int64()), pa.array(texts, pa.string())],
+        ["doc_id", "text"],
+    )
+    (out,) = list(_redact_batches([batch]))
+
+    def expect(d, t):
+        if d is None or t is None:
+            return None
+        digit = -(-d % 10) if d < 0 else d % 10
+        s = f"contact user{d}@example.com or +1-555-010{digit} re: {t}"
+        s = re.sub(r"[a-z0-9._]+@[a-z0-9.-]+", "<EMAIL>", s)
+        return re.sub(r"\+?[0-9][0-9()\-]{6,}", "<PHONE>", s)
+
+    assert out.column(0).to_pylist() == ids
+    assert out.column(1).to_pylist() == [expect(d, t) for d, t in zip(ids, texts)]
+    assert out.column(2).to_pylist() == [
+        None if t is None else len(t) for t in texts
+    ]

@@ -245,3 +245,45 @@ def test_sync_snapshot_fetches_in_one_job(db, spark):
         sc.setLocalProperty("spark.job.description", None)
     assert len(sc.statusTracker().getJobIdsForGroup("sync_snapshot_jobs")) == 1
     assert len(fetch(connect)) == 20
+
+
+def test_add_rows_splits_staging_inserts(db):
+    """A batch larger than one staging INSERT holds (the Postgres
+    bind-parameter limit) is staged by several multi-row statements
+    and merged exactly: inserts, updates and soft deletes."""
+    from file_scraper_spark.sinks.merge_sink import STAGE_ROWS_PER_STATEMENT
+
+    sink, connect = db
+    n = STAGE_ROWS_PER_STATEMENT + 10
+    sink.sync_rows([row(filename=f"f{i}") for i in range(n)], SRC, T1)
+
+    class CountingConnection:
+        def __init__(self, con):
+            self.con, self.staged = con, 0
+
+        def execute(self, sql, params=None):
+            if sql.startswith("INSERT INTO staging_found VALUES"):
+                self.staged += 1
+            return self.con.execute(sql, params)
+
+        def __getattr__(self, name):
+            return getattr(self.con, name)
+
+    # second scrape: f0..f4 dropped, every 1000th file grown, 20 new
+    batch = [
+        row(filename=f"f{i}", size=11 if i % 1000 == 0 else 10)
+        for i in range(5, n + 20)
+    ]
+    counting = CountingConnection(connect())
+    session = MergeSink(lambda: counting).open_scrape(SRC, T2)
+    session.add_rows(batch)
+    session.finalize()
+    counting.close()
+    assert counting.staged == 2
+
+    rows = {r[2]: r for r in fetch(connect)}
+    assert len(rows) == n + 20
+    for i in range(n + 20):
+        r = rows[f"f{i}"]
+        assert r[7] == (T2 if i < 5 else None), r
+        assert r[6] == (11 if i % 1000 == 0 and i >= 5 else 10), r

@@ -67,6 +67,14 @@ def test_fs_source_prunes_content(spark, sf_dir):
     assert "content" not in plan  # file bodies never read (reference parity)
 
 
+def test_fs_source_has_no_python_datasource_scan(spark, sf_dir):
+    # the walk runs as an RDD: no Python DataSource planner process at
+    # build or execution time, one input partition per shard
+    plan = plan_of("scrape_fs", spark, sf_dir)
+    assert "BatchScan" not in plan
+    assert "Scan ExistingRDD" in plan
+
+
 def test_dim_join_broadcasts(spark, sf_dir):
     assert "BroadcastHashJoin" in plan_of("mime_lookup", spark, sf_dir)
 

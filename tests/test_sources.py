@@ -155,14 +155,11 @@ def test_scrape_fs_special_char_filenames(spark, tmp_path):
         assert rows[n].path == str(tmp_path)
 
 
-def test_scrape_fs_edge_case_tree(spark, tmp_path):
-    """Every regular file WalkDir records reaches the scrape — empty,
-    dot, dot-dir, `_`-prefixed, space and literal `%20` names — and
-    symlinks (to a file or dangling) do not, compared against an
-    independent os.walk + lstat. The tree hangs below one directory,
-    so the listing must shard below the root to use several tasks."""
+def _edge_case_tree(tmp_path) -> None:
+    """Regular files with every name WalkDir keeps and a JVM listing
+    drops, plus a file symlink and a dangling one, all below one
+    directory."""
     import os
-    import stat
 
     top = tmp_path / "only"
     (top / ".hidden").mkdir(parents=True)
@@ -177,6 +174,17 @@ def test_scrape_fs_edge_case_tree(spark, tmp_path):
     os.symlink(top / "sub" / "has space.txt", top / "link.txt")
     os.symlink(tmp_path / "nowhere", top / "dangling.txt")
 
+
+def test_scrape_fs_edge_case_tree(spark, tmp_path):
+    """Every regular file WalkDir records reaches the scrape — empty,
+    dot, dot-dir, `_`-prefixed, space and literal `%20` names — and
+    symlinks (to a file or dangling) do not, compared against an
+    independent os.walk + lstat. The tree hangs below one directory,
+    so the listing must shard below the root to use several tasks."""
+    import os
+    import stat
+
+    _edge_case_tree(tmp_path)
     expect = {}
     for dirpath, _, files in os.walk(tmp_path):
         for f in files:
@@ -195,6 +203,29 @@ def test_scrape_fs_edge_case_tree(spark, tmp_path):
         for r in df.collect()
     }
     assert got == expect
+
+
+def test_list_files_matches_pylisting_format(spark, tmp_path):
+    """fs.list_files (the RDD walk) and format("pylisting") share one
+    implementation: identical schema and rows on the edge-case tree,
+    one input partition per shard."""
+    from file_scraper_spark.sources import pyds
+
+    _edge_case_tree(tmp_path)
+    listed = list_files(spark, str(tmp_path))
+    pyds.register(spark)
+    via_format = (
+        spark.read.format("pylisting")
+        .option("path", str(tmp_path))
+        .option("numPartitions", spark.sparkContext.defaultParallelism)
+        .load()
+    )
+    assert listed.schema == via_format.schema
+    rows = sorted(listed.collect())
+    assert len(rows) == 7
+    assert rows == sorted(via_format.collect())
+    shards = pyds.plan_shards(str(tmp_path), spark.sparkContext.defaultParallelism)
+    assert listed.rdd.getNumPartitions() == len(shards) > 1
 
 
 def test_listing_shards_below_single_child_root(tmp_path):
