@@ -9,7 +9,9 @@ text analysis, multimodal columns) designed for 100 TB scale.
 
 Layout:
     session.py    SparkSession factory tuned for the target cluster
-    tables.py     fixture table loaders (explicit schemas, no inference)
+    worker_daemon.py  Python worker daemon (stamp-checked zip invalidation)
+    tables.py     fixture table loaders (lazy parquet scans; the schema is
+                  read from the parquet footers on each load)
     registry.py   query registry: name -> (callable, oracle SQL)
     operators/    relational + scrape + dedup + similarity + text ops
     sources/      fs / s3 listing sources with scheme dispatch

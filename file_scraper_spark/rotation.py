@@ -251,44 +251,6 @@ ROUND8_REMAINDER: tuple[str, ...] = (
 )
 
 
-# Round-14 re-check head (VERDICT r13 "Next round" #1): the r13
-# optimization round rewrote 16 queries, but the self-advancing
-# rotation fronts never-sampled queries, so the driver's r13 window
-# independently re-hashed only ONE of them (graph_link_predict).
-# These names are re-checked FIRST this round — after any unverified
-# or latest-red names (which always outrank re-checks, keeping the
-# conservative policy), but before the stalest-green pads — so
-# CORRECTNESS_r14 carries an independent driver row for every kernel
-# rewrite.  Queries rewritten in round 14 itself are appended here as
-# they land, for the same reason.
-RECHECK_FIRST: tuple[str, ...] = (
-    # --- the 16 round-13 rewrites (only graph_link_predict has a
-    # post-rewrite driver row; it is still listed so the r14 artifact
-    # carries the full set in one place) ---
-    "text_lm_score",
-    "tpch_q21_shape",
-    "xml_roundtrip",
-    "doc_fingerprint",
-    "dedup_minhash",
-    "similarity_maxsim",
-    "similarity_topk",
-    "similarity_ann_lsh",
-    "similarity_ann_lsh_batch",
-    "dedup_winnowing",
-    "text_normalize",
-    "pipeline_end2end",
-    "dsir_weights",
-    "graph_link_predict",
-    "text_langid",
-    "text_repetition",
-    # --- round-14 rewrites (appended as they land) ---
-    "text_redact",
-    "corpus_curriculum",
-    "text_ccnet_buckets",
-    "quality_ensemble",
-)
-
-
 def scan_artifacts(root: str | None = None) -> dict[str, tuple[bool, int]]:
     """Read the driver's CORRECTNESS_r*.json artifacts next to the
     repo root and return, per query name, ``(latest_green,
@@ -374,8 +336,6 @@ def reorder(registry: dict, root: str | None = None) -> dict:
     3. any other unverified names (queries added after this schedule
        was written, or whose latest driver row is red) in import
        order;
-    3b. the ``RECHECK_FIRST`` names (this round's rewrites needing a
-       fresh independent driver row — VERDICT r13 #1), in order;
     4. the verified names as RE-CHECK pads, stalest green row first —
        so once every query has been sampled, the window continuously
        cycles back over previously-green queries (~every 3 rounds at
@@ -406,11 +366,6 @@ def reorder(registry: dict, root: str | None = None) -> dict:
     for name, spec in registry.items():
         if name not in out and name not in seen:
             out[name] = spec
-    # explicit re-checks (this round's rewrites) ahead of the pads:
-    # verified but must get a fresh driver row THIS round
-    for name in RECHECK_FIRST:
-        if name in registry and name not in out:
-            out[name] = registry[name]
     # re-check pads: verified queries, least-recently-verified first
     # (stable on import order within a round via enumerate tiebreak)
     verified = [

@@ -9,6 +9,12 @@ so the same logical plans scale to a multi-executor cluster:
 - UTC session timezone so timestamp semantics match the reference's
   ``timestamptz`` model (SURVEY §1.4) and the DuckDB oracle.
 - Arrow enabled for the Pandas-UDF slow path.
+- Python workers fork from ``worker_daemon``, pyspark's daemon with a
+  stamp-checked ``zipimporter.invalidate_caches``: a task no longer
+  re-reads the pyspark and py4j zips (~0.15 s each task on Python 3.11).
+  The package's parent directory is appended to the executors'
+  ``PYTHONPATH``, so workers import the package (the daemon module and
+  package UDFs) whatever the driver's working directory.
 """
 
 from __future__ import annotations
@@ -16,6 +22,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -25,6 +33,9 @@ def get_spark(
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    conf = dict(extra_conf or {})
+    caller_path = conf.pop("spark.executorEnv.PYTHONPATH", "")
+    pythonpath = os.pathsep.join(p for p in (caller_path, _PACKAGE_PARENT) if p)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -42,8 +53,10 @@ def get_spark(
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "32")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.python.daemon.module", "file_scraper_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", pythonpath)
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

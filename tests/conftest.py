@@ -11,21 +11,25 @@ from file_scraper_spark.session import get_spark
 
 SF_DIR_SMOKE = "/root/testdata/sf0.001"
 SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+#: fixtures through which a test reaches the parquet fixture directory
+FIXTURE_USERS = frozenset({"spark", "sf_dir", "smoke_dir"})
 
 
 def pytest_collection_modifyitems(config, items):
-    """Nearly every suite reads the driver-generated parquet fixture
+    """Most suites read the driver-generated parquet fixture
     (TESTDATA.md: deterministic, read-only, NOT regenerable from this
-    repo). On hosts without it — e.g. a bare CI runner — skip rather
-    than fail at the first load(): point SPARK_GRAFT_TEST_SF_DIR at a
-    fixture to opt back in."""
+    repo). On hosts without it — e.g. a bare CI runner — skip the tests
+    that request one of ``FIXTURE_USERS`` rather than fail at the first
+    load(); fixture-free tests still run. Point SPARK_GRAFT_TEST_SF_DIR
+    at a fixture to opt back in."""
     missing = [d for d in (SF_DIR_SMOKE, SF_DIR_ORACLE) if not os.path.isdir(d)]
     if missing:
         skip = pytest.mark.skip(
             reason=f"test fixture parquet absent: {', '.join(sorted(set(missing)))}"
         )
         for item in items:
-            item.add_marker(skip)
+            if FIXTURE_USERS & set(getattr(item, "fixturenames", ())):
+                item.add_marker(skip)
 
 
 @pytest.fixture(scope="session")
@@ -45,3 +49,8 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR_ORACLE
+
+
+@pytest.fixture(scope="session")
+def smoke_dir() -> str:
+    return SF_DIR_SMOKE

@@ -791,7 +791,7 @@ def test_fuzz_string_collation(sql_env, spec):
 # ---- determinism preconditions --------------------------------------
 
 
-def test_fuzz_keys_are_unique_in_fixture():
+def test_fuzz_keys_are_unique_in_fixture(smoke_dir):
     """Every COLS[t]['key'] must be a TOTAL key of its smoke-fixture
     table: three families (sort_limit, window row_number/lag,
     collation) use it as the tiebreak that makes LIMIT row sets and
@@ -802,7 +802,7 @@ def test_fuzz_keys_are_unique_in_fixture():
     import duckdb
 
     for t, spec in COLS.items():
-        p = f"{SF_DIR_SMOKE}/{t}.parquet"
+        p = f"{smoke_dir}/{t}.parquet"
         n, nd = duckdb.sql(
             f"SELECT COUNT(*), COUNT(DISTINCT {spec['key']}) "
             f"FROM read_parquet('{p}')"

@@ -114,7 +114,7 @@ def test_jaccard_pairs_memoized_per_session(spark, sf_dir):
     assert s is not a
 
 
-def test_data_key_invalidates_on_rewrite(tmp_path):
+def test_data_key_invalidates_on_rewrite(tmp_path, smoke_dir):
     """Memo keys fingerprint the parquet files (size+mtime), so data
     rewritten at the same path yields a different key — the round-7
     advisory's stale-verdict scenario cannot occur."""
@@ -123,7 +123,7 @@ def test_data_key_invalidates_on_rewrite(tmp_path):
 
     from file_scraper_spark.tables import data_key, table_path
 
-    src = table_path("/root/testdata/sf0.001", "documents")
+    src = table_path(smoke_dir, "documents")
     dst_dir = str(tmp_path)
     shutil.copy(src, table_path(dst_dir, "documents"))
     k1 = data_key(dst_dir, "documents")

@@ -34,8 +34,7 @@ def _sampled_rounds_2_to_6() -> set[str]:
 
 def test_rotation_names_exist_and_unique():
     names = set(registry.REGISTRY)
-    for lst in (rotation.DRIVER_WINDOW_PRIORITY, rotation.ROUND8_REMAINDER,
-                rotation.RECHECK_FIRST):
+    for lst in (rotation.DRIVER_WINDOW_PRIORITY, rotation.ROUND8_REMAINDER):
         assert len(lst) == len(set(lst)), "duplicate in rotation list"
         missing = [n for n in lst if n not in names]
         assert not missing, f"rotation names not in registry: {missing}"
@@ -133,47 +132,20 @@ def test_recheck_pads_are_stalest_first(tmp_path):
     assert out[2:] == ["q_a", "q_d", "q_b", "q_mid"]
 
 
-def test_recheck_first_lands_behind_unverified_ahead_of_pads(tmp_path):
-    """VERDICT r13 #1: the 16 r13-rewritten queries must get a fresh
-    independent driver row this round. RECHECK_FIRST names are fronted
-    in reorder() output — but only AFTER unverified/latest-red names
-    (the conservative policy keeps its absolute priority) and BEFORE
-    the stalest-green re-check pads."""
-    green = {"rows_match": True, "schema_match": True,
-             "hash_match": True, "err": None}
-    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({
-        "q_pad_old": green, "q_rw": green}))
-    (tmp_path / "CORRECTNESS_r03.json").write_text(json.dumps({
-        "q_pad_new": green,
-        "q_red": {"rows_match": False, "err": None}}))
-    fake = {n: object() for n in
-            ("q_pad_new", "q_rw", "q_red", "q_pad_old", "q_never")}
-    orig = rotation.RECHECK_FIRST
-    rotation.RECHECK_FIRST = ("q_rw",)
-    try:
-        out = list(rotation.reorder(fake, root=str(tmp_path)))
-    finally:
-        rotation.RECHECK_FIRST = orig
-    # unverified first (import order), then the rewrite re-check,
-    # then pads stalest-green first
-    assert out == ["q_red", "q_never", "q_rw", "q_pad_old", "q_pad_new"]
-
-
-def test_live_window_rechecks_the_r13_rewrites():
+def test_live_window_opens_with_unverified_then_stalest_green():
     """On the real artifacts, the driver's 50-row window must open with
     the unverified names (none once all 242 queries are green) followed
-    directly by RECHECK_FIRST, in order, so the correctness artifact
-    independently re-hashes every kernel rewrite."""
+    by the verified names, least recently verified first, so an old
+    query is re-hashed within a bounded number of rounds."""
+    art = rotation.scan_artifacts()
     seen = rotation.sampled_in_prior_rounds()
     if not seen:
         pytest.skip("no CORRECTNESS_r*.json artifacts in this checkout")
     order = list(registry.REGISTRY)
-    unverified = [n for n in order if n not in seen]
-    rechecks = [n for n in rotation.RECHECK_FIRST if n in seen]
-    k = len(unverified)
-    assert set(order[:k]) == set(unverified)
-    assert order[k : k + len(rechecks)] == rechecks
-    assert k + len(rechecks) <= 50, "rewrites fall outside the 50-row window"
+    k = sum(1 for n in order if n not in seen)
+    assert not set(order[:k]) & seen
+    pad_rounds = [art[n][1] for n in order[k:]]
+    assert pad_rounds == sorted(pad_rounds)
 
 
 def test_scan_artifacts_sorts_rounds_numerically(tmp_path):
