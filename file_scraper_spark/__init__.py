@@ -11,7 +11,7 @@ Layout:
     session.py    SparkSession factory tuned for the target cluster
     worker_daemon.py  Python worker daemon (stamp-checked zip invalidation)
     tables.py     fixture table loaders (lazy parquet scans; the schema is
-                  read from the parquet footers on each load)
+                  read from the parquet footer on the driver on each load)
     registry.py   query registry: name -> (callable, oracle SQL)
     operators/    relational + scrape + dedup + similarity + text ops
     sources/      fs / s3 listing sources with scheme dispatch

@@ -211,7 +211,7 @@ def file_metadata_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the metadata struct is populated at scan time from
     the split, zero I/O; grouping by file name costs one map-side
     combined shuffle with one row per file."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load(spark, sf_dir, "lineitem")
     return li.groupBy(
         F.col("_metadata.file_name").alias("file_name")
     ).agg(

@@ -46,8 +46,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # events.parquet stores TIMESTAMP(NANOS); read as epoch-nanos long
-        # and convert in tables.load (Spark's TimestampType is micros).
+        # an events.parquet stored as TIMESTAMP(NANOS) reads as epoch-nanos
+        # long and is converted in tables.load (Spark's TimestampType is
+        # micros); the fixtures store MICROS and need no conversion.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # metadata listing parallelism for the fs source (SURVEY §2.A A13)
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "32")

@@ -19,10 +19,16 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from file_scraper_spark.functions.exact import dsum, oracle_dsum
 from file_scraper_spark.registry import query
-from file_scraper_spark.tables import ORACLE_SF_DIR, load
+from file_scraper_spark.tables import (
+    ORACLE_SF_DIR,
+    footer_schema,
+    load,
+    table_path,
+)
 
 WATERMARK = "1 hour"
 
@@ -59,20 +65,19 @@ def _scoped_checkpoint_dir() -> str:
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a file stream.
 
-    The physical ts encoding varies by producer (the driver fixture is
-    TIMESTAMP(NANOS); a DuckDB- or Spark-written events table is
-    MICROS), so the stream schema adapts: a cheap batch peek at the
-    footer decides whether ts arrives as epoch-nanos long (convert) or
-    as a native timestamp (pass through). Hardcoding the nanos path
-    silently time-shifts micros data 1000x into 1970 — every window
-    looks 'sealed' and append mode emits nothing.
+    The physical ts encoding varies by producer (the fixtures store
+    TIMESTAMP(MICROS); a nanos-writing producer stores TIMESTAMP(NANOS)),
+    so the stream schema adapts: the driver-side footer read
+    (``tables.footer_schema``, no Spark job) decides whether ts arrives
+    as epoch-nanos long (convert) or as a native timestamp (pass
+    through). Hardcoding the nanos path silently time-shifts micros
+    data 1000x into 1970 — every window looks 'sealed' and append mode
+    emits nothing.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    import os  # noqa: PLC0415
-
-    peek = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    ts_is_nanos_long = dict(peek.dtypes).get("ts") == "bigint"
+    footer = footer_schema(table_path(sf_dir, "events"))
+    ts_is_nanos_long = footer["ts"].dataType == LongType()
     ts_type = "long" if ts_is_nanos_long else "timestamp"
     schema = (
         f"event_id long, ts {ts_type}, user_id long, event_type string, "

@@ -2,17 +2,35 @@
 
 The reference uses a fixed, compile-time-checked schema everywhere
 (SURVEY §1.4 — sqlx offline macros); we mirror that discipline: no
-``inferSchema`` on any hot path. Parquet carries its schema, so readers
-here just centralize paths and keep column pruning / predicate pushdown
-intact by returning the raw scan (callers select/filter lazily).
+schema inference on any hot path. ``load`` hands Spark a schema built
+on the driver from the table's parquet footer (``footer_schema``: a
+sub-millisecond pyarrow read, no Spark job), then returns the raw scan,
+so column pruning / predicate pushdown stay intact (callers
+select/filter lazily). This module is the one place that knows how a
+footer maps to a Spark schema.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+)
 
 #: The fixture directory the driver's correctness gate runs at. A few
 #: oracles (scrape_fs, python_datasource, pylisting_stream) must name
@@ -40,6 +58,20 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def _data_files(path: str) -> list[str]:
+    """A parquet table's data files: the file itself, or, for a
+    directory table, every file below it whose name does not start with
+    ``.`` or ``_`` (Spark's ``_SUCCESS``, ``.crc`` side files), sorted."""
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(
+        os.path.join(r, f)
+        for r, _, fs in os.walk(path)
+        for f in fs
+        if not f.startswith((".", "_"))
+    )
+
+
 def data_key(sf_dir: str, *names: str) -> tuple:
     """Cheap content fingerprint of fixture tables, for keying
     process-lifetime memo caches (dedup._DUP_PROBE_CACHE,
@@ -53,16 +85,7 @@ def data_key(sf_dir: str, *names: str) -> tuple:
     os.stat per part-file — no Spark job, no file reads."""
     parts: list[tuple[str, int, int]] = []
     for name in names:
-        p = table_path(sf_dir, name)
-        files = [p]
-        if os.path.isdir(p):
-            files = sorted(
-                os.path.join(r, f)
-                for r, _, fs in os.walk(p)
-                for f in fs
-                if not f.startswith((".", "_"))
-            )
-        for f in files:
+        for f in _data_files(table_path(sf_dir, name)):
             try:
                 st = os.stat(f)
                 parts.append((os.path.relpath(f, sf_dir), st.st_size,
@@ -70,6 +93,74 @@ def data_key(sf_dir: str, *names: str) -> tuple:
             except OSError:
                 parts.append((os.path.relpath(f, sf_dir), -1, -1))
     return (sf_dir, *parts)
+
+
+#: footer key under which Spark stores the writing DataFrame's schema
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+#: Arrow type of a non-Spark footer column -> the Spark type inference
+#: gives it. TIMESTAMP(NANOS) reads as epoch-nanos bigint under
+#: ``spark.sql.legacy.parquet.nanosAsLong`` (see ``load``).
+_ARROW_TO_SPARK: dict[pa.DataType, DataType] = {
+    pa.int32(): IntegerType(),
+    pa.int64(): LongType(),
+    pa.float32(): FloatType(),
+    pa.float64(): DoubleType(),
+    pa.string(): StringType(),
+    pa.timestamp("ms"): TimestampNTZType(),
+    pa.timestamp("us"): TimestampNTZType(),
+    pa.timestamp("ns"): LongType(),
+}
+
+
+def _all_nullable(node):
+    """Mark every field, array element and map value of a schema's JSON
+    form nullable — what Spark's own inference does to a footer."""
+    if isinstance(node, dict):
+        for key in ("nullable", "containsNull", "valueContainsNull"):
+            if key in node:
+                node[key] = True
+        for value in node.values():
+            _all_nullable(value)
+    elif isinstance(node, list):
+        for value in node:
+            _all_nullable(value)
+    return node
+
+
+def _spark_type(t: pa.DataType, path: str, column: str) -> DataType:
+    if pa.types.is_list(t):
+        return ArrayType(_spark_type(t.value_type, path, column))
+    try:
+        return _ARROW_TO_SPARK[t]
+    except KeyError:
+        raise TypeError(
+            f"{path}: column {column!r} has unmapped parquet type {t}"
+        ) from None
+
+
+def footer_schema(path: str) -> StructType:
+    """The Spark schema of a local parquet table, read on the driver from
+    one footer — the table's first data file (``_data_files`` order) —
+    without a Spark job.
+
+    A Spark-written footer carries the writer's schema as JSON under
+    ``_SPARK_ROW_METADATA``; it is used as is, all fields made nullable,
+    exactly as Spark's inference uses it (this also keeps INT96 columns
+    ``timestamp``). Any other footer is mapped column by column through
+    ``_ARROW_TO_SPARK`` (lists to arrays); an unmapped type raises
+    ``TypeError`` naming the path and the column.
+    """
+    files = _data_files(path)
+    if not files:
+        raise FileNotFoundError(f"{path}: no parquet data file")
+    arrow = pq.read_schema(files[0])
+    spark_json = (arrow.metadata or {}).get(_SPARK_ROW_METADATA)
+    if spark_json is not None:
+        return StructType.fromJson(_all_nullable(json.loads(spark_json)))
+    return StructType(
+        [StructField(f.name, _spark_type(f.type, path, f.name)) for f in arrow]
+    )
 
 
 # Bounded-leak scoped cache (shared by the dedup/similarity operators):
@@ -140,12 +231,16 @@ def reset_session_state(spark: SparkSession) -> None:
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy parquet scan for one fixture table (pushdown-friendly).
+    """Lazy parquet scan for one fixture table (pushdown-friendly),
+    read with the schema ``footer_schema`` builds on the driver — no
+    schema-inference job.
 
-    ``events.ts`` is physically TIMESTAMP(NANOS); with
-    ``spark.sql.legacy.parquet.nanosAsLong`` it scans as epoch-nanos
-    long and is floor-divided to micros here — the same truncation
-    DuckDB applies when reading nanos into its micros TIMESTAMP.
+    The fixtures store ``events.ts`` as TIMESTAMP(MICROS), which scans
+    as ``timestamp_ntz``. A producer that writes TIMESTAMP(NANOS) is
+    accepted too: with ``spark.sql.legacy.parquet.nanosAsLong`` it scans
+    as epoch-nanos long and is floor-divided to micros here — the same
+    truncation DuckDB applies when reading nanos into its micros
+    TIMESTAMP.
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown fixture table {name!r}")
@@ -157,7 +252,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Runtime-set so the conversion also works under a caller-provided
         # SparkSession (e.g. the driver's), not just our session factory.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    df = spark.read.schema(footer_schema(path)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df

@@ -75,3 +75,40 @@ def test_cli_created_stat_toggle(tmp_path):
         "SELECT created IS NULL FROM external_file"
     ).fetchone()[0]
     con.close()
+
+
+def test_cli_scrapes_edge_case_tree(tmp_path):
+    """The CLI records every regular file of the edge-case tree — empty,
+    dot, dot-dir, `_`-prefixed, space, literal `%20` and `._COPYING_`
+    names — with exact size and µs `modified`, and no symlink."""
+    import os
+    import stat
+
+    import duckdb
+
+    from tests.test_sources import _edge_case_tree, _us
+
+    tree = tmp_path / "tree"
+    _edge_case_tree(tree)
+    expect = {}
+    for dirpath, _, files in os.walk(tree):
+        for f in files:
+            st = os.lstat(os.path.join(dirpath, f))
+            if stat.S_ISREG(st.st_mode):
+                expect[(dirpath, f)] = (st.st_size, _us(st.st_mtime_ns))
+    assert len(expect) == 7
+
+    db = str(tmp_path / "c.duckdb")
+    r = run_cli(str(tree), "--database", db)
+    assert r.returncode == 0, r.stderr
+    con = duckdb.connect(db)
+    got = {
+        (path, filename): (size, modified)
+        for path, filename, size, modified in con.execute(
+            "SELECT path, filename, size, modified FROM external_file "
+            "WHERE deleted IS NULL"
+        ).fetchall()
+    }
+    con.close()
+    assert got == expect
+    assert not {"link.txt", "dangling.txt"} & {f for _, f in got}

@@ -25,8 +25,9 @@ cross-engine false positive, not a bug):
   any type and SUM over exact ints only
 - ORDER BY always carries NULLS FIRST and, wherever row identity
   matters (LIMIT, lag/lead/row_number), a unique tiebreak key
-- events.parquet is excluded (TIMESTAMP(NANOS) needs an engine-
-  specific read path, covered by the gate queries instead)
+- events.parquet is excluded (its ts may be TIMESTAMP(NANOS), which
+  needs tables.load's engine-specific read path; covered by the gate
+  queries instead)
 """
 
 from __future__ import annotations
