@@ -7,8 +7,9 @@ dispatch per path (A14), one sink transaction per scrape (A15), and
 fail-fast: the first error aborts the run, matching the reference's
 join_all error propagation (src/main.rs:61-65).
 
-On a cluster each ``source.scrape`` is an independent Spark job; the
-listing, projection and mime join run on executors. Sources are
+On a cluster each scrape is one independent Spark job, run when the
+sink fetches the snapshot; for fs the listing, projection and mime
+lookup run in the executors' walk tasks, with no Spark SQL. Sources are
 processed sequentially on the driver — parallel sources would just
 contend for the same executors; within a source Spark already uses
 the whole cluster.

@@ -25,7 +25,7 @@ snapshot DataFrame, faithfully reproducing the reference semantics
 
 Scale design: the per-batch DB round-trip (the reference ships <=200
 rows as array params) becomes either (a) driver-batched staging over
-one ``df.collect()`` — a single Spark job that fetches every partition
+one ``collect()`` — a single Spark job that fetches every partition
 in parallel, holding the whole snapshot on the driver; each batch is
 staged by one multi-row ``INSERT ... VALUES (...), (...)`` (split to
 stay under Postgres's bind-parameter limit), not row-at-a-time; the
@@ -36,6 +36,14 @@ for the driver; staging is truncated per scrape so a partial stage is
 retry-safe and the visible table still moves atomically between
 snapshots. The DB-side SQL is dialect-neutral (tested against DuckDB;
 targets Postgres).
+
+The snapshot reaches (a) as an RDD of FILE_COLUMNS tuples (the fs
+source: rows built in Python on the executors, collected with no Spark
+SQL on the path) or as a DataFrame (the S3 source, whose rows are made
+in the JVM). Timestamps are stored as naive UTC, like ``deleted``: a
+DataFrame's ``created``/``modified`` are cast to ``timestamp_ntz``
+before they leave Spark (:func:`file_columns`), because a collected
+``timestamp`` reads in the driver process's local time zone.
 """
 
 from __future__ import annotations
@@ -43,7 +51,9 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable
 from typing import Any
 
+from pyspark import RDD
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 FILE_COLUMNS = (
     "external_source",
@@ -154,6 +164,17 @@ WHERE external_source = ?
       SELECT 1 FROM seen_external_file seen
       WHERE external_file.file_id = seen.file_id)
 """
+
+
+def file_columns(found: DataFrame) -> DataFrame:
+    """``found`` as FILE_COLUMNS, ``created``/``modified`` cast to
+    ``timestamp_ntz``: the cast reads a ``timestamp`` in the session
+    time zone (UTC), so the values leave Spark as naive UTC whatever
+    the driver process's time zone."""
+    return found.select(*(
+        F.col(c).cast("timestamp_ntz") if c in ("created", "modified") else c
+        for c in FILE_COLUMNS
+    ))
 
 
 def clamp_size(size: int | None) -> int | None:
@@ -286,9 +307,11 @@ class MergeSink:
             session.con.close()
 
     def sync_snapshot(
-        self, found: DataFrame, external_source: str, scrape_time
+        self, found: DataFrame | RDD, external_source: str, scrape_time
     ) -> None:
-        """Merge a snapshot DataFrame (driver-batched path).
+        """Merge a snapshot (driver-batched path): an RDD of
+        FILE_COLUMNS tuples with naive-UTC timestamps, or a DataFrame
+        with those columns.
 
         One ``collect`` fetches the snapshot in a single Spark job, all
         partitions in parallel (a ``toLocalIterator`` pull would run one
@@ -297,7 +320,7 @@ class MergeSink:
         snapshot is held on the driver: for snapshots too large for it
         use :meth:`sync_snapshot_parallel`.
         """
-        rows = found.select(*FILE_COLUMNS).collect()
+        rows = (found if isinstance(found, RDD) else file_columns(found)).collect()
         self.sync_rows(rows, external_source, scrape_time)
 
     def sync_snapshot_parallel(

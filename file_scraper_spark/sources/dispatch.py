@@ -1,5 +1,10 @@
 """Source dispatch (reference A14, src/worker.rs + src/main.rs:72-81):
 try the S3 interpretation of the path first, fall back to filesystem.
+
+A source's ``scrape`` returns what ``MergeSink.sync_snapshot`` fetches:
+an RDD of FileInfo tuples for fs (built in Python on the executors, no
+Spark SQL — sources/fs.py), a DataFrame for S3 (its listing rows are
+made in the JVM).
 """
 
 from __future__ import annotations
@@ -7,6 +12,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable
 
+from pyspark import RDD
 from pyspark.sql import DataFrame, SparkSession
 
 from file_scraper_spark.sources.url import (
@@ -19,7 +25,7 @@ from file_scraper_spark.sources.url import (
 class Source:
     kind: str  # 's3' | 'fs'
     identifier: str
-    scrape: Callable[[SparkSession], DataFrame]
+    scrape: Callable[[SparkSession], DataFrame | RDD]
 
 
 def source_for_path(
@@ -42,13 +48,13 @@ def source_for_path(
             identifier=ident,
             scrape=lambda spark: scrape_s3(spark, loc, ident),
         )
-    from file_scraper_spark.sources.fs import scrape_fs  # noqa: PLC0415
+    from file_scraper_spark.sources.fs import scrape_fs_rdd  # noqa: PLC0415
 
     ident = identifier or default_fs_identifier(path)
     return Source(
         kind="fs",
         identifier=ident,
-        scrape=lambda spark: scrape_fs(
+        scrape=lambda spark: scrape_fs_rdd(
             spark, path, ident, created_from_stat=created_from_stat
         ),
     )

@@ -1,21 +1,29 @@
-"""Filesystem listing source (reference A1/A3/A4/A13, src/fs.rs).
+"""Filesystem listing source (reference A1/A3/A4/A6/A13, src/fs.rs).
 
 Spark-first design: the recursive walk is executor-sharded. The
 driver shards the tree's top entries (``pyds.plan_shards``) into one
 RDD partition each; each executor task walks its shard
 (``pyds.walk_shard``) and ``lstat``s every entry once — the analog of
 the reference's async WalkDir + per-batch concurrent stat
-(src/fs.rs:85-100). The RDD needs no Python DataSource planner
-process, which the ``pylisting`` format (same two functions) starts
-once to build and once to execute a read. File *contents
-are never read*. Like WalkDir, the walk records every regular file:
-zero-byte files, dot-files, files in dot-directories and ``_``-prefixed
-names included (a JVM ``binaryFile`` listing silently drops all four).
-Symlinks are not followed and are not file records.
+(src/fs.rs:85-100). File *contents are never read*. Like WalkDir, the
+walk records every regular file: zero-byte files, dot-files, files in
+dot-directories and ``_``-prefixed names included (a JVM ``binaryFile``
+listing silently drops all four). Symlinks are not followed and are
+not file records.
 
-The projected schema mirrors FileInfo (src/db.rs:10-18 -> FIXTURES.md §4):
-external_source, path, filename, mime_type, created, modified, size.
-``modified`` and ``created`` keep the stat's microseconds.
+The scrape is a straight-line dataflow with no planner, like the
+reference's: the same executor task projects each walked file to a
+FileInfo tuple (src/db.rs:10-18 -> FIXTURES.md §4; the order of
+``merge_sink.FILE_COLUMNS``): external_source, path, filename,
+mime_type (the Python lookup ``mime.mime_type``), created, modified,
+size. ``modified`` and ``created`` are naive UTC and keep the stat's
+microseconds. :func:`scrape_fs_rdd` returns that RDD, which the batch
+sink collects in one job (``MergeSink.sync_snapshot``): no Spark SQL,
+and no Python -> JVM -> Python round trip of the rows.
+:func:`scrape_fs` is the same RDD as a DataFrame (``FILE_SCHEMA``,
+timestamps ``timestamp_ntz``) for the queries and the parallel sink.
+:func:`list_files` is the bare walk as a DataFrame (``pyds.SCHEMA``),
+the same rows ``format("pylisting")`` reads.
 
 Quirk parity: the reference populates `created` from the platform's
 file-creation time and *errors* where btime is unavailable
@@ -32,37 +40,72 @@ the reference's error instead; ``created_from_stat=False`` leaves
 from __future__ import annotations
 
 from functools import partial
+from typing import Callable, Iterator, Sequence
 
+from pyspark import RDD
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from file_scraper_spark.sources import pyds
-from file_scraper_spark.sources.mime import with_mime_type
+from file_scraper_spark.sources.mime import mime_type
 from file_scraper_spark.sources.url import default_fs_identifier
+
+#: The FileInfo rows of :func:`scrape_fs_rdd` as a DataFrame schema.
+FILE_SCHEMA = (
+    "external_source string, path string, filename string, "
+    "mime_type string, created timestamp_ntz, modified timestamp_ntz, "
+    "size long"
+)
+
+
+def _walk_rdd(
+    spark: SparkSession, root: str, walk: Callable[[Sequence[str]], Iterator]
+) -> RDD:
+    """``walk`` applied to each shard of ``root``, one input partition
+    per shard (at most one per core)."""
+    sc = spark.sparkContext
+    shards = pyds.plan_shards(root, sc.defaultParallelism)
+    return sc.parallelize(shards, len(shards)).flatMap(walk)
 
 
 def list_files(spark: SparkSession, root: str, created: str = "stat") -> DataFrame:
-    """Recursive metadata-only listing of a directory tree, one input
-    partition per shard (at most one per core): (path, filename, size,
-    modified, created). ``created`` is one of ``pyds.CREATED_MODES``."""
+    """Recursive metadata-only listing of a directory tree: (path,
+    filename, size, modified, created). ``created`` is one of
+    ``pyds.CREATED_MODES``."""
     pyds.check_created_mode(created)
-    sc = spark.sparkContext
-    shards = pyds.plan_shards(root, sc.defaultParallelism)
-    rows = sc.parallelize(shards, len(shards)).flatMap(
-        partial(pyds.walk_shard, created=created)
-    )
-    return spark.createDataFrame(rows, pyds.SCHEMA)
+    walk = partial(pyds.walk_shard, created=created)
+    return spark.createDataFrame(_walk_rdd(spark, root, walk), pyds.SCHEMA)
 
 
-def scrape_fs(
+def file_infos(
+    entries: Sequence[str], identifier: str, created: str
+) -> Iterator[tuple]:
+    """Executor-side: walk one shard and project each regular file to
+    a FILE_SCHEMA tuple. The walk's timestamps are aware UTC; dropping
+    the zone leaves naive UTC, which the sink stores as is."""
+    for path, filename, size, modified, created_at in pyds.walk_shard(
+        entries, created
+    ):
+        yield (
+            identifier,
+            path,
+            filename,
+            mime_type(filename),
+            created_at and created_at.replace(tzinfo=None),
+            modified.replace(tzinfo=None),
+            size,
+        )
+
+
+def scrape_fs_rdd(
     spark: SparkSession,
     root: str,
     identifier: str | None = None,
     created_from_stat: bool = True,
     strict_created: bool = False,
-) -> DataFrame:
-    """Full fs scrape dataflow: walk + stat -> FileInfo projection ->
-    mime lookup.
+) -> RDD:
+    """Full fs scrape dataflow — walk + stat -> FileInfo projection ->
+    mime lookup, all in the executors' walk tasks — as an RDD of
+    FILE_SCHEMA tuples.
 
     Equivalent of the reference walk pipeline minus the sink
     (src/fs.rs:98-117); feed the result to sinks.merge_sink.
@@ -75,13 +118,17 @@ def scrape_fs(
         created = "none"
     else:
         created = "strict" if strict_created else "stat"
-    listed = list_files(spark, root, created)
-    return with_mime_type(listed).select(
-        F.lit(identifier).alias("external_source"),
-        "path",
-        "filename",
-        "mime_type",
-        "created",
-        "modified",
-        "size",
-    )
+    walk = partial(file_infos, identifier=identifier, created=created)
+    return _walk_rdd(spark, root, walk)
+
+
+def scrape_fs(
+    spark: SparkSession,
+    root: str,
+    identifier: str | None = None,
+    created_from_stat: bool = True,
+    strict_created: bool = False,
+) -> DataFrame:
+    """:func:`scrape_fs_rdd` as a DataFrame with ``FILE_SCHEMA``."""
+    rows = scrape_fs_rdd(spark, root, identifier, created_from_stat, strict_created)
+    return spark.createDataFrame(rows, FILE_SCHEMA)

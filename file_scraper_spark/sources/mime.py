@@ -1,10 +1,21 @@
 """Extension -> MIME type lookup (reference A6, src/fs.rs:56-58).
 
-The reference calls a per-file library lookup; the Spark form is a
-literal map probed with ``try_element_at``: the mapping is a tiny static
-table, so it is folded into the plan as a constant and the lookup runs
-JVM-side inside whole-stage codegen — no join, no broadcast job, no
-Python UDF in the hot path.
+One rule in two forms, over one static table (``EXTENSION_MIME``):
+the extension is the lowercased text after the name's last '.', and a
+name with no '.' or an unknown extension has no mime type.
+
+- :func:`mime_type` is the per-file Python lookup, like the
+  reference's: the fs batch scrape builds its rows in Python on the
+  executors (sources/fs.py), so the lookup runs there, with no Spark
+  SQL on the path.
+- :func:`with_mime_type` is the JVM form for rows that already live in
+  a DataFrame (the S3 listing, the streaming scrapes): a literal map
+  probed with ``try_element_at``, folded into the plan as a constant
+  and run inside whole-stage codegen — no join, no broadcast job, no
+  Python UDF.
+
+``tests/test_sources.py`` checks the two agree, on hypothesis-generated
+names too.
 """
 
 from __future__ import annotations
@@ -44,6 +55,13 @@ EXTENSION_MIME: dict[str, str] = {
     "py": "text/x-python",
     "rs": "text/x-rust",
 }
+
+
+def mime_type(filename: str | None) -> str | None:
+    """Python twin of :func:`with_mime_type` for one name."""
+    if filename is None or "." not in filename:
+        return None
+    return EXTENSION_MIME.get(filename.rpartition(".")[2].lower())
 
 
 def extension_col(filename: Column) -> Column:

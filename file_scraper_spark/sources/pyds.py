@@ -20,15 +20,18 @@ Design for scale (the part that matters at a 100 TB tree):
   (src/fs.rs:85-89), but across machines. The walk's one `lstat` per
   entry yields every column, `created` included.
 
-``sources.fs.list_files`` (the listing behind ``scrape_fs``) runs the
-two functions through an RDD, with no Python planner process;
+The fs scrape (``sources.fs.scrape_fs_rdd``) and ``sources.fs.list_files``
+run the two functions through an RDD, with no Python planner process;
 ``ListingReader`` is the ``pylisting`` adapter over the same two
 functions (its ``partitions()`` / ``read()``), so there is one listing
 implementation.
 
-The row schema is the reference's FileInfo (src/db.rs:10-18) minus
-mime (a JVM-side literal-map lookup, sources/mime.with_mime_type).
-Timestamps are built from the integer ``st_*_ns`` fields, truncated to
+The row schema (``SCHEMA``) is the reference's FileInfo
+(src/db.rs:10-18) minus external_source and mime_type, which the fs
+scrape adds in the same executor task (``sources.fs.file_infos``, with
+the Python lookup ``sources.mime.mime_type``) and the streaming scrape
+in the JVM (``sources.mime.with_mime_type``). Timestamps are aware UTC
+datetimes built from the integer ``st_*_ns`` fields, truncated to
 microseconds (Spark's TimestampType and the reference's precision).
 """
 

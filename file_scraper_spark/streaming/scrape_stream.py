@@ -12,7 +12,9 @@ pipeline (src/fs.rs:98-117).
 foreachBatch executes on the driver, so all batches share the sink
 connection; each micro-batch is fetched with one ``collect`` (one
 Spark job for all its partitions), so driver memory holds one batch
-(bounded by ``max_files_per_trigger``).
+(bounded by ``max_files_per_trigger``). The fetch casts ``created`` /
+``modified`` to ``timestamp_ntz`` (``merge_sink.file_columns``), so
+the sink stores naive UTC whatever the driver's time zone.
 """
 
 from __future__ import annotations
@@ -22,7 +24,11 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from file_scraper_spark.sinks.merge_sink import FILE_COLUMNS, MergeSink
+from file_scraper_spark.sinks.merge_sink import (
+    FILE_COLUMNS,
+    MergeSink,
+    file_columns,
+)
 from file_scraper_spark.sources.mime import with_mime_type
 from file_scraper_spark.sources.url import default_fs_identifier
 
@@ -104,7 +110,7 @@ def _fold_stream_into_sink(
     session = sink.open_scrape(identifier, scrape_time)
 
     def merge_batch(batch_df: DataFrame, _epoch: int) -> None:
-        session.add_rows(batch_df.select(*FILE_COLUMNS).collect())
+        session.add_rows(file_columns(batch_df).collect())
 
     writer = found.writeStream.foreachBatch(merge_batch)
     if available_now:

@@ -6,13 +6,14 @@ import subprocess
 import sys
 
 
-def run_cli(*args, timeout=240):
+def run_cli(*args, timeout=240, env=None):
     return subprocess.run(
         [sys.executable, "-m", "file_scraper_spark", *args],
         capture_output=True,
         text=True,
         timeout=timeout,
         cwd="/root/repo",
+        env=env,
     )
 
 
@@ -77,10 +78,10 @@ def test_cli_created_stat_toggle(tmp_path):
     con.close()
 
 
-def test_cli_scrapes_edge_case_tree(tmp_path):
-    """The CLI records every regular file of the edge-case tree — empty,
-    dot, dot-dir, `_`-prefixed, space, literal `%20` and `._COPYING_`
-    names — with exact size and µs `modified`, and no symlink."""
+def _scrape_edge_case_tree(tmp_path, env=None) -> tuple[dict, dict]:
+    """Run the CLI on the edge-case tree; return (expected, stored) live
+    rows as (path, filename) -> (size, modified, created), the expected
+    ones from an independent os.walk + lstat."""
     import os
     import stat
 
@@ -95,20 +96,42 @@ def test_cli_scrapes_edge_case_tree(tmp_path):
         for f in files:
             st = os.lstat(os.path.join(dirpath, f))
             if stat.S_ISREG(st.st_mode):
-                expect[(dirpath, f)] = (st.st_size, _us(st.st_mtime_ns))
+                created = getattr(st, "st_birthtime_ns", None) or st.st_ctime_ns
+                expect[(dirpath, f)] = (
+                    st.st_size, _us(st.st_mtime_ns), _us(created)
+                )
     assert len(expect) == 7
 
     db = str(tmp_path / "c.duckdb")
-    r = run_cli(str(tree), "--database", db)
+    r = run_cli(str(tree), "--database", db, env=env)
     assert r.returncode == 0, r.stderr
     con = duckdb.connect(db)
     got = {
-        (path, filename): (size, modified)
-        for path, filename, size, modified in con.execute(
-            "SELECT path, filename, size, modified FROM external_file "
+        (path, filename): (size, modified, created)
+        for path, filename, size, modified, created in con.execute(
+            "SELECT path, filename, size, modified, created FROM external_file "
             "WHERE deleted IS NULL"
         ).fetchall()
     }
     con.close()
+    return expect, got
+
+
+def test_cli_scrapes_edge_case_tree(tmp_path):
+    """The CLI records every regular file of the edge-case tree — empty,
+    dot, dot-dir, `_`-prefixed, space, literal `%20` and `._COPYING_`
+    names — with exact size and µs `modified`, and no symlink."""
+    expect, got = _scrape_edge_case_tree(tmp_path)
     assert got == expect
     assert not {"link.txt", "dangling.txt"} & {f for _, f in got}
+
+
+def test_cli_stores_utc_under_a_local_time_zone(tmp_path):
+    """`modified` and `created` are stored as naive UTC, like `deleted`
+    and the scrape time, whatever the time zone of the CLI process."""
+    import os
+
+    expect, got = _scrape_edge_case_tree(
+        tmp_path, env={**os.environ, "TZ": "America/New_York"}
+    )
+    assert got == expect

@@ -228,6 +228,68 @@ def test_list_files_matches_pylisting_format(spark, tmp_path):
     assert listed.rdd.getNumPartitions() == len(shards) > 1
 
 
+def _external_file(db: str) -> list[tuple]:
+    """Every column of external_file but the surrogate file_id."""
+    import duckdb
+
+    con = duckdb.connect(db)
+    try:
+        return sorted(con.execute(
+            "SELECT external_source, path, filename, mime_type, created, "
+            "modified, size, deleted FROM external_file"
+        ).fetchall())
+    finally:
+        con.close()
+
+
+@pytest.mark.parametrize("created_from_stat", [True, False])
+def test_scrape_all_fs_is_one_job_without_sql(spark, tmp_path, created_from_stat):
+    """The batch fs scrape reaches the sink in one Spark job with no
+    Spark SQL execution (the rows are built and collected in Python),
+    and writes the same table as the DataFrame path,
+    sync_snapshot(scrape_fs(...))."""
+    from datetime import datetime
+
+    import duckdb
+
+    from file_scraper_spark import pipeline
+    from file_scraper_spark.sinks.merge_sink import MergeSink
+
+    root = str(tmp_path / "tree")
+    _edge_case_tree(tmp_path / "tree")
+    when = datetime(2024, 1, 1, 12)
+    rdd_db, df_db = str(tmp_path / "rdd.duckdb"), str(tmp_path / "df.duckdb")
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus.waitUntilEmpty()
+    executions = store.executionsCount()
+    group = f"scrape_all_fs_{created_from_stat}"
+    sc.setJobGroup(group, group)
+    try:
+        pipeline.scrape_all(
+            spark, [root], MergeSink(lambda: duckdb.connect(rdd_db)),
+            identifier="t", scrape_time=when, created_from_stat=created_from_stat,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert store.executionsCount() == executions
+
+    df_sink = MergeSink(lambda: duckdb.connect(df_db))
+    df_sink.ensure_target()
+    df_sink.sync_snapshot(
+        scrape_fs(spark, root, "t", created_from_stat=created_from_stat), "t", when
+    )
+    got = _external_file(rdd_db)
+    assert len(got) == 7
+    assert all((r[4] is not None) == created_from_stat for r in got)
+    assert got == _external_file(df_db)
+
+
 def test_listing_shards_below_single_child_root(tmp_path):
     """A root whose only child is a directory is split at the first
     level that has enough entries; no file is lost or duplicated."""
@@ -250,23 +312,69 @@ def test_listing_shards_below_single_child_root(tmp_path):
     )
 
 
-def test_mime_type_lookup_nulls(spark):
-    """Known extensions map case-insensitively; unknown extensions and
-    names without a '.' stay NULL."""
+def _jvm_mime_types(spark, names) -> dict:
     from file_scraper_spark.sources.mime import with_mime_type
 
-    df = spark.createDataFrame(
-        [("a.PNG",), ("b.unknownext",), ("noext",), ("trailing.",), (None,)],
-        "filename string",
-    )
-    got = dict(with_mime_type(df).collect())
-    assert got == {
+    df = spark.createDataFrame([(n,) for n in names], "filename string")
+    return dict(with_mime_type(df).collect())
+
+
+#: names where a Python and a JVM reading of "the lowercased text after
+#: the last '.'" could part: no dot, trailing dot, a dot-file, several
+#: dots, mixed case, and non-ASCII case mappings (the Kelvin sign
+#: lowercases to ASCII 'k'; 'İ' lowercases to two code points)
+MIME_EDGE_NAMES = [
+    "a.PNG", "b.unknownext", "noext", "trailing.", ".hidden", "a.b.JSON",
+    "x.Tar", "x.\u212a", "clip.M\u212aV", "\u0130", "x.\u0130", "\u0130.txt",
+    "", ".", "..", "a..md",
+]
+
+
+def test_mime_type_lookup_nulls(spark):
+    """Known extensions map case-insensitively; unknown extensions and
+    names without a '.' stay NULL. The Python lookup the fs scrape
+    runs on its executors (mime.mime_type) agrees with the JVM form
+    that S3 and streaming use (mime.with_mime_type), on edge names and
+    on hypothesis names: text around extensions of the table in random
+    case, and arbitrary text."""
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    from file_scraper_spark.sources.mime import EXTENSION_MIME, mime_type
+
+    jvm = _jvm_mime_types(spark, [*MIME_EDGE_NAMES, None])
+    known = ("a.PNG", "b.unknownext", "noext", "trailing.", None)
+    assert {n: jvm[n] for n in known} == {
         "a.PNG": "image/png",
         "b.unknownext": None,
         "noext": None,
         "trailing.": None,
         None: None,
     }
+    assert jvm["a.b.JSON"] == "application/json"
+    assert jvm["x.Tar"] == "application/x-tar"
+    assert jvm["clip.M\u212aV"] == "video/x-matroska"
+    assert {n: mime_type(n) for n in jvm} == jvm
+
+    tricky = "K\u212aI\u0130i\u0131S\u017f\u00df\u03a3.jJsSoOnN "
+    ext = st.sampled_from(sorted(EXTENSION_MIME)).flatmap(
+        lambda e: st.tuples(*(st.sampled_from([c.lower(), c.upper()]) for c in e))
+    ).map("".join)
+    name = st.one_of(
+        st.text(max_size=12),
+        st.text(alphabet=tricky, max_size=12),
+        st.tuples(st.text(max_size=6), ext).map(".".join),
+        st.tuples(st.text(alphabet=tricky, max_size=6), ext).map(".".join),
+    )
+
+    @settings(max_examples=25, deadline=None,
+              suppress_health_check=list(HealthCheck))
+    @given(st.lists(name, min_size=1, max_size=40))
+    def check(names):
+        jvm = _jvm_mime_types(spark, names)
+        assert {n: mime_type(n) for n in jvm} == jvm
+
+    check()
 
 
 def test_python_datasource_stat_fidelity(spark, tmp_path):
