@@ -294,10 +294,11 @@ def _ab_pairs(spark, sf_dir, fn_a, fn_b, reps: int) -> dict:
 
     ta, tb = [], []
     for _ in range(reps):
-        # reset BOTH arms to cold: without it a memoizing query (the
-        # jaccard edge memo) measures the memo hit against the other
-        # arm's full pipeline — the r11 first capture recorded 0.015s
-        # vs 1.7s that way, a cache artifact, not a comparison
+        # reset BOTH arms to cold: without it an arm that reads the
+        # exact-collapse dup-probe verdict, the timeseries
+        # type-cardinality memo or a scoped cache the other arm (or
+        # its own previous rep) left behind skips work the other arm
+        # pays for — a cache artifact, not a comparison
         reset_session_state(spark)
         t0 = time.perf_counter()
         materialize(fn_a(spark, sf_dir))
@@ -316,7 +317,7 @@ def _ab_pairs(spark, sf_dir, fn_a, fn_b, reps: int) -> dict:
 
 AMBIENT_NOTE = (
     "single-window absolutes on this box swing ~2x with ambient load; "
-    "only same-JVM interleaved pairs (the 'ab' section / --ab mode) "
+    "only same-JVM interleaved pairs (--ab mode) "
     "support old-vs-new claims"
 )
 
@@ -410,30 +411,9 @@ def main() -> None:
                 max(0.0, fam["sec"] - ovh * fam["n"]), 3
             )
 
-    # same-JVM old-vs-new pairs for queries REWRITTEN this round
-    # (ab_variants.AB_BASELINES — superseded forms kept one round):
-    # the artifact carries the interleaved pairs so round-over-round
-    # readers never compare this round's absolutes against last
-    # round's window (the round-6 false-regression mechanism)
-    ab: dict[str, dict] = {}
-    if os.environ.get("SPARK_GRAFT_BENCH_AB", "1") != "0":
-        from file_scraper_spark.ab_variants import AB_BASELINES
-
-        ab_reps = int(os.environ.get("SPARK_GRAFT_BENCH_AB_REPS", "3"))
-        for name, old_fn in AB_BASELINES.items():
-            if name not in queries:
-                continue
-            res = _ab_pairs(spark, sf_dir, old_fn, queries[name], ab_reps)
-            ab[name] = {
-                "old_min_sec": res["a_min_sec"],
-                "new_min_sec": res["b_min_sec"],
-                "new_over_old": res["ratio"],
-                "pairs": res["pairs"],
-            }
-
     # Key ORDER is load-bearing: the driver keeps only the last 2000
     # stdout chars (the r8 truncation lost the per-query map). Bulky,
-    # reconstructable sections (families, ab pairs, headline list) go
+    # reconstructable sections (families, headline list) go
     # FIRST; the per-query medians, headline total and vs_prev go LAST
     # so the tail always retains the evidence every regression argument
     # needs. The FULL payload is additionally persisted to
@@ -446,9 +426,6 @@ def main() -> None:
         "families": families,
         "all_total_sec": round(all_total, 3),
     }
-    if ab:
-        out["ab"] = ab
-        out["ab_note"] = AMBIENT_NOTE
     out["sf"] = float(sf) if sf.replace(".", "").isdigit() else sf
     out["queries"] = timings
     out["value"] = total

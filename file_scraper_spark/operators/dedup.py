@@ -31,7 +31,6 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
-import tempfile
 
 import pandas as pd
 
@@ -550,156 +549,10 @@ def cap_hot_shingles(sh: DataFrame, cap: int = SHINGLE_DF_CAP) -> DataFrame:
     return sh.join(hot, "shingle", "left_anti")
 
 
-
-
-#: Session-scoped memo for the near-dup EDGE LIST: dedup_ngram_jaccard,
-#: dedup_clusters and dedup_cluster_cap all consume the same edge
-#: pipeline (~26s cold at the 100x probe after the round-11 PPJoin
-#: rewrite), and without a memo a session running jaccard + clusters +
-#: cap pays it three times. The memoized
-#: value is the returned frame behind a LAZY localCheckpoint: nothing
-#: eager happens at plan-build; the first caller's action materializes
-#: the (tiny — pairs above threshold) edge list to executor block
-#: storage and every later consumer reads it back instead of replaying
-#: the shingle index. Keyed on (Spark app, data fingerprint, sampling
-#: params) so a rewritten fixture or new session self-invalidates
-#: (tables.data_key); capped to keep long sessions bounded.
-#:
-#: Failure mode (round-8 advisory, documented deliberately):
-#: localCheckpoint TRUNCATES lineage, so once materialized, losing an
-#: executor/block makes every later consumer of the memoized frame
-#: fail instead of recomputing — and entries evicted from this dict
-#: keep their blocks until the JVM ContextCleaner GCs the DataFrame.
-#: On the single-JVM local[N] target both are non-events (no executor
-#: can be lost independently of the whole app; eviction is bounded by
-#: the cap). On a real multi-executor cluster, swap the localCheckpoint
-#: for .persist(StorageLevel.MEMORY_AND_DISK) + explicit .unpersist()
-#: on eviction: the recompute path survives block loss and the result
-#: stays deterministic because the edge pipeline is deterministic
-#: (hash-partitioned aggregations of deterministic inputs, no sampling
-#: nondeterminism — sample_mod selection is hash-based, not RNG-based).
-_EDGES_MEMO: dict[object, DataFrame] = {}
-_EDGES_MEMO_CAP = 8
-#: memo key -> spill dir the memoized frame reads from, for
-#: DISK-BACKED entries only. A memoized DataFrame over the spill is a
-#: plan over parquet files that an external actor can delete between
-#: consumers (clear_edge_spill from another harness, cross-process
-#: eviction) — returning it then fails at ACTION time with
-#: FAILED_READ_FILE (PROBE_r12's one sweep defect). The hit path
-#: validates the backing dir's _KEY before serving such an entry and
-#: falls back to a rebuild when it is gone.
-_EDGES_MEMO_SPILL: dict[object, str] = {}
-
-#: Disk tier under the in-memory memo (round 12, VERDICT r11 #1): the
-#: FULL (unsampled) edge list is one pipeline shared by THREE
-#: registered consumers (dedup_ngram_jaccard, dedup_clusters,
-#: dedup_cluster_cap), and the session memo cannot carry it across
-#: sessions — or across the probe's per-query cold resets, where each
-#: consumer re-paid the ~26s build (43.3/41.4s cold rows, PROBE_r11).
-#: The spill is an explicit materialized intermediate: the first
-#: builder writes the verified pairs (tiny — only pairs above
-#: threshold) to parquet under FSS_EDGE_SPILL_DIR (default: a
-#: per-user tmp dir; set the env var to '' to disable) in an
-#: atomically-renamed keyed subdir, and every later consumer —
-#: including a different process — reads it back instead of replaying
-#: the shingle index. This is exactly what a 100 TB dedup pipeline
-#: does with its near-dup edge list (materialize once, cluster and
-#: act from the artifact), expressed at fixture scale. Key = the data
-#: fingerprint (per-file size+mtime_ns, tables.data_key) plus the
-#: sampling params — NOT the Spark application id, so the artifact is
-#: valid across sessions and self-invalidates on any fixture rewrite.
-#: Only the unsampled key is spilled: sampled variants are probe
-#: levers whose cold rows must keep measuring their own builds.
-#: Retention: newest _EDGE_SPILL_KEEP keys, evicted oldest-mtime.
-_EDGE_SPILL_KEEP = 8
-
-
-def _edge_spill_root() -> str | None:
-    root = os.environ.get("FSS_EDGE_SPILL_DIR")
-    if root == "":
-        return None  # explicit disable
-    if root is None:
-        root = os.path.join(
-            tempfile.gettempdir(), f"fss-edge-spill-{os.getuid()}"
-        )
-    return root
-
-
-def _spill_slug(spill_key: object) -> str:
-    return hashlib.md5(repr(spill_key).encode()).hexdigest()[:16]
-
-
-def _spill_dir_valid(d: str, spill_key: object) -> bool:
-    """True iff ``d`` holds a committed spill for exactly this key."""
-    try:
-        with open(os.path.join(d, "_KEY")) as f:
-            return f.read() == repr(spill_key)
-    except OSError:
-        return False
-
-
-def _edge_spill_load(spark: SparkSession, spill_key: object):
-    """Return (frame, dir) for the spilled edge list, or None."""
-    root = _edge_spill_root()
-    if root is None:
-        return None
-    d = os.path.join(root, _spill_slug(spill_key))
-    if not _spill_dir_valid(d, spill_key):
-        return None  # absent, partial, or slug collision: miss
-    return spark.read.parquet(os.path.join(d, "edges")), d
-
-
-def _edge_spill_store(
-    spark: SparkSession, out: DataFrame, spill_key: object
-):
-    """Materialize ``out`` into the spill dir (atomic rename) and
-    return (read-back frame, dir); None when the tier is disabled or
-    the volume is unusable (caller falls back to the memo-only path)."""
-    root = _edge_spill_root()
-    if root is None:
-        return None
-    d = os.path.join(root, _spill_slug(spill_key))
-    tmp = f"{d}.tmp-{os.getpid()}"
-    try:
-        os.makedirs(root, exist_ok=True)
-        _edge_spill_evict(root)
-        # repartition, NOT coalesce: coalesce(8) would fuse into and
-        # shrink the UPSTREAM verify stage to 8 tasks (measured: the
-        # build row ran 57s vs ~30s); the exchange itself is free —
-        # the frame is only the above-threshold pairs
-        out.repartition(8).write.mode("overwrite").parquet(
-            os.path.join(tmp, "edges")
-        )
-        with open(os.path.join(tmp, "_KEY"), "w") as f:
-            f.write(repr(spill_key))
-        os.rename(tmp, d)  # atomic: readers never see a partial spill
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        # lost the rename race (concurrent builder) or unusable volume:
-        # serve whatever key-validated artifact exists, else rebuild
-        return _edge_spill_load(spark, spill_key)
-    return spark.read.parquet(os.path.join(d, "edges")), d
-
-
-def _edge_spill_evict(root: str) -> None:
-    try:
-        subs = sorted(
-            (e for e in os.scandir(root) if e.is_dir()),
-            key=lambda e: e.stat().st_mtime_ns,
-        )
-    except OSError:
-        return
-    for e in subs[: max(0, len(subs) - (_EDGE_SPILL_KEEP - 1))]:
-        shutil.rmtree(e.path, ignore_errors=True)
-
-
-def clear_edge_spill() -> None:
-    """Drop the on-disk edge-list spill (the probe's builder row and
-    tests call this; reset_session_state deliberately does NOT — the
-    spill is a materialized intermediate table, not session state)."""
-    root = _edge_spill_root()
-    if root is not None:
-        shutil.rmtree(root, ignore_errors=True)
+def _index_slug(key: object) -> str:
+    """Short stable name suffix for a maintained warehouse index
+    keyed on ``key`` (the corpus fingerprint)."""
+    return hashlib.md5(repr(key).encode()).hexdigest()[:16]
 
 
 def jaccard_pairs(
@@ -707,17 +560,11 @@ def jaccard_pairs(
     sf_dir: str,
     sample_mod: int | None = None,
     sample_fast: bool = False,
-    memo: str | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard >= threshold) near-dup edge list — shared
     by dedup_ngram_jaccard and the connected-components clusterer.
-
-    ``memo`` (default: the ``FSS_EDGE_MEMO`` env var, else ``"auto"``):
-    ``"auto"`` returns a session-memoized lazily-checkpointed frame
-    (see _EDGES_MEMO) so the edge pipeline runs once per session per
-    (fixture, sampling) key; ``"never"`` always builds the full plan —
-    for plan tooling that must see the real pipeline, mirroring
-    exact_collapse's mode switch.
+    Every call builds the full pipeline (each registered consumer
+    calls it once); no edge list is kept between calls or runs.
 
     ``sample_mod=k`` switches to SAMPLED shingle sets: keep only
     shingles whose hash is ≡ 0 (mod k) — see dedup_jaccard_sampled
@@ -765,41 +612,8 @@ def jaccard_pairs(
     cost — the production path; measured: the md5 portable selection
     costs ~as much as the smaller join saves at the 100x probe),
     instead of the md5-derived portable hash DuckDB can replay."""
-    import os  # noqa: PLC0415
-
     if sample_fast and sample_mod is None:
         raise ValueError("sample_fast=True requires sample_mod")
-    if memo is None:
-        memo = os.environ.get("FSS_EDGE_MEMO", "auto")
-    if memo not in ("auto", "never"):
-        raise ValueError(f"jaccard_pairs memo {memo!r}")
-    key = None
-    if memo == "auto":
-        key = (
-            spark.sparkContext.applicationId,
-            data_key(sf_dir, "documents"),
-            sample_mod,
-            sample_fast,
-        )
-        hit = _EDGES_MEMO.get(key)
-        if hit is not None:
-            back = _EDGES_MEMO_SPILL.get(key)
-            if back is None or _spill_dir_valid(back, key[1:]):
-                return hit
-            # the spill backing this memoized frame was deleted
-            # externally (another harness's clear_edge_spill, cross-
-            # process eviction): serving it would FAILED_READ_FILE at
-            # action time — drop the entry and rebuild/reload
-            _EDGES_MEMO.pop(key, None)
-            _EDGES_MEMO_SPILL.pop(key, None)
-        if sample_mod is None:
-            # disk tier: the materialized artifact is session- and
-            # process-independent, so its key drops the app id
-            loaded = _edge_spill_load(spark, key[1:])
-            if loaded is not None:
-                disk, back = loaded
-                _memo_put(key, disk, back)
-                return disk
     docs = load(spark, sf_dir, "documents")
     # group on xxhash64(shingle), not the ~17-char shingle string: the
     # inverted index only needs key EQUALITY and the Jaccard uses
@@ -948,35 +762,10 @@ def jaccard_pairs(
     jac = F.col("common").cast("double") / (
         F.col("na") + F.col("nb") - F.col("common")
     )
-    out = (
+    return (
         verified.select("doc_a", "doc_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
-    if key is not None:
-        spilled = (
-            _edge_spill_store(spark, out, key[1:])
-            if sample_mod is None
-            else None
-        )
-        # non-spilled paths stay a LAZY localCheckpoint: nothing eager
-        # happens at plan-build; the first action materializes to
-        # executor block storage for this session only
-        if spilled is not None:
-            out, back = spilled
-        else:
-            out, back = out.localCheckpoint(eager=False), None
-        _memo_put(key, out, back)
-    return out
-
-
-def _memo_put(key: object, df: DataFrame, spill_dir: str | None) -> None:
-    if len(_EDGES_MEMO) >= _EDGES_MEMO_CAP:
-        victim = next(iter(_EDGES_MEMO))
-        _EDGES_MEMO.pop(victim)
-        _EDGES_MEMO_SPILL.pop(victim, None)
-    _EDGES_MEMO[key] = df
-    if spill_dir is not None:
-        _EDGES_MEMO_SPILL[key] = spill_dir
 
 
 #: capped inverted index, oracle side: same df <= CAP filter as
@@ -1210,9 +999,10 @@ def _propagate_clusters(
     parent, parent → itself, untouched corpus nodes re-enter as
     singletons via one anti-join (near_dup_ids — the id-only corpus
     derivation, no text scan/shuffle). localCheckpoint per round
-    truncates the loop lineage; on a real multi-executor cluster use
-    checkpoint (reliable storage) so block loss recomputes instead of
-    failing (same trade documented on _EDGES_MEMO)."""
+    truncates the loop lineage, so a lost block fails the query
+    instead of recomputing it. On the single-JVM local[N] target no
+    executor can be lost on its own; on a real multi-executor cluster
+    use checkpoint (reliable storage) so block loss recomputes."""
     e = (
         edges.select(
             F.greatest("doc_a", "doc_b").alias("hi"),
@@ -1441,41 +1231,6 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_words",
             (-F.col("best.neg_id")).cast("long").alias("kept_doc"),
         )
-    )
-
-
-def minhash_signatures(
-    sh: DataFrame, k: int = MINHASH_K, portable_hash: bool = True
-) -> DataFrame:
-    """k-permutation MinHash signature per doc: sig[i] = min over
-    shingles of (h1 + i*h2) mod P — ONE string hash per shingle plus k
-    affine transforms (double hashing), not k independent string
-    hashes. One aggregation, k JVM-side min columns — signature state
-    is O(k) per doc and the shuffle carries one partial row per doc
-    per partition (map-side combine).
-
-    ``portable_hash=True`` (default) derives h1/h2 from md5 halves —
-    bit-reproducible in DuckDB, which is what keeps dedup_minhash
-    oracle-checked. ``portable_hash=False`` is the production fast
-    path: two xxhash64 evaluations (plain long mixing, no hex-string
-    round-trip) masked to the same 40-bit domain, so the affine
-    family and everything downstream is unchanged. Same recall
-    properties (tests assert identical planted-pair sets); not
-    cross-engine checkable."""
-    if portable_hash:
-        h1, h2 = _portable_hash2(F.col("shingle"))
-    else:
-        mask = (1 << 40) - 1
-        h1 = F.xxhash64(F.col("shingle")).bitwiseAND(F.lit(mask))
-        h2 = F.xxhash64(F.lit(1), F.col("shingle")).bitwiseAND(F.lit(mask))
-    hashed = sh.select("doc_id", h1.alias("h1"), h2.alias("h2"))
-    mins = [
-        F.min((F.col("h1") + i * F.col("h2")) % MINHASH_P).alias(f"h{i}")
-        for i in range(k)
-    ]
-    agg = hashed.groupBy("doc_id").agg(*mins)
-    return agg.select(
-        "doc_id", F.array(*[F.col(f"h{i}") for i in range(k)]).alias("sig")
     )
 
 
@@ -2525,8 +2280,7 @@ def _editdistance_pairs(
     #   the rare case where an Arrow-batched Python path beats the
     #   JVM expression, because the algorithm (not the runtime) is
     #   the 30x. (The JVM form `F.levenshtein("ta","tb")` served its
-    #   one A/B round in ab_variants and is retired; BENCH_r09 holds
-    #   the numbers.)
+    #   one A/B round and is retired; BENCH_r09 holds the numbers.)
     dist = _myers_dist_udf()(F.col("ta"), F.col("tb"))
     return (
         cand.select(
@@ -2754,11 +2508,10 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- maintained corpus index (incremental dedup, round 12) -------------
 
 #: session-scoped memo: data fingerprint -> the three maintained table
-#: names. NOT cleared by reset_session_state — like the edge spill,
-#: the index is a materialized table, not session cache (catalog
-#: registrations survive a cache reset too; only a fresh session
-#: rebuilds). Bucket count is the knob a real deployment sizes to its
-#: executor count.
+#: names. NOT cleared by reset_session_state: the index is a
+#: materialized table, not session cache (catalog registrations
+#: survive a cache reset too; only a fresh session rebuilds). Bucket
+#: count is the knob a real deployment sizes to its executor count.
 _SIDX_MEMO: dict[object, tuple[str, str, str]] = {}
 SIDX_BUCKETS = 16
 
@@ -2782,15 +2535,14 @@ def corpus_shingle_index(
 
     Rebuilding drops every other ``fss_sidx_*`` generation first, so
     the warehouse holds at most one corpus index per table family
-    (plus this one) — the same bounded-retention contract as the edge
-    spill."""
+    (plus this one)."""
     key = data_key(sf_dir, "documents")
     hit = _SIDX_MEMO.get(key)
     if hit is not None and all(
         spark.catalog.tableExists(t) for t in hit
     ):
         return hit
-    slug = _spill_slug(key)
+    slug = _index_slug(key)
     names = (f"fss_sidx_{slug}", f"fss_cnt_{slug}", f"fss_hot_{slug}")
     for t in spark.catalog.listTables():
         if t.name.startswith(("fss_sidx_", "fss_cnt_", "fss_hot_")):
@@ -3544,7 +3296,7 @@ def corpus_bloom_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     hit = _BLOOM_IDX_MEMO.get(key)
     if hit is not None and all(spark.catalog.tableExists(t) for t in hit):
         return hit
-    slug = _spill_slug(key)
+    slug = _index_slug(key)
     names = (f"fss_blmw_{slug}", f"fss_blmm_{slug}")
     for t in spark.catalog.listTables():
         if t.name.startswith(("fss_blmw_", "fss_blmm_")):
@@ -3951,86 +3703,6 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _winnowing_fp_batches(batches):
-    """Per-doc winnowing fingerprint kernel: the full 3-gram -> md5 ->
-    W-window min -> distinct pipeline for each document inside one
-    mapInPandas pass over (doc_id, words) — the dedup_minhash move
-    (r13) applied to the MOSS fingerprinter.
-
-    SUPERSEDED in r14 (now only the ab_variants arm): quiet-window
-    A/Bs measured it flat at 100x and 1.49x worse at sf0.1 — the r13
-    keep rested on pairs taken under heavy host contention. The
-    exploded codegen form in ``_winnowing_fps_frame`` is live again.
-
-    Bit-exact twin of the exploded form it replaced: the 3-gram
-    string is ``b" ".join`` of the word window — identical UTF-8
-    bytes to ``concat_ws(' ', g0, g1, g2)`` (split() never yields
-    NULL words; empty-string words concatenate identically); h is
-    the big-endian int of md5 digest bytes [0,5) — exactly
-    ``conv(substring(md5(g), 1, 10), 16, 10)`` (the equivalence
-    verified for dedup_minhash's h1, same construction); the window
-    minimum runs only over FULL W-windows (the old ``p + W-1 <= n``
-    guard), i.e. positions 0..n_grams-W, so docs with fewer than
-    W + 2 words (no full window — this subsumes the <3-words
-    no-grams case) emit nothing, exactly like the old explode; the
-    per-doc np.unique is the old distinct (doc_id is unique per
-    corpus row — base ids are table-unique, perturbed ids are their
-    disjoint negative mirror — so per-doc dedup IS the global
-    distinct).
-
-    Why a kernel: the old shape materialized one exploded row PER
-    3-GRAM (~60M at 100x), paid per-gram JVM md5 + hex substring +
-    conv, then a full exchange + per-doc SORT for the window minimum
-    and a 60M-row distinct. All of that collapses into one per-doc
-    loop whose md5 calls are the only per-gram Python cost; the
-    window min is W-1 vectorized np.minimum passes and the distinct
-    a per-doc np.unique, and NOTHING leaves the task but the final
-    ~2/(W+1)-density fingerprint rows."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-    from hashlib import md5  # noqa: PLC0415
-
-    join = b" ".join
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        ids: list = []
-        fps: list = []
-        for doc_id, words in zip(pdf["doc_id"], pdf["words"]):
-            if words is None or len(words) < WIN_W + 2:
-                continue
-            bw = [w.encode() for w in words]
-            digests = b"".join(
-                md5(join(t)).digest()[:5]
-                for t in zip(bw, bw[1:], bw[2:])
-            )
-            B = (
-                np.frombuffer(digests, dtype=np.uint8)
-                .reshape(-1, 5)
-                .astype(np.int64)
-            )
-            h = (
-                (B[:, 0] << 32)
-                | (B[:, 1] << 24)
-                | (B[:, 2] << 16)
-                | (B[:, 3] << 8)
-                | B[:, 4]
-            )
-            m = h[: len(h) - WIN_W + 1].copy()
-            for j in range(1, WIN_W):
-                np.minimum(m, h[j : j + len(m)], out=m)
-            u = np.unique(m)
-            ids.append(np.full(len(u), doc_id, dtype=np.int64))
-            fps.append(u)
-        if ids:
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.concatenate(ids),
-                    "fp": np.concatenate(fps),
-                }
-            )
-
-
 def _winnowing_fps_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (doc_id, fp) winnowing fingerprints, pre-df-gate.
     Split out of _winnowing_kept so plan tooling can dump the
@@ -4040,8 +3712,8 @@ def _winnowing_fps_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the EXPLODED JVM form, restored in r14: posexplode to one
     row per 3-gram, codegen'd md5 + conv, W-window minimum over a
     doc_id exchange + per-doc sort, corpus-sized distinct. The r13
-    per-doc kernel rewrite (``_winnowing_fp_batches``, kept as this
-    round's ab_variants arm) was REVERTED on quiet-window evidence:
+    per-doc mapInPandas kernel rewrite (retired; its final pairs are
+    in BENCH_r14) was REVERTED on quiet-window evidence:
     its only r13 wins were measured under heavy host contention
     (0.82-0.90x min-of-3, 5/6 pairs), while this round's two quiet
     3-pair 100x A/Bs split 3-3 with min-of-6 ~1.02 (flat) and the

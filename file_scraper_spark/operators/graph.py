@@ -124,7 +124,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     therefore O(nodes), not O(edges) — only the initial edge
     partitioning ever moves the edge list.  localCheckpoint per round
     truncates the K-deep lineage (swap for checkpoint() on a real
-    cluster — same trade documented on dedup._EDGES_MEMO).  At a web
+    cluster, where a lost block would otherwise fail the job instead
+    of recomputing — same trade as dedup._propagate_clusters).  At a web
     scale graph, AQE handles rank-side skew; the edge cache is the
     one resident structure and it is O(edges/executors) per node.
 

@@ -157,18 +157,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
-def query_vector(spark: SparkSession, sf_dir: str, vec_id: int = QUERY_VEC_ID) -> Column:
-    """The query vector as a literal array column (a scan parameter,
-    like a CLI argument — 64 floats, not a driver-side data loop)."""
-    row = (
-        load(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") == vec_id)
-        .select("embedding")
-        .head()
-    )
-    return F.array(*[F.lit(float(v)) for v in row[0]])
-
-
 # DuckDB twin of the quantized fold over unnested vector elements.
 def _oracle_dec_sum(expr: str) -> str:
     return (
@@ -882,31 +870,14 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(10)
 
 
-def _sign_bucket(vec: Column) -> Column:
-    """8-bit sign-LSH bucket id of a vector under the md5-derived
-    hyperplane family (``_dedup_plane``): bit p is set iff the exact
-    quantized projection onto plane p is positive. Shared by the
-    single-probe and batched ANN forms so both hash into the one
-    bucket space the oracle replays."""
-    planes = [_dedup_plane(p) for p in range(N_PLANES)]
-    bits = [
-        F.when(
-            dot(vec, F.array(*[F.lit(w) for w in planes[p]])) > 0,
-            F.lit(1 << p),
-        ).otherwise(F.lit(0))
-        for p in range(N_PLANES)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
 def _py_sign_bucket(qvec: list) -> int:
-    """Driver-side bit-exact twin of ``_sign_bucket`` for ONE vector:
-    the fold addends floor((v_d * w_pd) * 1e9) are the same IEEE
-    double ops in CPython, summed as exact ints, and the JVM's
-    (sum/1e9) > 0 test is equivalent to the integer sum > 0."""
+    """8-bit sign-LSH bucket id of ONE vector under the md5-derived
+    hyperplane family (``_dedup_plane``), computed on the driver: bit
+    p is set iff the exact quantized projection onto plane p is
+    positive. Bit-exact against the oracle's fold: the addends
+    floor((v_d * w_pd) * 1e9) are the same IEEE double ops in
+    CPython, summed as exact ints, and a (sum/1e9) > 0 test is
+    equivalent to the integer sum > 0."""
     quant = float(QUANT)
     bucket = 0
     for p in range(N_PLANES):
@@ -935,7 +906,7 @@ def _scan_probe_cos_fn(qspecs: list, emit_qid: bool):
     products of exactly-widened float32 inputs, floor(x*1e9) addends
     summed exactly (integers < 2^53), one IEEE sqrt per norm, NULL on
     a zero divisor exactly like ``try_divide``; bucket bits test the
-    exact integer projection sum > 0, identical to ``_sign_bucket``.
+    exact integer projection sum > 0, identical to ``_py_sign_bucket``.
     """
 
     def gen(batches):
@@ -1459,7 +1430,7 @@ def similarity_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     into exact BIGINT addition, so the 4-addend sum cannot reorder.
 
     Scale shape: the query set is a SCAN PARAMETER — MAXSIM_QN rows
-    fetched once driver-side (the ``query_vector`` pattern) and
+    fetched once driver-side (like a CLI argument, not a join) and
     closed over by one batch-vectorized cosine kernel
     (``_maxsim_cos_fn``), so the per-(vector, query) cosines are one
     linear corpus scan with no joins at all; both aggregations carry

@@ -141,15 +141,6 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _langid_case(score_cols: dict[str, Column]) -> Column:
-    """Deterministic argmax over language scores with fixed priority."""
-    expr = F.lit(LANG_PRIORITY[-1])
-    for lang in reversed(LANG_PRIORITY[:-1]):
-        later = [score_cols[l] for l in LANG_PRIORITY[LANG_PRIORITY.index(lang) + 1 :]]
-        expr = F.when(score_cols[lang] >= F.greatest(*later) if len(later) > 1 else score_cols[lang] >= later[0], F.lit(lang)).otherwise(expr)
-    return expr
-
-
 @query(
     "text_langid",
     oracle=f"""
@@ -365,8 +356,8 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical to the fold (same A/B-proven pattern as the
     clustering/PQ kernels). Same-JVM A/B + plan diff (HOF Generate
     pipeline -> one MapInPandas over (doc_id, text)) in
-    OPTIMIZATION_r13.md; superseded HOF form is this round's
-    ``ab_variants`` arm.
+    OPTIMIZATION_r13.md; the superseded HOF form is retired and its
+    final pairs are in BENCH_r14.
 
     Scale shape: one scan, zero shuffles, embarrassingly parallel —
     unchanged from the HOF form; only the per-task execution engine

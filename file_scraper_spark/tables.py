@@ -75,7 +75,8 @@ def _data_files(path: str) -> list[str]:
 def data_key(sf_dir: str, *names: str) -> tuple:
     """Cheap content fingerprint of fixture tables, for keying
     process-lifetime memo caches (dedup._DUP_PROBE_CACHE,
-    timeseries._TYPE_CARD_CACHE, dedup's edge-list memo).
+    timeseries._TYPE_CARD_CACHE) and of the maintained-index memos
+    (dedup._SIDX_MEMO and its siblings).
 
     Keying a memo on the PATH alone goes stale when data is rewritten
     at the same path within one process (long-lived test or notebook
@@ -197,9 +198,9 @@ def reset_session_state(spark: SparkSession) -> None:
 
     Clears, in order:
     - the single-slot scoped cache (`scoped_cache`);
-    - the operator memo dicts (dup-probe verdicts, edge-list
-      checkpoints, timeseries type-cardinality) — imported lazily to
-      keep tables.py dependency-free;
+    - the operator memo dicts (dup-probe verdicts, timeseries
+      type-cardinality) — imported lazily to keep tables.py
+      dependency-free;
     - the SQL cache manager (`catalog.clearCache`);
     - every still-persisted RDD via the JVM registry — this is what
       actually frees localCheckpoint blocks, whose lineage-truncated
@@ -216,8 +217,6 @@ def reset_session_state(spark: SparkSession) -> None:
     from file_scraper_spark.streaming import queries as _sq  # noqa: PLC0415
 
     dedup._DUP_PROBE_CACHE.clear()
-    dedup._EDGES_MEMO.clear()
-    dedup._EDGES_MEMO_SPILL.clear()
     timeseries._TYPE_CARD_CACHE.clear()
     # the one live stream sink (memory view or parquet dir; bounded by
     # _SINK_TABLES, but a cold measurement should not carry even that

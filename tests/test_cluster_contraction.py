@@ -1,6 +1,7 @@
-"""Star-contraction connected components + the edge-list spill tier
-(round 12: _propagate_clusters rewrite and the FSS_EDGE_SPILL_DIR disk
-memo under dedup's shared edge pipeline).
+"""Star-contraction connected components over dedup's near-dup edge
+list (round 12: _propagate_clusters rewrite), and the edge list's
+no-state contract: every consumer builds it and nothing outlives the
+query.
 
 The registered dedup_clusters query only ever sees the fixture's
 near-dup graph — almost all 2-node components. These tests drive the
@@ -11,8 +12,6 @@ plain-Python union-find as the ground truth.
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 
@@ -89,103 +88,23 @@ def test_star_contraction_matches_union_find(spark, name):
     assert _contract(spark, edges) == _uf_components(edges)
 
 
-def test_winnowing_ab_arm_matches_live_on_fixture(spark, sf_dir):
-    """The superseded r12 winnowing tail (broadcast-sizes form, kept
-    one round as the bench A/B baseline) and the live window-nf form
-    must agree row-for-row on the fixture (the A/B arms are
-    apples-to-apples, ab_variants contract)."""
-    from file_scraper_spark.ab_variants import _old_dedup_winnowing
-
-    new = sorted(map(tuple, dedup.dedup_winnowing(spark, sf_dir).collect()))
-    old = sorted(map(tuple, _old_dedup_winnowing(spark, sf_dir).collect()))
-    assert new == old and len(new) > 0
-
-
-# ---------------------------------------------------------------- spill
-
-
-def test_edge_spill_roundtrip_and_cross_session_key(
+def test_edge_consumers_leave_nothing_on_disk(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """A cold session (memo cleared) must find the spilled artifact on
-    disk and return byte-identical edges without rebuilding; the spill
-    key must NOT contain the Spark application id (cross-process
-    reuse is the point)."""
-    monkeypatch.setenv("FSS_EDGE_SPILL_DIR", str(tmp_path / "spill"))
-    dedup._EDGES_MEMO.clear()
-    a = sorted(map(tuple, dedup.jaccard_pairs(spark, sf_dir).collect()))
-    subdirs = os.listdir(str(tmp_path / "spill"))
-    assert len(subdirs) == 1, "exactly one keyed spill subdir"
-    dedup._EDGES_MEMO.clear()
-    hit = dedup.jaccard_pairs(spark, sf_dir)
-    # the hit is a parquet read of the spill, not a rebuilt pipeline
-    assert "fss" not in hit.schema.simpleString()  # schema sanity
-    plan = hit._sc._jvm.PythonSQLUtils.explainString(
-        hit._jdf.queryExecution(), "simple"
-    )
-    assert "edges" in plan and "Scan parquet" in plan
-    assert sorted(map(tuple, hit.collect())) == a
+    """The near-dup edge list is kept nowhere between runs: the
+    jaccard and cluster queries, run cold to completion, write nothing
+    under the process temp dir (where a cross-run edge cache would
+    land), and a session reset afterwards still works."""
+    import tempfile
 
+    from file_scraper_spark.tables import reset_session_state
 
-def test_memoized_frame_survives_external_spill_clear(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """PROBE_r12's one sweep defect, hardened (VERDICT r12 task #5):
-    a memoized DataFrame over the disk spill is a plan over parquet
-    files that an external actor can delete between consumers
-    (another harness's clear_edge_spill, cross-process eviction).
-    The memo hit must validate the backing dir and fall back to a
-    rebuild — not serve a frame that dies with FAILED_READ_FILE at
-    action time."""
-    monkeypatch.setenv("FSS_EDGE_SPILL_DIR", str(tmp_path / "spill"))
-    dedup._EDGES_MEMO.clear()
-    dedup._EDGES_MEMO_SPILL.clear()
-    a = sorted(map(tuple, dedup.jaccard_pairs(spark, sf_dir).collect()))
-    assert dedup._EDGES_MEMO and dedup._EDGES_MEMO_SPILL
-    # the harness rug-pull: spill cleared while the memo entry lives
-    dedup.clear_edge_spill()
-    again = dedup.jaccard_pairs(spark, sf_dir)
-    assert sorted(map(tuple, again.collect())) == a
-    dedup._EDGES_MEMO.clear()
-    dedup._EDGES_MEMO_SPILL.clear()
-
-
-def test_edge_spill_key_mismatch_is_miss(tmp_path, monkeypatch, spark):
-    monkeypatch.setenv("FSS_EDGE_SPILL_DIR", str(tmp_path))
-    slug_dir = tmp_path / dedup._spill_slug(("some", "key"))
-    slug_dir.mkdir()
-    (slug_dir / "_KEY").write_text("repr-of-a-DIFFERENT-key")
-    assert dedup._edge_spill_load(spark, ("some", "key")) is None
-
-
-def test_edge_spill_disabled_by_empty_env(monkeypatch):
-    monkeypatch.setenv("FSS_EDGE_SPILL_DIR", "")
-    assert dedup._edge_spill_root() is None
-
-
-def test_edge_spill_eviction_keeps_newest(tmp_path, monkeypatch):
-    monkeypatch.setenv("FSS_EDGE_SPILL_DIR", str(tmp_path))
-    for i in range(dedup._EDGE_SPILL_KEEP + 3):
-        d = tmp_path / f"k{i:02d}"
-        d.mkdir()
-        os.utime(d, ns=(i * 10**9, i * 10**9))
-    dedup._edge_spill_evict(str(tmp_path))
-    left = sorted(p.name for p in tmp_path.iterdir())
-    # room for KEEP-1 existing + the one about to be written
-    assert len(left) == dedup._EDGE_SPILL_KEEP - 1
-    assert left[0] == "k04"  # oldest evicted
-
-
-def test_sampled_edges_never_spill(spark, sf_dir, tmp_path, monkeypatch):
-    """Sampled variants are probe levers whose cold rows must keep
-    measuring their own builds — only the unsampled key may land on
-    disk."""
-    monkeypatch.setenv("FSS_EDGE_SPILL_DIR", str(tmp_path / "s"))
-    dedup._EDGES_MEMO.clear()
-    dedup.jaccard_pairs(
-        spark, sf_dir, sample_mod=dedup.SHINGLE_SAMPLE_MOD
-    ).count()
-    assert not (tmp_path / "s").exists()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    reset_session_state(spark)
+    for fn in (dedup.dedup_ngram_jaccard, dedup.dedup_clusters):
+        assert fn(spark, sf_dir).count() > 0
+    assert sorted(p.name for p in tmp_path.iterdir()) == []
+    reset_session_state(spark)
 
 
 def test_near_dup_ids_matches_corpus_nodes(spark, sf_dir):

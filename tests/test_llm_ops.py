@@ -91,29 +91,6 @@ def test_jaccard_sampled_fast_path_equivalent_recall(spark, sf_dir):
     assert len(planted_fast & planted_slow) / len(planted_slow) >= 0.85
 
 
-def test_jaccard_pairs_memoized_per_session(spark, sf_dir):
-    """dedup_ngram_jaccard / dedup_clusters / dedup_cluster_cap share
-    the edge pipeline; the session memo must hand every consumer the
-    SAME lazily-checkpointed frame (edge pipeline paid once per
-    session — VERDICT r7 task #3), memo='never' must bypass it, and
-    both must compute identical edges."""
-    from file_scraper_spark.operators.dedup import jaccard_pairs
-
-    a = jaccard_pairs(spark, sf_dir)
-    b = jaccard_pairs(spark, sf_dir)
-    assert a is b, "memo must return the same checkpointed frame"
-    raw = jaccard_pairs(spark, sf_dir, memo="never")
-    assert raw is not a
-    key = lambda r: (r.doc_a, r.doc_b)  # noqa: E731
-    assert sorted(map(key, a.collect())) == sorted(map(key, raw.collect()))
-    # sampling params key separately — a sampled call must never reuse
-    # the exact path's edges
-    from file_scraper_spark.operators.dedup import SHINGLE_SAMPLE_MOD
-
-    s = jaccard_pairs(spark, sf_dir, sample_mod=SHINGLE_SAMPLE_MOD)
-    assert s is not a
-
-
 def test_data_key_invalidates_on_rewrite(tmp_path, smoke_dir):
     """Memo keys fingerprint the parquet files (size+mtime), so data
     rewritten at the same path yields a different key — the round-7

@@ -10,34 +10,10 @@ from __future__ import annotations
 
 import re
 
-import pytest
-
 from file_scraper_spark import registry
 
 registry._ensure_loaded()
 R = registry.REGISTRY
-
-
-@pytest.fixture(scope="module", autouse=True)
-def _genuine_edge_pipeline(spark):
-    """Plan assertions must see the REAL edge pipeline, not a disk
-    spill or a memo entry another test file populated (possibly from
-    a parquet read of the spill): disable the disk tier and drop the
-    memo once for this module. The first jaccard plan test rebuilds
-    and re-memoizes a lazy in-session frame; later tests ride it."""
-    import os
-
-    from file_scraper_spark.operators import dedup
-
-    prev = os.environ.get("FSS_EDGE_SPILL_DIR")
-    os.environ["FSS_EDGE_SPILL_DIR"] = ""
-    dedup._EDGES_MEMO.clear()
-    yield
-    if prev is None:
-        os.environ.pop("FSS_EDGE_SPILL_DIR", None)
-    else:
-        os.environ["FSS_EDGE_SPILL_DIR"] = prev
-    dedup._EDGES_MEMO.clear()
 
 
 def plan_of(name, spark, sf_dir) -> str:

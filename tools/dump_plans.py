@@ -15,8 +15,7 @@ from contextlib import redirect_stdout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # plan-only tooling: skip the eager build-time probes (exact_collapse
-# duplicate check, gapfill cardinality probe) and the edge-list memo
-# so building DataFrames triggers no Spark jobs and the dumps show the
+# duplicate check, gapfill cardinality probe) so the dumps show the
 # full pipelines. NOTE: the dumped dedup plans are the NO-COLLAPSE
 # branch by construction; on a fixture whose derived near-dup corpus
 # contains exact duplicates, auto-mode execution takes the collapse
@@ -24,8 +23,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # tests in tests/test_plans.py pin the executed shapes).
 os.environ.setdefault("FSS_EXACT_COLLAPSE", "never")
 os.environ.setdefault("FSS_GAPFILL_PROBE", "never")
-os.environ.setdefault("FSS_EDGE_MEMO", "never")
-os.environ.setdefault("FSS_EDGE_SPILL_DIR", "")
 
 from file_scraper_spark import registry
 from file_scraper_spark.session import get_spark

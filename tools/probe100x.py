@@ -48,7 +48,6 @@ SUBSET = [
     "dedup_minhash",
     "dedup_minhash_fast",
     "dedup_simhash",
-    "jaccard_edges_build",
     "dedup_ngram_jaccard",
     "corpus_index_build",
     "dedup_incremental",
@@ -120,29 +119,9 @@ def _approx_quantile_sketch_only(spark, sf_dir):
     )
 
 
-def _jaccard_edges_build(spark, sf_dir):
-    """The ONCE-PER-SWEEP edge-list materialization (round 12): clears
-    the disk spill and builds + writes the full near-dup edge list.
-    This row carries the BUILD cost; the three registered consumers
-    (dedup_ngram_jaccard, dedup_clusters, dedup_cluster_cap) then read
-    the spilled artifact in their own cold rows — exactly the
-    materialize-once shape a production pipeline runs, with the build
-    price still measured, on its own honest row. reset_session_state
-    deliberately leaves the spill on disk (it is a materialized
-    intermediate table, not session state)."""
-    from file_scraper_spark.operators import dedup
-
-    dedup.clear_edge_spill()
-    # the memo too: a surviving memo entry is a frame over the files
-    # clear_edge_spill just deleted — the warm (no-reset) run would
-    # read a deleted parquet. A builder's warm run = full rebuild.
-    dedup._EDGES_MEMO.clear()
-    return dedup.jaccard_pairs(spark, sf_dir)
-
-
 def _corpus_index_build(spark, sf_dir):
     """Maintenance-time build of the bucketed corpus shingle index
-    (round 12) — measured on its own row like jaccard_edges_build, so
+    (round 12) — measured on its own row, so
     dedup_incremental_indexed's cold row shows what a DAILY run costs
     once the index is maintained. Drops the memo so every cold rep is
     a genuine rebuild."""
@@ -219,7 +198,6 @@ def _cdc_index_build(spark, sf_dir):
 
 
 EXTRA = {
-    "jaccard_edges_build": _jaccard_edges_build,
     "phrase_index_build": _phrase_index_build,
     "ivfpq_index_build": _ivfpq_index_build,
     "cdc_index_build": _cdc_index_build,
@@ -302,8 +280,7 @@ def main() -> None:
                 "are SINGLE-SHOT and carry this box's full ambient "
                 "swing (~2x run-to-run, NOTES.md) — a warm > cold row "
                 "is noise unless it reproduces standalone; use warm "
-                "only for memo/cache signatures (e.g. the edge-memo "
-                "~0.03s hits)."
+                "only for memo/cache signatures."
             ),
         },
         "queries": cold,
