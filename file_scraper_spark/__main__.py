@@ -10,7 +10,9 @@ Database resolution order: --database, then $DATABASE_URL, then an
 in-repo default duckdb file. postgresql:// URLs use psycopg if
 installed (not in this container — clearly reported); anything else is
 treated as a DuckDB path. One scrape transaction per path (A15);
-failures abort the run with a nonzero exit (src/main.rs:61-65).
+failures abort the run with a nonzero exit (src/main.rs:61-65). Spark
+starts only for an S3 path, ``--streaming`` or an fs tree too large for
+the driver to walk (``sources.pyds.DRIVER_WALK_MAX_ENTRIES``).
 """
 
 from __future__ import annotations
@@ -95,9 +97,18 @@ def main(argv: list[str] | None = None) -> int:
     from file_scraper_spark.session import get_spark
     from file_scraper_spark.sinks.merge_sink import MergeSink
 
-    spark = get_spark("file_scraper_spark", master=args.master)
-    if args.verbose:
-        spark.sparkContext.setLogLevel("INFO")
+    # Spark starts on first use: a batch fs tree the driver walks
+    # (pyds.DRIVER_WALK_MAX_ENTRIES) never needs it.
+    spark = None
+
+    def session():
+        nonlocal spark
+        if spark is None:
+            spark = get_spark("file_scraper_spark", master=args.master)
+            if args.verbose:
+                spark.sparkContext.setLogLevel("INFO")
+        return spark
+
     connect, paramstyle = make_connect(args.database)
     sink = MergeSink(connect, paramstyle=paramstyle)
     scrape_time = datetime.now(timezone.utc).replace(tzinfo=None)
@@ -118,7 +129,7 @@ def main(argv: list[str] | None = None) -> int:
                 else:
                     root, ident_default = path, None
                 ident = scrape_stream(
-                    spark, root, sink,
+                    session(), root, sink,
                     identifier=args.identifier or ident_default,
                     scrape_time=scrape_time,
                     max_files_per_trigger=args.batch_size,
@@ -128,7 +139,7 @@ def main(argv: list[str] | None = None) -> int:
             from file_scraper_spark.pipeline import scrape_all
 
             idents = scrape_all(
-                spark, args.paths, sink,
+                session, args.paths, sink,
                 identifier=args.identifier, scrape_time=scrape_time,
                 created_from_stat=not args.no_created_stat,
             )
@@ -138,7 +149,8 @@ def main(argv: list[str] | None = None) -> int:
         print(f"error: {e}", file=sys.stderr)
         return 1
     finally:
-        spark.stop()
+        if spark is not None:
+            spark.stop()
     return 0
 
 

@@ -7,7 +7,11 @@ dispatch per path (A14), one sink transaction per scrape (A15), and
 fail-fast: the first error aborts the run, matching the reference's
 join_all error propagation (src/main.rs:61-65).
 
-On a cluster each scrape is one independent Spark job, run when the
+An fs tree of at most ``pyds.DRIVER_WALK_MAX_ENTRIES`` entries is
+walked and projected on the driver, with no Spark job and no
+SparkSession: ``scrape_all`` takes a session or a function that returns
+one, and calls the function only for a source with work to ship. On a
+cluster each other scrape is one independent Spark job, run when the
 sink fetches the snapshot; for fs the listing, projection and mime
 lookup run in the executors' walk tasks, with no Spark SQL. Sources are
 processed sequentially on the driver — parallel sources would just
@@ -17,6 +21,7 @@ the whole cluster.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from datetime import datetime, timezone
 
 from pyspark.sql import SparkSession
@@ -26,14 +31,16 @@ from file_scraper_spark.sources.dispatch import source_for_path
 
 
 def scrape_all(
-    spark: SparkSession,
+    spark: SparkSession | Callable[[], SparkSession],
     paths: list[str],
     sink: MergeSink,
     identifier: str | None = None,
     scrape_time: datetime | None = None,
     created_from_stat: bool = True,
 ) -> list[str]:
-    """Scrape every path into the sink; returns the identifiers used."""
+    """Scrape every path into the sink; returns the identifiers used.
+    ``spark`` is a session or a function that starts one on demand."""
+    session = spark if callable(spark) else lambda: spark
     sink.ensure_target()
     scrape_time = scrape_time or datetime.now(timezone.utc).replace(tzinfo=None)
     identifiers = []
@@ -41,7 +48,7 @@ def scrape_all(
         source = source_for_path(
             path, identifier, created_from_stat=created_from_stat
         )
-        found = source.scrape(spark)
+        found = source.scrape(session)
         sink.sync_snapshot(found, source.identifier, scrape_time)
         identifiers.append(source.identifier)
     return identifiers

@@ -50,8 +50,6 @@ def get_spark(
         # long and is converted in tables.load (Spark's TimestampType is
         # micros); the fixtures store MICROS and need no conversion.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # metadata listing parallelism for the fs source (SURVEY §2.A A13)
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "32")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.python.daemon.module", "file_scraper_spark.worker_daemon")

@@ -24,9 +24,10 @@ snapshot DataFrame, faithfully reproducing the reference semantics
   (src/fs.rs:103-116).
 
 Scale design: the per-batch DB round-trip (the reference ships <=200
-rows as array params) becomes either (a) driver-batched staging over
-one ``collect()`` — a single Spark job that fetches every partition
-in parallel, holding the whole snapshot on the driver; each batch is
+rows as array params) becomes either (a) driver-batched staging of the
+whole snapshot held on the driver — rows the driver built itself, or
+one ``collect()``, a single Spark job that fetches every partition in
+parallel; each batch is
 staged by one multi-row ``INSERT ... VALUES (...), (...)`` (split to
 stay under Postgres's bind-parameter limit), not row-at-a-time; the
 default, for snapshots that fit there — or (b) executor-parallel
@@ -37,10 +38,11 @@ retry-safe and the visible table still moves atomically between
 snapshots. The DB-side SQL is dialect-neutral (tested against DuckDB;
 targets Postgres).
 
-The snapshot reaches (a) as an RDD of FILE_COLUMNS tuples (the fs
-source: rows built in Python on the executors, collected with no Spark
-SQL on the path) or as a DataFrame (the S3 source, whose rows are made
-in the JVM). Timestamps are stored as naive UTC, like ``deleted``: a
+The snapshot reaches (a) as FILE_COLUMNS tuples from the fs source —
+a list when the driver walked a small tree (no Spark job), else an RDD
+of rows built in Python on the executors, collected with no Spark SQL
+on the path — or as a DataFrame (the S3 source, whose rows are made in
+the JVM). Timestamps are stored as naive UTC, like ``deleted``: a
 DataFrame's ``created``/``modified`` are cast to ``timestamp_ntz``
 before they leave Spark (:func:`file_columns`), because a collected
 ``timestamp`` reads in the driver process's local time zone.
@@ -307,20 +309,26 @@ class MergeSink:
             session.con.close()
 
     def sync_snapshot(
-        self, found: DataFrame | RDD, external_source: str, scrape_time
+        self,
+        found: DataFrame | RDD | list[tuple],
+        external_source: str,
+        scrape_time,
     ) -> None:
-        """Merge a snapshot (driver-batched path): an RDD of
+        """Merge a snapshot (driver-batched path): a list or an RDD of
         FILE_COLUMNS tuples with naive-UTC timestamps, or a DataFrame
         with those columns.
 
-        One ``collect`` fetches the snapshot in a single Spark job, all
-        partitions in parallel (a ``toLocalIterator`` pull would run one
-        job per partition, serially), before the transaction opens; the
-        rows then go through :meth:`sync_rows` batching. The whole
-        snapshot is held on the driver: for snapshots too large for it
-        use :meth:`sync_snapshot_parallel`.
+        A list is merged as it is, with no Spark job. An RDD or a
+        DataFrame is fetched by one ``collect``, a single Spark job
+        over all partitions in parallel (a ``toLocalIterator`` pull
+        would run one job per partition, serially), before the
+        transaction opens. The rows then go through :meth:`sync_rows`
+        batching. The whole snapshot is held on the driver: for
+        snapshots too large for it use :meth:`sync_snapshot_parallel`.
         """
-        rows = (found if isinstance(found, RDD) else file_columns(found)).collect()
+        if isinstance(found, DataFrame):
+            found = file_columns(found)
+        rows = found if isinstance(found, list) else found.collect()
         self.sync_rows(rows, external_source, scrape_time)
 
     def sync_snapshot_parallel(

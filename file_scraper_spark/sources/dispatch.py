@@ -1,10 +1,12 @@
 """Source dispatch (reference A14, src/worker.rs + src/main.rs:72-81):
 try the S3 interpretation of the path first, fall back to filesystem.
 
-A source's ``scrape`` returns what ``MergeSink.sync_snapshot`` fetches:
-an RDD of FileInfo tuples for fs (built in Python on the executors, no
-Spark SQL — sources/fs.py), a DataFrame for S3 (its listing rows are
-made in the JVM).
+A source's ``scrape`` takes a zero-argument function that returns the
+SparkSession, and calls it only when it has work to ship. It returns
+what ``MergeSink.sync_snapshot`` fetches: for fs, the FileInfo tuples as
+a list when the driver walked the tree, else as an RDD built in Python
+on the executors (no Spark SQL either way — sources/fs.py); for S3, a
+DataFrame (its listing rows are made in the JVM).
 """
 
 from __future__ import annotations
@@ -25,7 +27,7 @@ from file_scraper_spark.sources.url import (
 class Source:
     kind: str  # 's3' | 'fs'
     identifier: str
-    scrape: Callable[[SparkSession], DataFrame | RDD]
+    scrape: Callable[[Callable[[], SparkSession]], DataFrame | RDD | list[tuple]]
 
 
 def source_for_path(
@@ -46,15 +48,15 @@ def source_for_path(
         return Source(
             kind="s3",
             identifier=ident,
-            scrape=lambda spark: scrape_s3(spark, loc, ident),
+            scrape=lambda session: scrape_s3(session(), loc, ident),
         )
-    from file_scraper_spark.sources.fs import scrape_fs_rdd  # noqa: PLC0415
+    from file_scraper_spark.sources.fs import scrape_fs_batch  # noqa: PLC0415
 
     ident = identifier or default_fs_identifier(path)
     return Source(
         kind="fs",
         identifier=ident,
-        scrape=lambda spark: scrape_fs_rdd(
-            spark, path, ident, created_from_stat=created_from_stat
+        scrape=lambda session: scrape_fs_batch(
+            session, path, ident, created_from_stat=created_from_stat
         ),
     )

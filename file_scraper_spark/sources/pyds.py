@@ -7,28 +7,33 @@ that exposes the listing as pluggable sources:
 
 Design for scale (the part that matters at a 100 TB tree):
 
-- :func:`plan_shards` runs on the DRIVER but does NOT walk the tree:
-  it lists the root's immediate children and shards them into input
+- :func:`plan_shards` runs on the DRIVER. It lists the tree breadth
+  first and runs on to the end while the tree has at most
+  ``DRIVER_WALK_MAX_ENTRIES`` entries; such a tree needs no executor
+  at all (Spark's ``InMemoryFileIndex`` lists small inputs on the
+  driver for the same reason). Past the cap it stops and shards what
+  it has, listed files and unlisted directories, into input
   partitions (the prefix-sharding strategy of S3 listers —
   ListObjectsV2 with delimiter '/' then fan out per prefix,
-  src/s3.rs:87-100 is the single-worker version of this). Only when
-  the root has fewer children than the target shard count does it
-  descend, one directory at a time, until there are enough entries.
-- :func:`walk_shard` runs on EXECUTORS and does the recursive walk +
-  stat for its shard — the expensive, embarrassingly-parallel part.
-  Equivalent to the reference's intra-batch concurrent stat
-  (src/fs.rs:85-89), but across machines. The walk's one `lstat` per
-  entry yields every column, `created` included.
+  src/s3.rs:87-100 is the single-worker version of this).
+- :func:`walk_shard` does the recursive walk + stat of a list of
+  entries: on EXECUTORS, one shard each, for a tree above the cap —
+  the expensive, embarrassingly-parallel part, equivalent to the
+  reference's intra-batch concurrent stat (src/fs.rs:85-89) but across
+  machines — or on the driver over a walked plan. The walk's one
+  `lstat` per entry yields every column, `created` included.
 
-The fs scrape (``sources.fs.scrape_fs_rdd``) and ``sources.fs.list_files``
-run the two functions through an RDD, with no Python planner process;
+The batch fs scrape (``sources.fs.scrape_fs_batch``) builds its rows on
+the driver when the plan is walked and ships the shards as one RDD
+otherwise; ``sources.fs.list_files`` and ``sources.fs.scrape_fs`` are
+lazy DataFrames over the RDD of shards, with no Python planner process;
 ``ListingReader`` is the ``pylisting`` adapter over the same two
 functions (its ``partitions()`` / ``read()``), so there is one listing
 implementation.
 
 The row schema (``SCHEMA``) is the reference's FileInfo
 (src/db.rs:10-18) minus external_source and mime_type, which the fs
-scrape adds in the same executor task (``sources.fs.file_infos``, with
+scrape adds in the same walk (``sources.fs.file_infos``, with
 the Python lookup ``sources.mime.mime_type``) and the streaming scrape
 in the JVM (``sources.mime.with_mime_type``). Timestamps are aware UTC
 datetimes built from the integer ``st_*_ns`` fields, truncated to
@@ -42,7 +47,7 @@ import os
 import stat as stat_mod
 from collections import deque
 from datetime import datetime, timedelta, timezone
-from typing import Iterator, Sequence
+from typing import Iterator, NamedTuple, Sequence
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -123,6 +128,33 @@ def check_created_mode(mode: str) -> str:
     return mode
 
 
+#: Trees with at most this many entries (files, directories and
+#: symlinks below the root) are walked on the driver to the end; a
+#: larger tree is sharded to executors. Set safely below the measured
+#: crossover of a warm driver walk and a warm RDD fetch (CHANGES.md:
+#: on 4 vCPUs the driver walk wins at 10k files and loses at 15k).
+DRIVER_WALK_MAX_ENTRIES = 10_000
+
+
+class ShardPlan(NamedTuple):
+    """What the driver's listing found: ``entries``, sorted, for
+    :func:`walk_shard`. ``walked`` means the listing reached the end of
+    the tree, so no entry is a directory left to descend (an unreadable
+    one is kept for the walk to skip) and the walk is one ``lstat`` per
+    entry."""
+
+    entries: list[str]
+    walked: bool
+
+    def shards(self, nparts: int) -> list[list[str]]:
+        """The entries round-robin in at most ``nparts`` lists (never
+        empty: a tree with no entries is one empty shard)."""
+        if not self.entries:
+            return [[]]
+        n = min(nparts, len(self.entries))
+        return [self.entries[i::n] for i in range(n)]
+
+
 def _scan_children(d: str) -> tuple[list[str], list[str]]:
     """(non-directories, directories) directly under ``d``; a symlink
     to a directory is a non-directory (never followed)."""
@@ -133,41 +165,44 @@ def _scan_children(d: str) -> tuple[list[str], list[str]]:
     return files, dirs
 
 
-def plan_shards(root: str, nparts: int) -> list[list[str]]:
-    """Driver-side: shard the root's immediate children round-robin
-    into at most ``nparts`` entry lists (never empty: a tree with no
-    entries is one empty shard).
+def plan_shards(root: str) -> ShardPlan:
+    """Driver-side, breadth-first listing of ``root``, one directory at
+    a time.
 
-    Subtree sizes are unknown and walking a 100 TB tree on the driver
-    is the anti-pattern, so descend (breadth-first, one directory at a
-    time) only while there are fewer entries than shards — a root
-    holding one directory would otherwise walk in one task."""
+    It runs on to the end of a tree of at most
+    ``DRIVER_WALK_MAX_ENTRIES`` entries (``walked``). It stops after the
+    directory whose listing passes the cap, so driver work stays
+    bounded on a huge tree; the entries listed so far and the
+    directories not yet listed are then shards for executor walks.
+    Finishing that directory keeps a tree whose entries sit below one
+    big directory (a root holding one directory, say) spread over every
+    shard rather than walked in one task."""
     if not os.path.isdir(root):
         os.stat(root)  # a missing root fails the scrape
-        return [[root]]  # WalkDir of a file: the file
+        return ShardPlan([root], True)  # WalkDir of a file: the file
     files, dirs = _scan_children(root)
-    pending, unreadable = deque(dirs), []
-    while pending and len(files) + len(unreadable) + len(pending) < nparts:
+    pending = deque(dirs)
+    count = len(files) + len(dirs)
+    while pending and count <= DRIVER_WALK_MAX_ENTRIES:
         d = pending.popleft()
         try:
             sub_files, sub_dirs = _scan_children(d)
         except OSError:
-            unreadable.append(d)  # the executor walk skips it
+            files.append(d)  # unreadable: the walk skips it
             continue
         files += sub_files
         pending.extend(sub_dirs)
-    entries = sorted(files + unreadable + list(pending))
-    if not entries:
-        return [[]]
-    n = min(nparts, len(entries))
-    return [entries[i::n] for i in range(n)]
+        count += len(sub_files) + len(sub_dirs)
+    walked = not pending and count <= DRIVER_WALK_MAX_ENTRIES
+    return ShardPlan(sorted(files + list(pending)), walked)
 
 
 def walk_shard(
     entries: Sequence[str], created: str = "stat", pattern: str = "*"
 ) -> Iterator[tuple]:
-    """Executor-side: recursive walk + stat of one shard, yielding
-    SCHEMA rows for the regular files whose name matches ``pattern``.
+    """Recursive walk + stat of ``entries`` (one shard on an executor,
+    or a walked plan on the driver), yielding SCHEMA rows for the
+    regular files whose name matches ``pattern``.
 
     Per-entry anomalies are TOLERATED, not fatal (parity with the
     reference walk's filter_map_ok, src/fs.rs:88): a file deleted
@@ -230,7 +265,7 @@ class ListingReader(DataSourceReader):
         self.created = check_created_mode(options.get("created", "stat"))
 
     def partitions(self) -> Sequence[InputPartition]:
-        return [_Shard(s) for s in plan_shards(self.root, self.nparts)]
+        return [_Shard(s) for s in plan_shards(self.root).shards(self.nparts)]
 
     def read(self, partition: _Shard) -> Iterator[tuple]:
         return walk_shard(partition.entries, self.created, self.pattern)

@@ -135,3 +135,73 @@ def test_cli_stores_utc_under_a_local_time_zone(tmp_path):
         tmp_path, env={**os.environ, "TZ": "America/New_York"}
     )
     assert got == expect
+
+
+_SPARK_PROBE = """
+import json, sys
+from pyspark import SparkContext
+from file_scraper_spark import session
+from file_scraper_spark.__main__ import main
+from file_scraper_spark.sources import pyds
+
+started = []
+real_get_spark = session.get_spark
+session.get_spark = lambda *a, **k: started.append(real_get_spark(*a, **k)) or started[-1]
+if sys.argv[1] != "-":
+    pyds.DRIVER_WALK_MAX_ENTRIES = int(sys.argv[1])
+rc = main(sys.argv[2:])
+print(json.dumps({
+    "rc": rc,
+    "started": len(started),
+    "stopped": all(s.sparkContext._jsc is None for s in started),
+    "active": SparkContext._active_spark_context is not None,
+    "jvm": SparkContext._gateway is not None,
+}))
+"""
+
+
+def _cli_spark_use(cap: str, *args) -> dict:
+    """Run the CLI's ``main`` in a fresh interpreter (``cap`` "-" keeps
+    ``pyds.DRIVER_WALK_MAX_ENTRIES``) and report whether it started
+    Spark and whether the session was stopped by exit."""
+    import json
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [sys.executable, "-c", _SPARK_PROBE, cap, *args],
+        capture_output=True, text=True, timeout=240, cwd=repo,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    return json.loads(r.stdout.strip().splitlines()[-1])
+
+
+def test_cli_small_tree_starts_no_spark(tmp_path):
+    """A tree under the driver-walk cap is scraped with no SparkContext
+    and no JVM, and stores the same rows as a scrape through Spark."""
+    from tests.test_sources import _edge_case_tree, _external_file
+
+    tree = tmp_path / "tree"
+    _edge_case_tree(tree)
+    small, big = str(tmp_path / "small.duckdb"), str(tmp_path / "big.duckdb")
+    args = (str(tree), "--identifier", "t")
+    got = _cli_spark_use("-", *args, "--database", small)
+    assert got == {"rc": 0, "started": 0, "stopped": True,
+                   "active": False, "jvm": False}
+    got = _cli_spark_use("0", *args, "--database", big)
+    assert got == {"rc": 0, "started": 1, "stopped": True,
+                   "active": False, "jvm": True}
+    rows = _external_file(small)
+    assert len(rows) == 7
+    assert rows == _external_file(big)
+
+
+def test_cli_streaming_starts_and_stops_spark(tmp_path):
+    tree = tmp_path / "t"
+    tree.mkdir()
+    (tree / "a.txt").write_text("x")
+    got = _cli_spark_use(
+        "-", str(tree), "--streaming", "--database", str(tmp_path / "s.duckdb")
+    )
+    assert got == {"rc": 0, "started": 1, "stopped": True,
+                   "active": False, "jvm": True}

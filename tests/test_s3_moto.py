@@ -204,7 +204,7 @@ def test_s3a_dispatch_applies_env_conf(spark, monkeypatch):
     src = source_for_path("s3://bkt/prefix")
     assert src.kind == "s3"
     with pytest.raises(Exception):
-        src.scrape(spark).collect()
+        src.scrape(lambda: spark).collect()
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     assert hconf.get("fs.s3a.access.key") == "AKDISPATCH"
     assert hconf.get("fs.s3a.secret.key") == "SECDISPATCH"

@@ -224,7 +224,9 @@ def test_list_files_matches_pylisting_format(spark, tmp_path):
     rows = sorted(listed.collect())
     assert len(rows) == 7
     assert rows == sorted(via_format.collect())
-    shards = pyds.plan_shards(str(tmp_path), spark.sparkContext.defaultParallelism)
+    shards = pyds.plan_shards(str(tmp_path)).shards(
+        spark.sparkContext.defaultParallelism
+    )
     assert listed.rdd.getNumPartitions() == len(shards) > 1
 
 
@@ -243,56 +245,69 @@ def _external_file(db: str) -> list[tuple]:
 
 
 @pytest.mark.parametrize("created_from_stat", [True, False])
-def test_scrape_all_fs_is_one_job_without_sql(spark, tmp_path, created_from_stat):
-    """The batch fs scrape reaches the sink in one Spark job with no
-    Spark SQL execution (the rows are built and collected in Python),
-    and writes the same table as the DataFrame path,
-    sync_snapshot(scrape_fs(...))."""
+def test_scrape_all_fs_is_one_job_without_sql(
+    spark, tmp_path, monkeypatch, created_from_stat
+):
+    """The batch fs scrape runs no Spark SQL. Below
+    ``pyds.DRIVER_WALK_MAX_ENTRIES`` it runs no Spark job at all (the
+    driver walks the tree); above the cap (patched to 0 here) it
+    reaches the sink in exactly one job. Both write the same table as
+    the DataFrame path, sync_snapshot(scrape_fs(...))."""
     from datetime import datetime
 
     import duckdb
 
     from file_scraper_spark import pipeline
     from file_scraper_spark.sinks.merge_sink import MergeSink
+    from file_scraper_spark.sources import pyds
 
     root = str(tmp_path / "tree")
     _edge_case_tree(tmp_path / "tree")
     when = datetime(2024, 1, 1, 12)
-    rdd_db, df_db = str(tmp_path / "rdd.duckdb"), str(tmp_path / "df.duckdb")
+    df_db = str(tmp_path / "df.duckdb")
 
     sc = spark.sparkContext
     bus = sc._jsc.sc().listenerBus()
     store = spark._jsparkSession.sharedState().statusStore()
-    bus.waitUntilEmpty()
-    executions = store.executionsCount()
-    group = f"scrape_all_fs_{created_from_stat}"
-    sc.setJobGroup(group, group)
-    try:
-        pipeline.scrape_all(
-            spark, [root], MergeSink(lambda: duckdb.connect(rdd_db)),
-            identifier="t", scrape_time=when, created_from_stat=created_from_stat,
-        )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    bus.waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
-    assert store.executionsCount() == executions
+
+    def scrape_all(db: str) -> int:
+        """Jobs run by one scrape_all into ``db``, which runs no SQL."""
+        bus.waitUntilEmpty()
+        executions = store.executionsCount()
+        group = f"scrape_all_fs_{created_from_stat}_{db}"
+        sc.setJobGroup(group, group)
+        try:
+            pipeline.scrape_all(
+                spark, [root], MergeSink(lambda: duckdb.connect(db)),
+                identifier="t", scrape_time=when,
+                created_from_stat=created_from_stat,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        bus.waitUntilEmpty()
+        assert store.executionsCount() == executions
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    driver_db, rdd_db = str(tmp_path / "driver.duckdb"), str(tmp_path / "rdd.duckdb")
+    assert scrape_all(driver_db) == 0
+    monkeypatch.setattr(pyds, "DRIVER_WALK_MAX_ENTRIES", 0)
+    assert scrape_all(rdd_db) == 1
 
     df_sink = MergeSink(lambda: duckdb.connect(df_db))
     df_sink.ensure_target()
     df_sink.sync_snapshot(
         scrape_fs(spark, root, "t", created_from_stat=created_from_stat), "t", when
     )
-    got = _external_file(rdd_db)
+    got = _external_file(driver_db)
     assert len(got) == 7
     assert all((r[4] is not None) == created_from_stat for r in got)
-    assert got == _external_file(df_db)
+    assert got == _external_file(rdd_db) == _external_file(df_db)
 
 
 def test_listing_shards_below_single_child_root(tmp_path):
-    """A root whose only child is a directory is split at the first
-    level that has enough entries; no file is lost or duplicated."""
+    """A root whose only child is a directory still spreads over
+    several shards; no file is lost or duplicated."""
     import os
 
     from file_scraper_spark.sources.pyds import ListingReader
