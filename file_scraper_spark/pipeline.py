@@ -3,9 +3,9 @@
 ``scrape_all`` is the engine's equivalent of the reference CLI run:
 one independent scrape per path (A12 — the reference spawns one tokio
 task with its own DB pool per path, src/main.rs:44-65), scheme
-dispatch per path (A14), one sink transaction per scrape (A15), and
-fail-fast: the first error aborts the run, matching the reference's
-join_all error propagation (src/main.rs:61-65).
+dispatch per path (A14), one sink connection and transaction per
+scrape, which creates the target table if missing (A15), and fail-fast
+(src/main.rs:61-65: the first error aborts the run).
 
 An fs tree of at most ``pyds.DRIVER_WALK_MAX_ENTRIES`` entries is
 walked and projected on the driver, with no Spark job and no
@@ -41,7 +41,6 @@ def scrape_all(
     """Scrape every path into the sink; returns the identifiers used.
     ``spark`` is a session or a function that starts one on demand."""
     session = spark if callable(spark) else lambda: spark
-    sink.ensure_target()
     scrape_time = scrape_time or datetime.now(timezone.utc).replace(tzinfo=None)
     identifiers = []
     for path in paths:

@@ -20,16 +20,16 @@ snapshot DataFrame, faithfully reproducing the reference semantics
   no ``deleted IS NULL`` guard, already-deleted rows are re-stamped
   every scrape (src/db.rs:48-65).
 - **One transaction per scrape** (A15): everything between BEGIN and
-  COMMIT; any failure rolls back to the previous snapshot
-  (src/fs.rs:103-116).
+  COMMIT, starting with creating ``external_file`` if it is missing;
+  any failure rolls back to the previous snapshot (src/fs.rs:103-116).
 
 Scale design: the per-batch DB round-trip (the reference ships <=200
 rows as array params) becomes either (a) driver-batched staging of the
 whole snapshot held on the driver — rows the driver built itself, or
 one ``collect()``, a single Spark job that fetches every partition in
-parallel; each batch is
-staged by one multi-row ``INSERT ... VALUES (...), (...)`` (split to
-stay under Postgres's bind-parameter limit), not row-at-a-time; the
+parallel; each batch, whatever its size, is staged by one statement
+in the reference's column-array shape (src/db.rs:72-100): one bound
+array per FILE_COLUMNS entry, zipped into rows by ``unnest``; the
 default, for snapshots that fit there — or (b) executor-parallel
 staging *outside* the transaction (``sync_snapshot_parallel``),
 followed by the same single-transaction merge, for snapshots too large
@@ -50,7 +50,11 @@ before they leave Spark (:func:`file_columns`), because a collected
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable
+import shutil
+import tempfile
+from collections.abc import Callable, Iterable, Iterator
+from contextlib import contextmanager
+from itertools import islice
 from typing import Any
 
 from pyspark import RDD
@@ -68,11 +72,6 @@ FILE_COLUMNS = (
 )
 
 I64_MAX = 2**63 - 1
-
-#: Rows per staging INSERT: Postgres caps a statement at 65535 bind
-#: parameters, and each staged row binds one per FILE_COLUMNS entry.
-STAGE_ROWS_PER_STATEMENT = 65535 // len(FILE_COLUMNS)
-_STAGE_ROW = "(" + ", ".join("?" * len(FILE_COLUMNS)) + ")"
 
 TARGET_DDL = """
 CREATE SEQUENCE IF NOT EXISTS external_file_seq;
@@ -100,6 +99,15 @@ CREATE TEMPORARY TABLE IF NOT EXISTS staging_found (
     modified TIMESTAMP NOT NULL,
     size BIGINT
 );
+"""
+
+# The reference's UNNEST batch: both dialects zip a select's unnests.
+STAGE_SQL = """
+INSERT INTO staging_found
+SELECT unnest(CAST(? AS TEXT[])), unnest(CAST(? AS TEXT[])),
+       unnest(CAST(? AS TEXT[])), unnest(CAST(? AS TEXT[])),
+       unnest(CAST(? AS TIMESTAMP[])), unnest(CAST(? AS TIMESTAMP[])),
+       unnest(CAST(? AS BIGINT[]))
 """
 
 # No PRIMARY KEY on the seen-set scratch table: DuckDB's ART index has
@@ -179,6 +187,12 @@ def file_columns(found: DataFrame) -> DataFrame:
     ))
 
 
+def create_target(con: Any) -> None:
+    """Run TARGET_DDL on ``con``; the caller commits."""
+    for stmt in filter(str.strip, TARGET_DDL.split(";")):
+        con.execute(stmt)
+
+
 def clamp_size(size: int | None) -> int | None:
     """u64 -> i64 overflow becomes NULL, not an error (src/db.rs:85)."""
     if size is None or size > I64_MAX or size < -(2**63):
@@ -196,6 +210,9 @@ class ScrapeSession:
     This is the contract Structured Streaming's foreachBatch needs:
     many batches, still exactly one visible snapshot transition.
 
+    The transaction creates ``external_file`` if it is missing
+    (TARGET_DDL right after BEGIN), so a scrape needs one connection.
+
     ``paramstyle``: SQL here is written qmark-style; "format" rewrites
     placeholders to %s for psycopg.
     """
@@ -209,6 +226,7 @@ class ScrapeSession:
         self.scrape_time = scrape_time
         self._ph = "?" if paramstyle == "qmark" else "%s"
         con.execute("BEGIN")
+        create_target(con)
         con.execute(STAGING_DDL)
         con.execute(SEEN_DDL)
         con.execute("DELETE FROM staging_found")
@@ -218,23 +236,19 @@ class ScrapeSession:
         return sql if self._ph == "?" else sql.replace("?", "%s")
 
     def add_rows(self, rows: Iterable[tuple]) -> None:
-        """Merge one batch: stage it with one multi-row INSERT per
-        STAGE_ROWS_PER_STATEMENT rows, then upsert and record seen."""
+        """Merge one batch: stage it with one STAGE_SQL statement (one
+        list per column), then upsert and record seen."""
         batch = [(*r[:6], clamp_size(r[6])) for r in rows]
-        if not batch:
-            return
-        for i in range(0, len(batch), STAGE_ROWS_PER_STATEMENT):
-            chunk = batch[i : i + STAGE_ROWS_PER_STATEMENT]
+        if batch:
             self.con.execute(
-                self._sql(
-                    "INSERT INTO staging_found VALUES "
-                    + ", ".join([_STAGE_ROW] * len(chunk))
-                ),
-                [v for r in chunk for v in r],
+                self._sql(STAGE_SQL), [list(c) for c in zip(*batch)]
             )
-        self.con.execute(UPSERT_SQL)
-        self.con.execute(SEEN_SQL)
-        self.con.execute("DELETE FROM staging_found")
+            self.merge_staged()
+
+    def merge_staged(self) -> None:
+        """Upsert ``staging_found``, record its ids as seen, empty it."""
+        for sql in (UPSERT_SQL, SEEN_SQL, "DELETE FROM staging_found"):
+            self.con.execute(sql)
 
     def finalize(self) -> None:
         self.con.execute(
@@ -265,11 +279,10 @@ class MergeSink:
         self.paramstyle = paramstyle
 
     def ensure_target(self) -> None:
+        """Create an empty target now (a scrape's transaction does too)."""
         con = self._connect()
         try:
-            for stmt in TARGET_DDL.split(";"):
-                if stmt.strip():
-                    con.execute(stmt)
+            create_target(con)
             con.commit()
         finally:
             con.close()
@@ -282,6 +295,22 @@ class MergeSink:
             paramstyle=self.paramstyle,
         )
 
+    @contextmanager
+    def transaction(
+        self, external_source: str, scrape_time
+    ) -> Iterator[ScrapeSession]:
+        """An open scrape, finalized if the block completes and aborted
+        if it raises; its connection is closed either way."""
+        session = self.open_scrape(external_source, scrape_time)
+        try:
+            yield session
+            session.finalize()
+        except Exception:
+            session.abort()
+            raise
+        finally:
+            session.con.close()
+
     # -- public API --------------------------------------------------------
 
     def sync_rows(
@@ -291,22 +320,10 @@ class MergeSink:
         scrape_time,
     ) -> None:
         """Merge an iterable of FILE_COLUMNS tuples as one snapshot."""
-        session = self.open_scrape(external_source, scrape_time)
-        try:
-            batch: list[tuple] = []
-            for row in rows:
-                batch.append(row)
-                if len(batch) >= self.batch_size:
-                    session.add_rows(batch)
-                    batch = []
-            if batch:
+        with self.transaction(external_source, scrape_time) as session:
+            it = iter(rows)
+            while batch := list(islice(it, self.batch_size)):
                 session.add_rows(batch)
-            session.finalize()
-        except Exception:
-            session.abort()
-            raise
-        finally:
-            session.con.close()
 
     def sync_snapshot(
         self,
@@ -353,9 +370,6 @@ class MergeSink:
         (A15) while the heavy row shipping is fully parallel, unlike
         the reference's 2-connection sink (src/db.rs:28).
         """
-        import shutil
-        import tempfile
-
         own_dir = staging_dir is None
         staging_dir = staging_dir or tempfile.mkdtemp(prefix="fss_stage_")
         try:
@@ -364,8 +378,7 @@ class MergeSink:
                 .write.mode("overwrite")
                 .parquet(staging_dir)
             )
-            session = self.open_scrape(external_source, scrape_time)
-            try:
+            with self.transaction(external_source, scrape_time) as session:
                 session.con.execute(
                     "INSERT INTO staging_found "
                     "SELECT external_source, path, filename, mime_type, "
@@ -376,15 +389,7 @@ class MergeSink:
                         staging_dir.replace("'", "''")
                     )
                 )
-                session.con.execute(UPSERT_SQL)
-                session.con.execute(SEEN_SQL)
-                session.con.execute("DELETE FROM staging_found")
-                session.finalize()
-            except Exception:
-                session.abort()
-                raise
-            finally:
-                session.con.close()
+                session.merge_staged()
         finally:
             if own_dir:
                 shutil.rmtree(staging_dir, ignore_errors=True)

@@ -4,11 +4,11 @@ Fallback for environments with Postgres client binaries but no Python
 driver (psycopg/pg8000): statements stream to one psql session,
 results come back field-separated with a sentinel per statement, and
 errors are raised from merged stderr. Parameters are substituted as
-escaped literals — correct for the sink's value types (str/num/
-datetime/None; single quotes doubled, backslashes are not special in
-standard-conforming Postgres strings) but not a general driver; prefer
-psycopg when installable. The MergeSink SQL itself is verified against
-real Postgres 15 in tests/test_merge_sink_postgres.py.
+escaped literals, lists as ``ARRAY[...]`` — correct for the sink's
+value types (str/num/datetime/None; single quotes doubled, backslashes
+are not special in standard-conforming Postgres strings) but not a
+general driver; prefer psycopg when installable. The MergeSink SQL is
+verified against real Postgres 15 in tests/test_merge_sink_postgres.py.
 """
 
 from __future__ import annotations
@@ -36,6 +36,8 @@ def quote_literal(v) -> str:
         return repr(v)
     if isinstance(v, (datetime, date)):
         return f"'{v.isoformat()}'"
+    if isinstance(v, list):
+        return "ARRAY[" + ", ".join(map(quote_literal, v)) + "]"
     s = str(v).replace("'", "''")
     return f"'{s}'"
 

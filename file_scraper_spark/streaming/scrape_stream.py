@@ -64,7 +64,6 @@ def scrape_stream(
     """
     identifier = identifier or default_fs_identifier(root)
     scrape_time = scrape_time or datetime.now(timezone.utc).replace(tzinfo=None)
-    sink.ensure_target()
 
     try:
         listed = (
@@ -107,28 +106,23 @@ def _fold_stream_into_sink(
     ``False`` drives with processAllAvailable + stop — the pattern
     the Python DataSource stream reader needs (its mtime-watermark
     source is unbounded, so availableNow semantics don't apply)."""
-    session = sink.open_scrape(identifier, scrape_time)
+    with sink.transaction(identifier, scrape_time) as session:
+        def merge_batch(batch_df: DataFrame, _epoch: int) -> None:
+            session.add_rows(file_columns(batch_df).collect())
 
-    def merge_batch(batch_df: DataFrame, _epoch: int) -> None:
-        session.add_rows(file_columns(batch_df).collect())
-
-    writer = found.writeStream.foreachBatch(merge_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    try:
+        writer = found.writeStream.foreachBatch(merge_batch)
         if available_now:
-            q.awaitTermination()
-        else:
-            q.processAllAvailable()
+            writer = writer.trigger(availableNow=True)
+        q = writer.start()
+        try:
+            if available_now:
+                q.awaitTermination()
+            else:
+                q.processAllAvailable()
+                q.stop()
+        except Exception:
             q.stop()
-        session.finalize()
-    except Exception:
-        q.stop()
-        session.abort()
-        raise
-    finally:
-        session.con.close()
+            raise
 
 
 def scrape_stream_pylisting(
@@ -151,7 +145,6 @@ def scrape_stream_pylisting(
 
     identifier = identifier or default_fs_identifier(root)
     scrape_time = scrape_time or datetime.now(timezone.utc).replace(tzinfo=None)
-    sink.ensure_target()
 
     pyds.register_stream(spark)
     listed = (

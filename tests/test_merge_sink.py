@@ -247,27 +247,29 @@ def test_sync_snapshot_fetches_in_one_job(db, spark):
     assert len(fetch(connect)) == 20
 
 
-def test_add_rows_splits_staging_inserts(db):
-    """A batch larger than one staging INSERT holds (the Postgres
-    bind-parameter limit) is staged by several multi-row statements
-    and merged exactly: inserts, updates and soft deletes."""
-    from file_scraper_spark.sinks.merge_sink import STAGE_ROWS_PER_STATEMENT
+class CountingConnection:
+    """A DB-API connection that counts the statements staging a batch
+    and records their parameters."""
 
+    def __init__(self, con):
+        self.con, self.staged = con, []
+
+    def execute(self, sql, params=None):
+        if sql.lstrip().startswith("INSERT INTO staging_found"):
+            self.staged.append(params)
+        return self.con.execute(sql, params)
+
+    def __getattr__(self, name):
+        return getattr(self.con, name)
+
+
+def test_add_rows_stages_a_batch_in_one_statement(db):
+    """A batch larger than the old multi-row INSERT split (65535 // 7 =
+    9362 rows) is staged by exactly one statement binding one list per
+    column, and merged exactly: inserts, updates and soft deletes."""
     sink, connect = db
-    n = STAGE_ROWS_PER_STATEMENT + 10
+    n = 9362 + 10
     sink.sync_rows([row(filename=f"f{i}") for i in range(n)], SRC, T1)
-
-    class CountingConnection:
-        def __init__(self, con):
-            self.con, self.staged = con, 0
-
-        def execute(self, sql, params=None):
-            if sql.startswith("INSERT INTO staging_found VALUES"):
-                self.staged += 1
-            return self.con.execute(sql, params)
-
-        def __getattr__(self, name):
-            return getattr(self.con, name)
 
     # second scrape: f0..f4 dropped, every 1000th file grown, 20 new
     batch = [
@@ -279,7 +281,8 @@ def test_add_rows_splits_staging_inserts(db):
     session.add_rows(batch)
     session.finalize()
     counting.close()
-    assert counting.staged == 2
+    assert len(counting.staged) == 1
+    assert [len(col) for col in counting.staged[0]] == [len(batch)] * 7
 
     rows = {r[2]: r for r in fetch(connect)}
     assert len(rows) == n + 20
@@ -287,3 +290,85 @@ def test_add_rows_splits_staging_inserts(db):
         r = rows[f"f{i}"]
         assert r[7] == (T2 if i < 5 else None), r
         assert r[6] == (11 if i % 1000 == 0 and i >= 5 else 10), r
+
+
+def _tree(root, n=5):
+    root.mkdir()
+    for i in range(n):
+        (root / f"f{i}.txt").write_text("x" * i)
+    return str(root)
+
+
+def _no_session():
+    raise AssertionError("a driver-walked tree asked for a SparkSession")
+
+
+def _no_ensure_target(self):
+    raise AssertionError("ensure_target called")
+
+
+def test_scrape_all_opens_one_connection(tmp_path):
+    """A scrape of a driver-walked tree opens one sink connection: its
+    transaction creates the target, with no separate setup connection."""
+    from file_scraper_spark.pipeline import scrape_all
+
+    path = str(tmp_path / "sink.duckdb")
+    opened = []
+
+    def connect():
+        opened.append(path)
+        return duckdb.connect(path)
+
+    root = _tree(tmp_path / "tree")
+    scrape_all(_no_session, [root], MergeSink(connect), identifier="t")
+    assert len(opened) == 1
+    scrape_all(_no_session, [root], MergeSink(connect), identifier="t")
+    assert len(opened) == 2
+
+
+def test_first_scrape_creates_the_target(tmp_path, monkeypatch):
+    """A first scrape into an empty DuckDB file creates external_file
+    itself, without an ensure_target call."""
+    from file_scraper_spark.pipeline import scrape_all
+
+    monkeypatch.setattr(MergeSink, "ensure_target", _no_ensure_target)
+    path = str(tmp_path / "sink.duckdb")
+    connect = lambda: duckdb.connect(path)
+    scrape_all(
+        _no_session, [_tree(tmp_path / "tree")], MergeSink(connect),
+        identifier="t", scrape_time=T1,
+    )
+    got = fetch(connect, "filename, size, deleted")
+    assert got == [(f"f{i}.txt", i, None) for i in range(5)]
+
+
+#: Rows whose every nullable column is NULL, and names and sizes that a
+#: literal or array encoding could mangle (2**63 is stored as NULL).
+NULL_ROWS = [
+    ("nulls", "d", f"n{i}", None, None, datetime(2024, 1, 1, 0, 0, 0, i), None)
+    for i in range(3)
+]
+ODD_ROWS = [
+    ("odd", "d'q", "it's.txt", "text/plain", T0, T1, 1),
+    ("odd", "d\nl", "two\nlines", None, T0, T1, 0),
+    ("odd", "d", "a%20b?%s.txt", "text/plain", None, T1, 2**63 - 1),
+    ("odd", "dé", "ünï—✓.txt", None, datetime(2024, 5, 6, 7, 8, 9, 123456),
+     datetime(2024, 5, 6, 7, 8, 9, 654321), 2**63),
+]
+
+
+def expected(rows):
+    return sorted((*r[:6], clamp_size(r[6])) for r in rows)
+
+
+def test_edge_values_round_trip_exactly(tmp_path):
+    """All-NULL columns, quotes, newlines, %20, placeholders in names
+    and non-ASCII survive the array staging unchanged, into an empty
+    database."""
+    path = str(tmp_path / "sink.duckdb")
+    connect = lambda: duckdb.connect(path)
+    sink = MergeSink(connect)
+    sink.sync_rows(NULL_ROWS, "nulls", T1)
+    sink.sync_rows(ODD_ROWS, "odd", T1)
+    got = fetch(connect, ", ".join(FILE_COLUMNS))
+    assert sorted(got) == expected(NULL_ROWS + ODD_ROWS)

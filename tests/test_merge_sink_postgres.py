@@ -54,6 +54,21 @@ def db(cluster):
     return sink, cluster
 
 
+@pytest.fixture()
+def empty_db(cluster, monkeypatch):
+    """A database without external_file, and a sink whose
+    ensure_target fails if called."""
+    from tests.test_merge_sink import _no_ensure_target
+
+    admin = cluster.connect()
+    admin.execute("DROP TABLE IF EXISTS external_file")
+    admin.execute("DROP SEQUENCE IF EXISTS external_file_seq")
+    admin.commit()
+    admin.close()
+    monkeypatch.setattr(MergeSink, "ensure_target", _no_ensure_target)
+    return MergeSink(cluster.connect, paramstyle="format"), cluster
+
+
 def fetch(cluster):
     con = cluster.connect()
     try:
@@ -162,3 +177,81 @@ def test_rollback_on_failure_pg(db):
     rows = fetch(cluster)
     assert [r[1] for r in rows] == ["a.txt"]
     assert rows[0][4] is None
+
+
+def fetch_exact(cluster):
+    """Every FILE_COLUMNS value as Python would write it: text columns
+    read as hex of their bytes (a newline would split the shim's
+    line-oriented output), timestamps and sizes as text."""
+    text = "encode(textsend({}), 'hex')".format
+    con = cluster.connect()
+    try:
+        con.execute(
+            f"SELECT {text('external_source')}, {text('path')}, "
+            f"{text('filename')}, {text('mime_type')}, created::text, "
+            "modified::text, size::text FROM external_file"
+        )
+        rows = con.fetchall()
+    finally:
+        con.close()
+    return sorted(
+        tuple(
+            bytes.fromhex(v).decode() if v is not None and i < 4 else v
+            for i, v in enumerate(r)
+        )
+        for r in rows
+    )
+
+
+def as_text(rows):
+    return sorted(
+        tuple(None if v is None else str(v) if i >= 4 else v
+              for i, v in enumerate(r))
+        for r in rows
+    )
+
+
+def test_first_scrape_creates_target_pg(empty_db):
+    """A first scrape into a database without external_file creates
+    it inside its own transaction; no ensure_target call."""
+    sink, cluster = empty_db
+    sink.sync_rows([row(filename="a.txt"), row(filename="b.txt")], SRC, T1)
+    assert [r[1] for r in fetch(cluster)] == ["a.txt", "b.txt"]
+
+
+def test_edge_values_round_trip_pg(empty_db):
+    """The DuckDB round-trip cases on Postgres 15: all-NULL columns,
+    quotes, newlines, %20, placeholders and non-ASCII in names, and a
+    size of 2**63 stored as NULL, staged as ARRAY literals."""
+    from tests.test_merge_sink import NULL_ROWS, ODD_ROWS, expected
+
+    sink, cluster = empty_db
+    sink.sync_rows(NULL_ROWS, "nulls", T1)
+    sink.sync_rows(ODD_ROWS, "odd", T1)
+    assert fetch_exact(cluster) == as_text(expected(NULL_ROWS + ODD_ROWS))
+
+
+def test_large_batch_one_statement_pg(empty_db):
+    """A batch above the old 9362-row split is staged by one statement
+    on Postgres too, and merges exactly."""
+    from tests.test_merge_sink import CountingConnection
+
+    sink, cluster = empty_db
+    n = 9362 + 10
+    sink.sync_rows([row(filename=f"f{i:05}") for i in range(n)], SRC, T1)
+
+    counting = CountingConnection(cluster.connect())
+    MergeSink(
+        lambda: counting, batch_size=n + 20, paramstyle="format"
+    ).sync_rows(
+        [row(filename=f"f{i:05}", size=11 if i % 1000 == 0 else 10)
+         for i in range(5, n + 20)],
+        SRC, T2,
+    )
+    assert [[len(col) for col in p] for p in counting.staged] == [[n + 15] * 7]
+    rows = {r[1]: r for r in fetch(cluster)}
+    assert len(rows) == n + 20
+    for i in range(n + 20):
+        r = rows[f"f{i:05}"]
+        assert (r[4] is not None) == (i < 5), r
+        assert r[3] == ("11" if i % 1000 == 0 and i >= 5 else "10"), r

@@ -59,3 +59,27 @@ def test_placeholder_count_mismatch_raises():
     with pytest.raises(PsqlError, match="2 placeholders for 1 parameters"):
         con.execute("INSERT INTO t VALUES (?, ?)", ("a",))
     assert sent == []
+
+
+def test_list_parameters_become_array_literals():
+    """A list binds as ``ARRAY[...]`` of element literals, the form the
+    sink's column-array staging sends; placeholder characters inside
+    elements are not substituted."""
+    con, sent = _stub_connection()
+    con.execute(
+        "SELECT unnest(CAST(%s AS TEXT[])), unnest(CAST(%s AS TIMESTAMP[])), "
+        "unnest(CAST(%s AS BIGINT[])), unnest(CAST(%s AS TEXT[]))",
+        (
+            ["it's", "50%s?", None],
+            [datetime(2024, 1, 2, 3, 4, 5, 6), None, datetime(2024, 1, 2)],
+            [0, None, 2**63 - 1],
+            [None, None, None],
+        ),
+    )
+    assert sent == [
+        "SELECT unnest(CAST(ARRAY['it''s', '50%s?', NULL] AS TEXT[])), "
+        "unnest(CAST(ARRAY['2024-01-02T03:04:05.000006', NULL, "
+        "'2024-01-02T00:00:00'] AS TIMESTAMP[])), "
+        "unnest(CAST(ARRAY[0, NULL, 9223372036854775807] AS BIGINT[])), "
+        "unnest(CAST(ARRAY[NULL, NULL, NULL] AS TEXT[]))"
+    ]
