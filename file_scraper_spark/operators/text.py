@@ -12,6 +12,8 @@ arithmetic on them — bit-identical across engines (see registry.py).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -2756,7 +2758,7 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: fixture-frequent query phrase (7 corpus occurrences at sf0.01) —
-#: three consecutive tokens, matched via positional postings.
+#: three consecutive ``split(text, ' ')`` tokens.
 PHRASE = ("row", "column", "sort")
 
 
@@ -2788,60 +2790,59 @@ _PHRASE_ORACLE = f"""
     tags=("text", "search"),
 )
 def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact phrase search ("row column sort") via positional
-    posting lists — the inverted-index primitive behind quoted-phrase
-    retrieval and the contamination scanner's exact-span matching
-    (dedup_exact_substring finds SHARED spans corpus-wide; this finds
-    a GIVEN span, the serving-side analog). Emits matching docs with
-    occurrence count and the first match's 0-based token offset (the
-    snippet anchor).
+    """Exact phrase search ("row column sort") — the serving-side
+    analog of dedup_exact_substring's shared-span mining. Emits
+    matching docs with occurrence count and the first match's 0-based
+    token offset (the snippet anchor).
 
-    Plan: posexplode to (doc_id, pos, token) postings, filtered to
-    the query's three terms BEFORE anything shuffles — the posting
-    list for a query term is corpus-frequency-sized, not corpus-sized
-    (and in a deployed index it's a pre-built table bucketed by term,
-    read without a scan at all; same deployment evolution as
-    dedup_incremental_indexed). Adjacency = two equi-joins on
-    (doc_id, pos+offset) — posting-list intersection with position
-    arithmetic, the textbook evaluation — then one groupBy(doc_id)
-    with map-side combine. Rarest-term-first ordering is the classic
-    optimizer lever; here all three postings prune equally and AQE
-    sizes the join sides at runtime."""
-    docs = load(spark, sf_dir, "documents")
-    postings = (
-        docs.select(
-            "doc_id", F.posexplode(_words()).alias("pos", "w")
+    Plan: a pure scan like text_search_boolean — one codegen stage,
+    no shuffle, join, explode or Python; posting-list intersection is
+    the indexed twin's plan. Tokens are ``split(text, ' ')``, so with
+    the text padded by one space each side, a hit is the phrase with
+    a space on both sides. The ``contains`` filter reaches the parquet
+    scan; ``n_matches`` counts ``(?<= )row column sort(?= )``, whose
+    zero-width lookarounds let back-to-back phrases share a space;
+    ``first_pos`` counts the spaces before the first hit. The prefix
+    comes from ``substring_index`` (characters): a ``regexp_instr``
+    offset counts UTF-16 units and drifts past astral characters."""
+    needle = " ".join(PHRASE)
+    padded = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
+    hit_re = "(?<= )" + " ".join(re.escape(t) for t in PHRASE) + "(?= )"
+    prefix = F.substring_index(padded, f" {needle} ", 1)
+    n_spaces = F.length(prefix) - F.length(F.replace(prefix, F.lit(" ")))
+    return (
+        load(spark, sf_dir, "documents")
+        .filter(F.col("text").contains(needle))
+        .select(
+            "doc_id",
+            F.regexp_count(padded, F.lit(hit_re)).cast("long").alias("n_matches"),
+            n_spaces.cast("long").alias("first_pos"),
         )
-        .filter(F.col("w").isin(*PHRASE))
-        .localCheckpoint(eager=False)
+        .filter(F.col("n_matches") > 0)
     )
-    return _phrase_eval(postings)
 
 
 def _phrase_eval(postings: DataFrame) -> DataFrame:
     """Positional intersection of (doc_id, pos, w) postings for
-    PHRASE — shared by the scan-backed and index-backed variants."""
+    PHRASE — text_phrase_search_indexed's plan."""
     p = [
-        postings.filter(F.col("w") == term).select(
-            "doc_id", F.col("pos").alias(f"pos{i}")
-        )
+        postings.filter(F.col("w") == term)
+        .select("doc_id", F.col("pos").alias(f"pos{i}"))
+        .alias(f"p{i}")
         for i, term in enumerate(PHRASE)
     ]
     # position arithmetic lives IN the join condition so Catalyst
     # extracts (doc_id, pos+k) as hash-join keys — a post-join filter
     # would degrade to a doc_id-only join materializing tf1 x tf2
-    # pairs per document.
-    j1 = p[0].join(
-        p[1],
-        (p[0]["doc_id"] == p[1]["doc_id"])
-        & (p[1]["pos1"] == p[0]["pos0"] + 1),
-    ).select(p[0]["doc_id"].alias("doc_id"), "pos0")
-    hits = j1.join(
-        p[2],
-        (j1["doc_id"] == p[2]["doc_id"])
-        & (p[2]["pos2"] == j1["pos0"] + 2),
-    ).select(j1["doc_id"].alias("doc_id"), "pos0")
-    return hits.groupBy("doc_id").agg(
+    # pairs per document. Side aliases keep the doc_id keys apart.
+    hits = p[0]
+    for k in range(1, len(PHRASE)):
+        hits = hits.join(
+            p[k],
+            (F.col("p0.doc_id") == F.col(f"p{k}.doc_id"))
+            & (F.col(f"pos{k}") == F.col("pos0") + k),
+        )
+    return hits.groupBy(F.col("p0.doc_id").alias("doc_id")).agg(
         F.count(F.lit(1)).cast("long").alias("n_matches"),
         F.min("pos0").cast("long").alias("first_pos"),
     )
@@ -2920,25 +2921,20 @@ def _phrase_index(spark: SparkSession, sf_dir: str) -> str:
 def text_phrase_search_indexed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """text_phrase_search's DEPLOYMENT shape — the maintained-table
-    evolution the scan variant's docstring promises (same move
+    """text_phrase_search's DEPLOYMENT shape (the move
     dedup_incremental_indexed made for the shingle index): positional
     postings live in a warehouse table PARTITIONED BY md5 term bucket
     (64 buckets — bounded directory count at any vocabulary size),
     built once per corpus change; the serving path reads ONLY the
     phrase terms' buckets via partition pruning (plan-pinned:
     PartitionFilters on ``kb``, no documents scan, no tokenize) and
-    runs the identical positional intersection (_phrase_eval, shared
-    code). Same oracle as the scan variant — one spec, two physical
-    strategies; the gate proves the index path returns byte-identical
-    results.
+    intersects them by position (_phrase_eval). Same oracle as the
+    scan variant — one spec, two physical strategies.
 
     Cost split at 100 TB: the index build is the one corpus-sized
-    pass (tokenize + explode + partitioned write, amortized across
-    every query); each phrase query then touches ~|phrase|/64 of the
-    index and shuffles only those postings. The partition key is the
-    HASHED term, not the term: directory count stays 64 while the
-    prune factor stays ~95% for short phrases."""
+    pass, amortized across every query; each phrase query then
+    touches ~|phrase|/64 of the index and shuffles only those
+    postings, where the scan variant reads every document's text."""
     name = _phrase_index(spark, sf_dir)
     buckets = sorted({_term_bucket(t) for t in PHRASE})
     postings = (

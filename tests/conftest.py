@@ -11,6 +11,7 @@ from file_scraper_spark.session import get_spark
 
 SF_DIR_SMOKE = "/root/testdata/sf0.001"
 SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+SF_DIR_SMOKE = os.environ.get("SPARK_GRAFT_TEST_SMOKE_DIR", SF_DIR_SMOKE)
 #: fixtures through which a test reaches the parquet fixture directory
 FIXTURE_USERS = frozenset({"spark", "sf_dir", "smoke_dir"})
 
@@ -21,7 +22,9 @@ def pytest_collection_modifyitems(config, items):
     repo). On hosts without it — e.g. a bare CI runner — skip the tests
     that request one of ``FIXTURE_USERS`` rather than fail at the first
     load(); fixture-free tests still run. Point SPARK_GRAFT_TEST_SF_DIR
-    at a fixture to opt back in."""
+    (oracle suites) and SPARK_GRAFT_TEST_SMOKE_DIR (smoke suites) at a
+    fixture to opt back in, or at a missing directory to see what a
+    runner without the fixture runs."""
     missing = [d for d in (SF_DIR_SMOKE, SF_DIR_ORACLE) if not os.path.isdir(d)]
     if missing:
         skip = pytest.mark.skip(

@@ -1208,16 +1208,19 @@ def test_collocations_pmi_plan(spark, sf_dir):
     assert plan.count("BroadcastNestedLoopJoin") <= 1
 
 
-def test_phrase_search_postings_join_on_position(spark, sf_dir):
-    """text_phrase_search: adjacency must ride IN the hash-join keys
-    ((doc_id, pos+k) equi-joins), never as a post-join filter over a
-    doc_id-only join (that materializes tf1 x tf2 position pairs per
-    document). So: hash joins present, no nested-loop join, and no
-    join that is keyed on doc_id alone — every join key list carries
-    a pos term."""
+def test_phrase_search_is_scan_only(spark, sf_dir):
+    """text_phrase_search over the raw corpus is one codegen stage
+    over the scan: no shuffle (Exchange), no posting join, no
+    posexplode Generate, no checkpoint RDD scan — and the phrase's
+    ``contains`` prefilter reaches parquet as StringContains."""
     plan = plan_of("text_phrase_search", spark, sf_dir)
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
+    assert "Exchange" not in plan
+    assert "Join" not in plan
+    assert "Generate" not in plan
+    assert "ExistingRDD" not in plan
+    assert "*(" in plan
+    m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
+    assert m and "StringContains(text,row column sort)" in m.group(1), plan
 
 
 def test_boolean_search_is_scan_only(spark, sf_dir):

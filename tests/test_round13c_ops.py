@@ -149,6 +149,80 @@ def test_phrase_search_matches_python_scan(spark, sf_dir):
     assert got == expected
 
 
+#: token-boundary edge cases for the phrase queries: separators other
+#: than one space, near-miss tokens, NULL/empty text, and multi-byte
+#: characters (two-byte UTF-8, and astral emoji that take two UTF-16
+#: units each) ahead of the match.
+PHRASE_EDGE_TEXTS = [
+    "row column sort",
+    "row column sort row column sort",
+    "a b c row column sort",
+    "a  row column sort",
+    "row  column sort",
+    "xrow column sort",
+    "row column sorts",
+    "row column sort.",
+    "Row column sort",
+    "xrow column sort sorts row column sort. row column sort x",
+    "a\nrow column sort",
+    "row column sort\nb",
+    "x\ny row column sort",
+    "a\n row column sort",
+    None,
+    "",
+    "é row column sort",
+    "😀 😀 😀 😀 😀 row column sort",
+    "😀😀 🎉 row column sort z row column sort",
+    "row column sort q row column sort row column sort",
+]
+
+
+@pytest.mark.parametrize(
+    "name", ["text_phrase_search", "text_phrase_search_indexed"]
+)
+def test_phrase_search_edge_cases_match_oracle(spark, tmp_path, name):
+    """Both phrase queries equal their DuckDB oracle, and a Python
+    ``str.split(' ')`` scan, on a corpus of token-boundary edge cases
+    — the cases the generated fixtures never contain."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from file_scraper_spark.operators.text import PHRASE
+    from tools.check_correctness import duckdb_run, value_hash
+
+    texts = PHRASE_EDGE_TEXTS
+    d = str(tmp_path)
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(1, len(texts) + 1), pa.int64()),
+                "text": pa.array(texts, pa.string()),
+                "lang": pa.array(["en"] * len(texts), pa.string()),
+                "source": pa.array(["edge"] * len(texts), pa.string()),
+                "n_chars": pa.array(
+                    [len(t or "") for t in texts], pa.int64()
+                ),
+            }
+        ),
+        f"{d}/documents.parquet",
+    )
+    expected = {}
+    for doc_id, text in enumerate(texts, start=1):
+        ts = (text or "").split(" ")
+        hits = [i for i in range(len(ts) - 2) if tuple(ts[i : i + 3]) == PHRASE]
+        if hits:
+            expected[doc_id] = (len(hits), hits[0])
+    # spot values the scan must reproduce exactly
+    assert expected[2] == (2, 0) and expected[4] == (1, 2)
+    assert expected[18] == (1, 5) and expected[20] == (3, 0)
+
+    cols = ["doc_id", "n_matches", "first_pos"]
+    s_rows = [tuple(r) for r in R[name].fn(spark, d).select(*cols).collect()]
+    assert {r[0]: r[1:] for r in s_rows} == expected
+    d_cols, d_rows = duckdb_run(d, R[name].oracle)
+    assert value_hash(cols, s_rows) == value_hash(d_cols, d_rows)
+
+
 def test_cdc_chunking_is_shift_resistant(spark, tmp_path):
     """THE content-defined-chunking property: inserting one token
     near the head of a long document must leave the chunk-hash
