@@ -85,15 +85,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--verbose", "-v", action="store_true")
     args = p.parse_args(argv)
 
-    # Production/batch entry point: pin the data-dependent plan
-    # adaptations OFF so every plan built under the CLI is
-    # data-independent — exact-dup collapse runs unconditionally (the
-    # correct default on web corpora, 30-50% exact dups) and no eager
-    # probe job fires during plan construction. The query registry
-    # keeps "auto" (per-fixture adaptive). setdefault, so an operator
-    # can still override explicitly via the environment.
-    os.environ.setdefault("FSS_EXACT_COLLAPSE", "always")
-
     from file_scraper_spark.session import get_spark
     from file_scraper_spark.sinks.merge_sink import MergeSink
 

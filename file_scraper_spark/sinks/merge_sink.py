@@ -11,47 +11,39 @@ snapshot DataFrame, faithfully reproducing the reference semantics
   even NULL-vs-value with the rest equal) is NOT rewritten, and a
   manually-corrected mime_type survives (comment src/db.rs:88-90).
   ``deleted`` is never reset by an update (src/db.rs:112-117).
-- **Seen-set** (A9): surrogate ids of every file observed this scrape,
-  accumulated per batch into a temp table (src/db.rs:38-46) as
-  (changed-or-new RETURNING) UNION (join on source/filename/path/size,
-  src/db.rs:101-104).
-- **Soft delete** (A10): rows of this source not in the seen-set get
-  ``deleted = scrape_time`` — with the reference's re-stamp quirk:
+- **Seen-set** (A9): the keys staged this scrape. The reference
+  accumulates surrogate ids into a temp table (src/db.rs:38-46); here
+  the staged snapshot itself is the seen-set, so no second table.
+- **Soft delete** (A10): rows of this source whose key was not staged
+  get ``deleted = scrape_time`` — with the reference's re-stamp quirk:
   no ``deleted IS NULL`` guard, already-deleted rows are re-stamped
   every scrape (src/db.rs:48-65).
 - **One transaction per scrape** (A15): everything between BEGIN and
   COMMIT, starting with creating ``external_file`` if it is missing;
   any failure rolls back to the previous snapshot (src/fs.rs:103-116).
 
-Scale design: the per-batch DB round-trip (the reference ships <=200
-rows as array params) becomes either (a) driver-batched staging of the
-whole snapshot held on the driver — rows the driver built itself, or
-one ``collect()``, a single Spark job that fetches every partition in
-parallel; each batch, whatever its size, is staged by one statement
-in the reference's column-array shape (src/db.rs:72-100): one bound
-array per FILE_COLUMNS entry, zipped into rows by ``unnest``; the
-default, for snapshots that fit there — or (b) executor-parallel
-staging *outside* the transaction (``sync_snapshot_parallel``),
-followed by the same single-transaction merge, for snapshots too large
-for the driver; staging is truncated per scrape so a partial stage is
-retry-safe and the visible table still moves atomically between
-snapshots. The DB-side SQL is dialect-neutral (tested against DuckDB;
-targets Postgres).
+One sink shape: every batch is staged into the temp table
+``staging_found`` by one statement in the reference's column-array
+shape (src/db.rs:72-100) — one bound array per FILE_COLUMNS entry,
+zipped into rows by ``unnest``, plus the batch number — and the whole
+snapshot is merged once, at commit: one upsert of the last staged row
+per key, then one soft-delete anti-join against the staged keys: two
+statements per scrape whatever the batch count. The SQL is
+dialect-neutral (tested against DuckDB and Postgres 15).
 
-The snapshot reaches (a) as FILE_COLUMNS tuples from the fs source —
-a list when the driver walked a small tree (no Spark job), else an RDD
-of rows built in Python on the executors, collected with no Spark SQL
-on the path — or as a DataFrame (the S3 source, whose rows are made in
-the JVM). Timestamps are stored as naive UTC, like ``deleted``: a
-DataFrame's ``created``/``modified`` are cast to ``timestamp_ntz``
-before they leave Spark (:func:`file_columns`), because a collected
-``timestamp`` reads in the driver process's local time zone.
+The snapshot reaches the sink as FILE_COLUMNS tuples from the fs
+source — a list when the driver walked a small tree (no Spark job),
+else an RDD of rows built in Python on the executors, collected with
+no Spark SQL on the path — or as a DataFrame (the S3 source, whose
+rows are made in the JVM), or batch by batch from a streaming fold.
+Timestamps are stored as naive UTC, like ``deleted``: a DataFrame's
+``created``/``modified`` are cast to ``timestamp_ntz`` before they
+leave Spark (:func:`file_columns`), because a collected ``timestamp``
+reads in the driver process's local time zone.
 """
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 from collections.abc import Callable, Iterable, Iterator
 from contextlib import contextmanager
 from itertools import islice
@@ -97,43 +89,42 @@ CREATE TEMPORARY TABLE IF NOT EXISTS staging_found (
     mime_type TEXT,
     created TIMESTAMP,
     modified TIMESTAMP NOT NULL,
-    size BIGINT
+    size BIGINT,
+    batch BIGINT NOT NULL
 );
 """
 
-# The reference's UNNEST batch: both dialects zip a select's unnests.
+# The reference's UNNEST batch: both dialects zip a select's unnests;
+# the scalar batch number repeats on every row.
 STAGE_SQL = """
 INSERT INTO staging_found
 SELECT unnest(CAST(? AS TEXT[])), unnest(CAST(? AS TEXT[])),
        unnest(CAST(? AS TEXT[])), unnest(CAST(? AS TEXT[])),
        unnest(CAST(? AS TIMESTAMP[])), unnest(CAST(? AS TIMESTAMP[])),
-       unnest(CAST(? AS BIGINT[]))
+       unnest(CAST(? AS BIGINT[])), CAST(? AS BIGINT)
 """
 
-# No PRIMARY KEY on the seen-set scratch table: DuckDB's ART index has
-# a documented same-transaction delete-then-reinsert false-positive
-# ("duplicate key") — dedup is done logically in SEEN_SQL instead.
-SEEN_DDL = """
-CREATE TEMPORARY TABLE IF NOT EXISTS seen_external_file (
-    file_id BIGINT
-);
-"""
-
-# A8 upsert. The WHERE uses row-comparison `<>` (three-valued with
-# NULLs) exactly like the reference (src/db.rs:112-117). Deliberately
-# NO RETURNING: the reference pipes RETURNING into its seen-set
-# (src/db.rs:118), but DuckDB's upsert RETURNING emits a phantom row
-# (with a freshly-drawn, never-stored sequence id) even when the
-# conflict-update predicate is false — so the seen-set here is instead
-# built by SEEN_SQL's key join, which covers inserted, updated AND
-# no-op rows in one statement (semantically identical; the reference's
-# two-branch construction is preserved as the oracle-checked
-# `union_seen` query for parity).
+# A8 upsert, once per scrape, of the last staged row per key: a key
+# staged in two batches keeps its later observation, and no key is
+# upserted twice (Postgres rejects a key hitting ON CONFLICT twice in
+# one statement; DuckDB 1.0.0 stores garbage for a key upserted twice
+# in one transaction, NOTES.md). The WHERE uses
+# row-comparison `<>` (three-valued with NULLs) exactly like the
+# reference (src/db.rs:112-117). Deliberately NO RETURNING: the
+# reference pipes RETURNING into its seen-set (src/db.rs:118), but
+# DuckDB's upsert RETURNING emits a phantom row (with a freshly-drawn,
+# never-stored sequence id) even when the conflict-update predicate is
+# false — and every staged key is seen anyway, inserted, updated or
+# no-op, so SOFT_DELETE_SQL reads the staged keys instead (semantically
+# identical; the reference's two-branch construction is preserved as
+# the oracle-checked `union_seen` query for parity).
 UPSERT_SQL = """
 INSERT INTO external_file
     (external_source, path, filename, mime_type, created, modified, size)
-SELECT external_source, path, filename, mime_type, created, modified, size
+SELECT DISTINCT ON (external_source, path, filename)
+       external_source, path, filename, mime_type, created, modified, size
 FROM staging_found
+ORDER BY external_source, path, filename, batch DESC
 ON CONFLICT (external_source, path, filename) DO UPDATE
 SET mime_type = EXCLUDED.mime_type,
     created   = EXCLUDED.created,
@@ -153,26 +144,16 @@ WHERE (external_file.created  <> EXCLUDED.created)
 #   semantics identical across both dialects (caught by the
 #   hypothesis model test, tests/test_merge_model.py).
 
-# A9 seen-set: every staged key now exists in the target; record its id
-# once (NOT IN replaces the PK the scratch table no longer carries).
-SEEN_SQL = """
-INSERT INTO seen_external_file (file_id)
-SELECT t.file_id
-FROM external_file t
-JOIN staging_found s
-  ON t.external_source = s.external_source
- AND t.filename = s.filename
- AND t.path = s.path
-WHERE t.file_id NOT IN (SELECT file_id FROM seen_external_file)
-"""
-
-# A10 soft delete with the re-stamp quirk (no `deleted IS NULL` guard).
+# A10 soft delete with the re-stamp quirk (no `deleted IS NULL` guard):
+# an anti-join on the key against the staged snapshot, the seen-set.
 SOFT_DELETE_SQL = """
 UPDATE external_file SET deleted = ?
 WHERE external_source = ?
   AND NOT EXISTS (
-      SELECT 1 FROM seen_external_file seen
-      WHERE external_file.file_id = seen.file_id)
+      SELECT 1 FROM staging_found s
+      WHERE s.external_source = external_file.external_source
+        AND s.path = external_file.path
+        AND s.filename = external_file.filename)
 """
 
 
@@ -203,12 +184,17 @@ def clamp_size(size: int | None) -> int | None:
 class ScrapeSession:
     """One open scrape == one DB transaction (A15).
 
-    Batches of found files are merged incrementally (``add_rows`` per
-    micro-batch — the reference's per-batch record_files round-trip,
-    src/db.rs:67-136); ``finalize`` runs the soft-delete anti-join and
-    commits; any error (or ``abort``) rolls back the whole snapshot.
-    This is the contract Structured Streaming's foreachBatch needs:
-    many batches, still exactly one visible snapshot transition.
+    ``add_rows`` stages one batch of found files (the reference's
+    per-batch record_files round-trip, src/db.rs:67-136, minus its
+    merge); ``finalize`` merges everything staged — upsert, then the
+    soft-delete anti-join — and commits; any error (or ``abort``)
+    rolls back the whole snapshot. This is the contract Structured
+    Streaming's foreachBatch needs: many batches, still exactly one
+    visible snapshot transition.
+
+    A batch holds each key (source, path, filename) at most once;
+    every source's single listing pass guarantees it. A key observed
+    in two batches of one scrape is stored as its last observation.
 
     The transaction creates ``external_file`` if it is missing
     (TARGET_DDL right after BEGIN), so a scrape needs one connection.
@@ -225,32 +211,29 @@ class ScrapeSession:
         self.external_source = external_source
         self.scrape_time = scrape_time
         self._ph = "?" if paramstyle == "qmark" else "%s"
+        self._batches = 0
         con.execute("BEGIN")
         create_target(con)
         con.execute(STAGING_DDL)
-        con.execute(SEEN_DDL)
         con.execute("DELETE FROM staging_found")
-        con.execute("DELETE FROM seen_external_file")
 
     def _sql(self, sql: str) -> str:
         return sql if self._ph == "?" else sql.replace("?", "%s")
 
     def add_rows(self, rows: Iterable[tuple]) -> None:
-        """Merge one batch: stage it with one STAGE_SQL statement (one
-        list per column), then upsert and record seen."""
+        """Stage one batch with one STAGE_SQL statement: one list per
+        column, then the batch number."""
         batch = [(*r[:6], clamp_size(r[6])) for r in rows]
         if batch:
+            self._batches += 1
             self.con.execute(
-                self._sql(STAGE_SQL), [list(c) for c in zip(*batch)]
+                self._sql(STAGE_SQL),
+                [*(list(c) for c in zip(*batch)), self._batches],
             )
-            self.merge_staged()
-
-    def merge_staged(self) -> None:
-        """Upsert ``staging_found``, record its ids as seen, empty it."""
-        for sql in (UPSERT_SQL, SEEN_SQL, "DELETE FROM staging_found"):
-            self.con.execute(sql)
 
     def finalize(self) -> None:
+        """Merge the staged snapshot and commit."""
+        self.con.execute(UPSERT_SQL)
         self.con.execute(
             self._sql(SOFT_DELETE_SQL),
             (self.scrape_time, self.external_source),
@@ -331,7 +314,7 @@ class MergeSink:
         external_source: str,
         scrape_time,
     ) -> None:
-        """Merge a snapshot (driver-batched path): a list or an RDD of
+        """Merge a snapshot: a list or an RDD of
         FILE_COLUMNS tuples with naive-UTC timestamps, or a DataFrame
         with those columns.
 
@@ -340,56 +323,9 @@ class MergeSink:
         over all partitions in parallel (a ``toLocalIterator`` pull
         would run one job per partition, serially), before the
         transaction opens. The rows then go through :meth:`sync_rows`
-        batching. The whole snapshot is held on the driver: for
-        snapshots too large for it use :meth:`sync_snapshot_parallel`.
+        batching. The whole snapshot is held on the driver.
         """
         if isinstance(found, DataFrame):
             found = file_columns(found)
         rows = found if isinstance(found, list) else found.collect()
         self.sync_rows(rows, external_source, scrape_time)
-
-    def sync_snapshot_parallel(
-        self,
-        found: DataFrame,
-        external_source: str,
-        scrape_time,
-        staging_dir: str | None = None,
-    ) -> None:
-        """Executor-parallel staging path (the 100 TB shape).
-
-        Stage 1 — outside the transaction: every executor writes its
-        partitions of the snapshot to a staging location in parallel
-        (parquet here; for a Postgres target this is the JDBC append
-        into an UNLOGGED staging table). A partial stage is harmless:
-        it is replaced wholesale on retry and invisible to readers.
-
-        Stage 2 — ONE server-side transaction ingests the staged
-        snapshot (DuckDB reads the parquet directly; Postgres would
-        COPY) and runs the same upsert/seen/soft-delete statements —
-        so the visible table still moves atomically between snapshots
-        (A15) while the heavy row shipping is fully parallel, unlike
-        the reference's 2-connection sink (src/db.rs:28).
-        """
-        own_dir = staging_dir is None
-        staging_dir = staging_dir or tempfile.mkdtemp(prefix="fss_stage_")
-        try:
-            (
-                found.select(*FILE_COLUMNS)
-                .write.mode("overwrite")
-                .parquet(staging_dir)
-            )
-            with self.transaction(external_source, scrape_time) as session:
-                session.con.execute(
-                    "INSERT INTO staging_found "
-                    "SELECT external_source, path, filename, mime_type, "
-                    "       created, modified, "
-                    "       CASE WHEN size > 9223372036854775807 THEN NULL "
-                    "            ELSE CAST(size AS BIGINT) END "
-                    "FROM read_parquet('{}/*.parquet')".format(
-                        staging_dir.replace("'", "''")
-                    )
-                )
-                session.merge_staged()
-        finally:
-            if own_dir:
-                shutil.rmtree(staging_dir, ignore_errors=True)

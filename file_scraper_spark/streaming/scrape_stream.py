@@ -97,10 +97,11 @@ def _fold_stream_into_sink(
     scrape_time: datetime,
     available_now: bool,
 ) -> None:
-    """Fold every micro-batch of ``found`` (FileInfo rows) into ONE
-    open sink transaction; commit only after the stream drains, abort
-    on any failure — the one-visible-snapshot guarantee (A15) shared
-    by every streaming scrape source.
+    """Stage every micro-batch of ``found`` (FileInfo rows) in ONE
+    open sink transaction; merge and commit once, after the stream
+    drains, abort on any failure — the one-visible-snapshot guarantee
+    (A15) shared by every streaming scrape source. A file seen in two
+    micro-batches is stored as its later observation.
 
     ``available_now=True`` uses trigger(availableNow) (file sources);
     ``False`` drives with processAllAvailable + stop — the pattern

@@ -5,7 +5,9 @@ The model is ~30 lines of dict manipulation implementing: upsert with
 the row-comparison change predicate (three-valued NULL logic), mime
 preservation on no-op, scoped soft delete with re-stamping. Hypothesis
 drives random multi-scrape histories through both the model and the
-real DuckDB-backed sink and compares full table states.
+real DuckDB-backed sink and compares full table states. Each scrape is
+staged batch by batch; a key observed in two batches of one scrape is
+merged as its last observation.
 """
 
 from __future__ import annotations
@@ -27,46 +29,32 @@ SIZES = [1, 2, None]  # None models the u64-overflow NULL
 MIMES = [None, "text/plain", "image/png"]
 
 
-def file_row(draw):
-    return (
-        SRC,
-        "p",
-        draw(st.sampled_from(FILENAMES)),
-        draw(st.sampled_from(MIMES)),
-        None,  # created (S3-style NULL keeps NULL logic in play)
-        draw(st.sampled_from(MTIMES)),
-        draw(st.sampled_from(SIZES)),
-    )
-
-
-scrape_strategy = st.lists(
-    st.builds(lambda: None).flatmap(lambda _: st.none()), max_size=0
-)
-
-
 @st.composite
-def history(draw):
-    n_scrapes = draw(st.integers(1, 4))
-    scrapes = []
-    for _ in range(n_scrapes):
-        names = draw(
-            st.lists(st.sampled_from(FILENAMES), unique=True, max_size=4)
+def batch(draw):
+    """One staged batch: each name at most once."""
+    names = draw(st.lists(st.sampled_from(FILENAMES), unique=True, max_size=4))
+    return [
+        (
+            SRC,
+            "p",
+            name,
+            draw(st.sampled_from(MIMES)),
+            None,  # created (S3-style NULL keeps NULL logic in play)
+            draw(st.sampled_from(MTIMES)),
+            draw(st.sampled_from(SIZES)),
         )
-        rows = []
-        for name in names:
-            rows.append(
-                (
-                    SRC,
-                    "p",
-                    name,
-                    draw(st.sampled_from(MIMES)),
-                    None,
-                    draw(st.sampled_from(MTIMES)),
-                    draw(st.sampled_from(SIZES)),
-                )
-            )
-        scrapes.append(rows)
-    return scrapes
+        for name in names
+    ]
+
+
+# A history of 1-4 scrapes, each a list of 0-3 batches; a name may
+# repeat across the batches of one scrape.
+history = st.lists(st.lists(batch(), max_size=3), min_size=1, max_size=4)
+
+
+def last_per_key(batches: list[list[tuple]]) -> list[tuple]:
+    """A scrape's rows with each key's last observation only."""
+    return list({(r[1], r[2]): r for b in batches for r in b}.values())
 
 
 def model_sync(state: dict, rows: list[tuple], scrape_time) -> None:
@@ -103,7 +91,7 @@ def model_sync(state: dict, rows: list[tuple], scrape_time) -> None:
 
 @settings(max_examples=25, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
-@given(history())
+@given(history)
 def test_sink_matches_model(scrapes):
     con = duckdb.connect()  # in-memory, one connection for the whole run
     sink = MergeSink(lambda: con)
@@ -119,10 +107,13 @@ def test_sink_matches_model(scrapes):
     sink._connect = lambda: KeepOpen()
     sink.ensure_target()
     state: dict = {}
-    for i, rows in enumerate(scrapes):
+    for i, batches in enumerate(scrapes):
         t = T0 + timedelta(days=i + 1)
-        sink.sync_rows(rows, SRC, t)
-        model_sync(state, rows, t)
+        session = sink.open_scrape(SRC, t)
+        for rows in batches:
+            session.add_rows(rows)
+        session.finalize()
+        model_sync(state, last_per_key(batches), t)
 
     actual = {
         (r[0], r[1]): {

@@ -167,22 +167,21 @@ def test_transaction_rollback_on_failure(db):
     assert rows[0][7] is None  # a.txt not soft-deleted by the failed scrape
 
 
-def test_parallel_staging_path(db, spark, sf_dir):
-    # executor-parallel staging (parquet) -> single merge transaction;
-    # must be state-identical to the driver-batched path
-    from file_scraper_spark.sources.fs import scrape_fs
-
+def test_key_in_two_batches_keeps_last(db):
+    """A key staged in two batches of one scrape is merged as its last
+    observation; a repeat of the same row is stored as it is."""
     sink, connect = db
-    found = scrape_fs(spark, sf_dir, identifier="t")
-    sink.sync_snapshot_parallel(found, "t", T1)
-    rows1 = fetch(connect)
-    assert len(rows1) == 10 and all(r[7] is None for r in rows1)
-    # second parallel scrape of the same tree: all no-ops
-    sink.sync_snapshot_parallel(found, "t", T2)
-    assert fetch(connect) == rows1
-    # and it interoperates with the driver-batched path
-    sink.sync_snapshot(found, "t", T2)
-    assert fetch(connect) == rows1
+    sink.sync_rows([row(filename="a.txt"), row(filename="b.txt")], SRC, T1)
+    with sink.transaction(SRC, T2) as session:
+        session.add_rows([row(filename="a.txt", size=11, mime="x/first"),
+                          row(filename="c.txt", created=None)])
+        session.add_rows([row(filename="a.txt", size=12, mime="x/last"),
+                          row(filename="c.txt", created=None)])
+    rows = {r[2]: r for r in fetch(connect)}
+    assert rows["a.txt"][3] == "x/last" and rows["a.txt"][6] == 12
+    assert rows["a.txt"][7] is None
+    assert rows["b.txt"][7] == T2
+    assert rows["c.txt"] == row(filename="c.txt", created=None) + (None,)
 
 
 def test_spark_dataframe_end_to_end(db, spark, sf_dir):
@@ -198,6 +197,7 @@ def test_spark_dataframe_end_to_end(db, spark, sf_dir):
     # second identical scrape: all no-ops, nothing deleted
     sink.sync_snapshot(found, "t", T2)
     assert all(r[7] is None for r in fetch(connect))
+    assert fetch(connect) == rows
 
 
 def test_rescrape_truncated_file_stays_live(db, spark, tmp_path):
@@ -266,7 +266,8 @@ class CountingConnection:
 def test_add_rows_stages_a_batch_in_one_statement(db):
     """A batch larger than the old multi-row INSERT split (65535 // 7 =
     9362 rows) is staged by exactly one statement binding one list per
-    column, and merged exactly: inserts, updates and soft deletes."""
+    column and the batch number, and merged exactly: inserts, updates
+    and soft deletes."""
     sink, connect = db
     n = 9362 + 10
     sink.sync_rows([row(filename=f"f{i}") for i in range(n)], SRC, T1)
@@ -282,7 +283,9 @@ def test_add_rows_stages_a_batch_in_one_statement(db):
     session.finalize()
     counting.close()
     assert len(counting.staged) == 1
-    assert [len(col) for col in counting.staged[0]] == [len(batch)] * 7
+    *columns, batch_no = counting.staged[0]
+    assert [len(col) for col in columns] == [len(batch)] * 7
+    assert batch_no == 1
 
     rows = {r[2]: r for r in fetch(connect)}
     assert len(rows) == n + 20

@@ -131,6 +131,22 @@ def test_deleted_restamped_pg(db):
     assert first is not None and second is not None and first != second
 
 
+def test_key_in_two_batches_keeps_last_pg(db):
+    """Twin of the DuckDB cross-batch repeat: the key is merged as its
+    last observation, and Postgres' ON CONFLICT sees it once."""
+    sink, cluster = db
+    sink.sync_rows([row(filename="a.txt"), row(filename="b.txt")], SRC, T1)
+    with sink.transaction(SRC, T2) as session:
+        session.add_rows([row(filename="a.txt", size=11, mime="x/first"),
+                          row(filename="c.txt", created=None)])
+        session.add_rows([row(filename="a.txt", size=12, mime="x/last"),
+                          row(filename="c.txt", created=None)])
+    rows = {r[1]: r for r in fetch(cluster)}
+    assert rows["a.txt"][2:] == ("x/last", "12", None)
+    assert rows["b.txt"][4] is not None
+    assert rows["c.txt"][2:] == ("text/plain", "10", None)
+
+
 def test_cli_scrape_into_postgres(db, tmp_path):
     """Full reference parity: the CLI scrapes a filesystem tree into a
     real Postgres database addressed by a postgresql:// URL (psycopg
@@ -233,7 +249,8 @@ def test_edge_values_round_trip_pg(empty_db):
 
 def test_large_batch_one_statement_pg(empty_db):
     """A batch above the old 9362-row split is staged by one statement
-    on Postgres too, and merges exactly."""
+    (seven column lists and the batch number) on Postgres too, and
+    merges exactly."""
     from tests.test_merge_sink import CountingConnection
 
     sink, cluster = empty_db
@@ -248,7 +265,10 @@ def test_large_batch_one_statement_pg(empty_db):
          for i in range(5, n + 20)],
         SRC, T2,
     )
-    assert [[len(col) for col in p] for p in counting.staged] == [[n + 15] * 7]
+    assert [[len(col) for col in p[:7]] for p in counting.staged] == [
+        [n + 15] * 7
+    ]
+    assert [p[7] for p in counting.staged] == [1]
     rows = {r[1]: r for r in fetch(cluster)}
     assert len(rows) == n + 20
     for i in range(n + 20):

@@ -436,11 +436,11 @@ def test_editdistance_prunes_before_dp(spark, sf_dir):
 
 
 def test_collapse_always_builds_no_eager_job(spark, sf_dir, monkeypatch):
-    """The production pin (FSS_EXACT_COLLAPSE=always, set by the CLI
-    entry point): plan CONSTRUCTION must trigger zero Spark jobs — the
-    collapse branch is taken unconditionally, no adaptive dup-probe
-    action fires, so batch plans are data-independent (VERDICT r7
-    task #9). Asserted via a job group: any eager action during the
+    """The data-independent pin (FSS_EXACT_COLLAPSE=always, set in the
+    caller's environment): plan CONSTRUCTION must trigger zero Spark
+    jobs — the collapse branch is taken unconditionally, no adaptive
+    dup-probe action fires, so batch plans are data-independent
+    (VERDICT r7 task #9). Asserted via a job group: any eager action during the
     build would register a job id under the group."""
     from file_scraper_spark.operators.dedup import minhash_pairs
     from file_scraper_spark.tables import load
