@@ -4,15 +4,15 @@ Reference (src/main.rs:18-32): ``file-scraper PATH... [--identifier X]
 [--verbose]`` with the sink from ``$DATABASE_URL``. Here:
 
     python -m file_scraper_spark PATH... [--identifier X] [--verbose]
-        [--database URL|FILE.duckdb] [--streaming] [--master local[N]]
+        [--database URL|FILE.duckdb] [--master local[N]]
 
 Database resolution order: --database, then $DATABASE_URL, then an
 in-repo default duckdb file. postgresql:// URLs use psycopg if
 installed (not in this container — clearly reported); anything else is
 treated as a DuckDB path. One scrape transaction per path (A15);
 failures abort the run with a nonzero exit (src/main.rs:61-65). Spark
-starts only for an S3 path, ``--streaming`` or an fs tree too large for
-the driver to walk (``sources.pyds.DRIVER_WALK_MAX_ENTRIES``).
+starts only for an S3 path or an fs tree too large for the driver to
+walk (``sources.pyds.DRIVER_WALK_MAX_ENTRIES``).
 """
 
 from __future__ import annotations
@@ -68,13 +68,6 @@ def main(argv: list[str] | None = None) -> int:
         help="DB: .duckdb path or postgresql:// URL "
         "(default: $DATABASE_URL or ./file_scraper.duckdb)",
     )
-    p.add_argument(
-        "--streaming",
-        action="store_true",
-        help="incremental micro-batched scrape (Structured Streaming)",
-    )
-    p.add_argument("--batch-size", type=int, default=200,
-                   help="files per micro-batch in --streaming mode")
     p.add_argument("--master", default=None, help="Spark master override")
     p.add_argument(
         "--no-created-stat",
@@ -85,10 +78,11 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--verbose", "-v", action="store_true")
     args = p.parse_args(argv)
 
+    from file_scraper_spark.pipeline import scrape_all
     from file_scraper_spark.session import get_spark
     from file_scraper_spark.sinks.merge_sink import MergeSink
 
-    # Spark starts on first use: a batch fs tree the driver walks
+    # Spark starts on first use: an fs tree the driver walks
     # (pyds.DRIVER_WALK_MAX_ENTRIES) never needs it.
     spark = None
 
@@ -105,37 +99,13 @@ def main(argv: list[str] | None = None) -> int:
     scrape_time = datetime.now(timezone.utc).replace(tzinfo=None)
 
     try:
-        if args.streaming:
-            from file_scraper_spark.sources.url import parse_s3_url
-            from file_scraper_spark.streaming.scrape_stream import scrape_stream
-
-            for path in args.paths:
-                # same scheme dispatch as batch mode (A14): s3 URLs
-                # stream through the s3a filesystem with the s3-style
-                # default identifier
-                loc = parse_s3_url(path)
-                if loc is not None:
-                    root = f"s3a://{loc.bucket}/{loc.path}".rstrip("/")
-                    ident_default = loc.url
-                else:
-                    root, ident_default = path, None
-                ident = scrape_stream(
-                    session(), root, sink,
-                    identifier=args.identifier or ident_default,
-                    scrape_time=scrape_time,
-                    max_files_per_trigger=args.batch_size,
-                )
-                print(f"scraped (streaming) {path} as {ident!r}")
-        else:
-            from file_scraper_spark.pipeline import scrape_all
-
-            idents = scrape_all(
-                session, args.paths, sink,
-                identifier=args.identifier, scrape_time=scrape_time,
-                created_from_stat=not args.no_created_stat,
-            )
-            for path, ident in zip(args.paths, idents):
-                print(f"scraped {path} as {ident!r}")
+        idents = scrape_all(
+            session, args.paths, sink,
+            identifier=args.identifier, scrape_time=scrape_time,
+            created_from_stat=not args.no_created_stat,
+        )
+        for path, ident in zip(args.paths, idents):
+            print(f"scraped {path} as {ident!r}")
     except Exception as e:  # fail-fast, nonzero exit (src/main.rs:61-65)
         print(f"error: {e}", file=sys.stderr)
         return 1

@@ -25,17 +25,17 @@ snapshot DataFrame, faithfully reproducing the reference semantics
 One sink shape: every batch is staged into the temp table
 ``staging_found`` by one statement in the reference's column-array
 shape (src/db.rs:72-100) — one bound array per FILE_COLUMNS entry,
-zipped into rows by ``unnest``, plus the batch number — and the whole
-snapshot is merged once, at commit: one upsert of the last staged row
-per key, then one soft-delete anti-join against the staged keys: two
-statements per scrape whatever the batch count. The SQL is
-dialect-neutral (tested against DuckDB and Postgres 15).
+zipped into rows by ``unnest`` — and the whole snapshot is merged
+once, at commit: one upsert of the staged rows, then one soft-delete
+anti-join against the staged keys: two statements per scrape whatever
+the batch count. The SQL is dialect-neutral (tested against DuckDB and
+Postgres 15).
 
 The snapshot reaches the sink as FILE_COLUMNS tuples from the fs
 source — a list when the driver walked a small tree (no Spark job),
 else an RDD of rows built in Python on the executors, collected with
 no Spark SQL on the path — or as a DataFrame (the S3 source, whose
-rows are made in the JVM), or batch by batch from a streaming fold.
+rows are made in the JVM).
 Timestamps are stored as naive UTC, like ``deleted``: a DataFrame's
 ``created``/``modified`` are cast to ``timestamp_ntz`` before they
 leave Spark (:func:`file_columns`), because a collected ``timestamp``
@@ -89,26 +89,23 @@ CREATE TEMPORARY TABLE IF NOT EXISTS staging_found (
     mime_type TEXT,
     created TIMESTAMP,
     modified TIMESTAMP NOT NULL,
-    size BIGINT,
-    batch BIGINT NOT NULL
+    size BIGINT
 );
 """
 
-# The reference's UNNEST batch: both dialects zip a select's unnests;
-# the scalar batch number repeats on every row.
+# The reference's UNNEST batch: both dialects zip a select's unnests.
 STAGE_SQL = """
 INSERT INTO staging_found
 SELECT unnest(CAST(? AS TEXT[])), unnest(CAST(? AS TEXT[])),
        unnest(CAST(? AS TEXT[])), unnest(CAST(? AS TEXT[])),
        unnest(CAST(? AS TIMESTAMP[])), unnest(CAST(? AS TIMESTAMP[])),
-       unnest(CAST(? AS BIGINT[])), CAST(? AS BIGINT)
+       unnest(CAST(? AS BIGINT[]))
 """
 
-# A8 upsert, once per scrape, of the last staged row per key: a key
-# staged in two batches keeps its later observation, and no key is
-# upserted twice (Postgres rejects a key hitting ON CONFLICT twice in
-# one statement; DuckDB 1.0.0 stores garbage for a key upserted twice
-# in one transaction, NOTES.md). The WHERE uses
+# A8 upsert, once per scrape, of every staged row. A key is staged at
+# most once per scrape (ScrapeSession); one staged twice makes both
+# dialects reject the statement (a key hitting ON CONFLICT twice in one
+# command), which rolls the scrape back. The WHERE uses
 # row-comparison `<>` (three-valued with NULLs) exactly like the
 # reference (src/db.rs:112-117). Deliberately NO RETURNING: the
 # reference pipes RETURNING into its seen-set (src/db.rs:118), but
@@ -121,10 +118,8 @@ SELECT unnest(CAST(? AS TEXT[])), unnest(CAST(? AS TEXT[])),
 UPSERT_SQL = """
 INSERT INTO external_file
     (external_source, path, filename, mime_type, created, modified, size)
-SELECT DISTINCT ON (external_source, path, filename)
-       external_source, path, filename, mime_type, created, modified, size
+SELECT external_source, path, filename, mime_type, created, modified, size
 FROM staging_found
-ORDER BY external_source, path, filename, batch DESC
 ON CONFLICT (external_source, path, filename) DO UPDATE
 SET mime_type = EXCLUDED.mime_type,
     created   = EXCLUDED.created,
@@ -188,13 +183,13 @@ class ScrapeSession:
     per-batch record_files round-trip, src/db.rs:67-136, minus its
     merge); ``finalize`` merges everything staged — upsert, then the
     soft-delete anti-join — and commits; any error (or ``abort``)
-    rolls back the whole snapshot. This is the contract Structured
-    Streaming's foreachBatch needs: many batches, still exactly one
+    rolls back the whole snapshot: many batches, still exactly one
     visible snapshot transition.
 
-    A batch holds each key (source, path, filename) at most once;
-    every source's single listing pass guarantees it. A key observed
-    in two batches of one scrape is stored as its last observation.
+    A scrape stages each key (source, path, filename) at most once:
+    the fs walk is one pass, and S3 keys are unique and split
+    injectively at their last '/'. A key staged twice fails the
+    finalize upsert, and the scrape rolls back.
 
     The transaction creates ``external_file`` if it is missing
     (TARGET_DDL right after BEGIN), so a scrape needs one connection.
@@ -211,7 +206,6 @@ class ScrapeSession:
         self.external_source = external_source
         self.scrape_time = scrape_time
         self._ph = "?" if paramstyle == "qmark" else "%s"
-        self._batches = 0
         con.execute("BEGIN")
         create_target(con)
         con.execute(STAGING_DDL)
@@ -221,14 +215,12 @@ class ScrapeSession:
         return sql if self._ph == "?" else sql.replace("?", "%s")
 
     def add_rows(self, rows: Iterable[tuple]) -> None:
-        """Stage one batch with one STAGE_SQL statement: one list per
-        column, then the batch number."""
+        """Stage one batch with one STAGE_SQL statement, one list per
+        column."""
         batch = [(*r[:6], clamp_size(r[6])) for r in rows]
         if batch:
-            self._batches += 1
             self.con.execute(
-                self._sql(STAGE_SQL),
-                [*(list(c) for c in zip(*batch)), self._batches],
+                self._sql(STAGE_SQL), [list(c) for c in zip(*batch)]
             )
 
     def finalize(self) -> None:

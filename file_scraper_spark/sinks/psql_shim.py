@@ -72,8 +72,9 @@ class PsqlConnection:
         self.proc = subprocess.Popen(
             [
                 *(run_prefix or []),
-                "psql", dsn, "-X", "-A", "-t", "-F", SEP,
-                "-v", "ON_ERROR_STOP=0", "-P", f"null={NULL_TOKEN}",
+                "psql", dsn, "-X", "-q", "-A", "-t", "-F", SEP,
+                "-v", "ON_ERROR_STOP=0", "-v", "VERBOSITY=terse",
+                "-P", f"null={NULL_TOKEN}",
             ],
             stdin=subprocess.PIPE,
             stdout=subprocess.PIPE,
@@ -83,6 +84,10 @@ class PsqlConnection:
             cwd="/",
         )
         self._last_rows: list[tuple] = []
+        # -q drops command tags and VERBOSITY=terse an error's extra
+        # lines; this drops notices and warnings, so stdout holds only
+        # result rows and errors
+        self.proc.stdin.write("SET client_min_messages TO error;\n")
 
     def _roundtrip(self, sql: str) -> list[str]:
         marker = f"{SENTINEL}_{uuid.uuid4().hex[:8]}"
@@ -103,14 +108,7 @@ class PsqlConnection:
         errors = [l for l in lines if l.startswith(("ERROR:", "FATAL:"))]
         if errors:
             raise PsqlError("; ".join(errors))
-        return [
-            l for l in lines
-            if l and not l.startswith(
-                ("NOTICE:", "WARNING:", "DETAIL:", "HINT:", "LINE ",
-                 "INSERT ", "DELETE ", "UPDATE ", "CREATE", "DROP",
-                 "BEGIN", "COMMIT", "ROLLBACK", "SET", "TRUNCATE", " ")
-            )
-        ]
+        return lines
 
     def execute(self, sql: str, params: tuple | None = None):
         if params:

@@ -23,19 +23,19 @@ Design for scale (the part that matters at a 100 TB tree):
   machines — or on the driver over a walked plan. The walk's one
   `lstat` per entry yields every column, `created` included.
 
-The batch fs scrape (``sources.fs.scrape_fs_batch``) builds its rows on
+The fs scrape (``sources.fs.scrape_fs_batch``) builds its rows on
 the driver when the plan is walked and ships the shards as one RDD
 otherwise; ``sources.fs.list_files`` and ``sources.fs.scrape_fs`` are
 lazy DataFrames over the RDD of shards, with no Python planner process;
 ``ListingReader`` is the ``pylisting`` adapter over the same two
-functions (its ``partitions()`` / ``read()``), so there is one listing
-implementation.
+functions (its ``partitions()`` / ``read()``) and
+``ListingStreamReader`` the ``pylisting_stream`` one, so there is one
+listing implementation.
 
 The row schema (``SCHEMA``) is the reference's FileInfo
 (src/db.rs:10-18) minus external_source and mime_type, which the fs
 scrape adds in the same walk (``sources.fs.file_infos``, with
-the Python lookup ``sources.mime.mime_type``) and the streaming scrape
-in the JVM (``sources.mime.with_mime_type``). Timestamps are aware UTC
+the Python lookup ``sources.mime.mime_type``). Timestamps are aware UTC
 datetimes built from the integer ``st_*_ns`` fields, truncated to
 microseconds (Spark's TimestampType and the reference's precision).
 """
@@ -280,16 +280,20 @@ class ListingStreamReader(SimpleDataSourceStreamReader):
     """Incremental listing stream: each micro-batch emits files whose
     mtime advanced past the last committed watermark — the reference's
     repeated-scrape loop (one snapshot per run, src/main.rs:44-65)
-    recast as a continuous source. Offsets are {"mtime_ns": int}:
-    monotone, replayable (a restart re-reads from the committed
-    watermark — at-least-once for equal-mtime races, exactly-once
+    recast as a continuous source. Offsets are {"mtime_ns": int}: the
+    newest row's ``modified`` in nanoseconds, so floored to
+    microseconds like ``modified`` itself. They are monotone and
+    replayable (a restart re-reads from the committed watermark —
+    at-least-once for mtimes equal to the microsecond, exactly-once
     otherwise).
 
-    Scale note: SimpleDataSourceStreamReader lists on the DRIVER and
-    is the prototype-simplicity variant; the partition-parallel
-    `DataSourceStreamReader` (plan-per-offset-range on executors, like
-    the batch reader above) is the 100 TB form. The row schema and
-    offset contract are identical, so swapping is mechanical."""
+    Each scan is the batch listing, :func:`plan_shards` then
+    :func:`walk_shard`, run on the DRIVER
+    (SimpleDataSourceStreamReader's model), so one micro-batch holds
+    the whole listing; the partition-parallel
+    `DataSourceStreamReader` would walk the shards on executors like
+    the batch reader above. The row schema and offset contract are
+    identical, so swapping is mechanical."""
 
     def __init__(self, options: dict):
         self.root = options["path"]
@@ -300,30 +304,18 @@ class ListingStreamReader(SimpleDataSourceStreamReader):
         return {"mtime_ns": -1}
 
     def _scan(self, after_ns: int, until_ns: int | None = None):
-        """Files with after_ns < mtime_ns (<= until_ns if given).
-        os.walk never follows symlinked dirs (followlinks=False) and
-        tolerates unreadable dirs; the per-file lstat is additionally
-        guarded so entries vanishing mid-scan are skipped, not fatal
-        (the reference walk's filter_map_ok, src/fs.rs:88), and, like
-        the batch reader, keeps only regular files (a symlink is not
-        followed)."""
+        """Rows with after_ns < mtime_ns (<= until_ns if given), and
+        the newest such mtime_ns; mtime_ns is the row's ``modified``.
+        The walk tolerates vanished and unreadable entries and keeps
+        only regular files, like the batch reader."""
         newest = after_ns
         rows = []
-        for dirpath, _, files in os.walk(self.root):
-            for f in files:
-                if not fnmatch.fnmatch(f, self.pattern):
-                    continue
-                try:
-                    st = os.lstat(os.path.join(dirpath, f))
-                except OSError:
-                    continue  # deleted between list and stat
-                if not stat_mod.S_ISREG(st.st_mode):
-                    continue
-                if st.st_mtime_ns > after_ns and (
-                    until_ns is None or st.st_mtime_ns <= until_ns
-                ):
-                    newest = max(newest, st.st_mtime_ns)
-                    rows.append(file_row(dirpath, f, st, self.created))
+        entries = plan_shards(self.root).entries
+        for row in walk_shard(entries, self.created, self.pattern):
+            mtime_ns = (row[3] - _EPOCH) // timedelta(microseconds=1) * 1_000
+            if mtime_ns > after_ns and (until_ns is None or mtime_ns <= until_ns):
+                newest = max(newest, mtime_ns)
+                rows.append(row)
         return rows, newest
 
     def read(self, start: dict):

@@ -13,7 +13,7 @@ SF_DIR_SMOKE = "/root/testdata/sf0.001"
 SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_SMOKE = os.environ.get("SPARK_GRAFT_TEST_SMOKE_DIR", SF_DIR_SMOKE)
 #: fixtures through which a test reaches the parquet fixture directory
-FIXTURE_USERS = frozenset({"spark", "sf_dir", "smoke_dir"})
+FIXTURE_USERS = frozenset({"sf_dir", "smoke_dir"})
 
 
 def pytest_collection_modifyitems(config, items):
@@ -21,10 +21,10 @@ def pytest_collection_modifyitems(config, items):
     (TESTDATA.md: deterministic, read-only, NOT regenerable from this
     repo). On hosts without it — e.g. a bare CI runner — skip the tests
     that request one of ``FIXTURE_USERS`` rather than fail at the first
-    load(); fixture-free tests still run. Point SPARK_GRAFT_TEST_SF_DIR
-    (oracle suites) and SPARK_GRAFT_TEST_SMOKE_DIR (smoke suites) at a
-    fixture to opt back in, or at a missing directory to see what a
-    runner without the fixture runs."""
+    load(); fixture-free tests, Spark ones included, still run. Point
+    SPARK_GRAFT_TEST_SF_DIR (oracle suites) and SPARK_GRAFT_TEST_SMOKE_DIR
+    (smoke suites) at a fixture to opt back in, or at a missing directory
+    to see what a runner without the fixture runs."""
     missing = [d for d in (SF_DIR_SMOKE, SF_DIR_ORACLE) if not os.path.isdir(d)]
     if missing:
         skip = pytest.mark.skip(

@@ -194,14 +194,3 @@ def test_cli_small_tree_starts_no_spark(tmp_path):
     rows = _external_file(small)
     assert len(rows) == 7
     assert rows == _external_file(big)
-
-
-def test_cli_streaming_starts_and_stops_spark(tmp_path):
-    tree = tmp_path / "t"
-    tree.mkdir()
-    (tree / "a.txt").write_text("x")
-    got = _cli_spark_use(
-        "-", str(tree), "--streaming", "--database", str(tmp_path / "s.duckdb")
-    )
-    assert got == {"rc": 0, "started": 1, "stopped": True,
-                   "active": False, "jvm": True}

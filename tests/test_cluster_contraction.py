@@ -37,12 +37,14 @@ def _uf_components(edges: list[tuple[int, int]]) -> dict[int, int]:
     return {n: find(n) for n in parent}
 
 
-def _contract(spark, edges: list[tuple[int, int]]) -> dict[int, int]:
+def _contract(
+    spark, sf_dir: str, edges: list[tuple[int, int]]
+) -> dict[int, int]:
     """Run _propagate_clusters on an explicit edge list and return the
     touched-node labels (the fixture singletons are filtered back out
     so the assertion is purely about the contraction)."""
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    out = dedup._propagate_clusters(spark, "/root/testdata/sf0.001", df)
+    out = dedup._propagate_clusters(spark, sf_dir, df)
     touched = {n for e in edges for n in e}
     return {
         r.doc_id: r.cluster
@@ -83,9 +85,9 @@ GRAPHS = {
 
 
 @pytest.mark.parametrize("name", sorted(GRAPHS))
-def test_star_contraction_matches_union_find(spark, name):
+def test_star_contraction_matches_union_find(spark, smoke_dir, name):
     edges = GRAPHS[name]
-    assert _contract(spark, edges) == _uf_components(edges)
+    assert _contract(spark, smoke_dir, edges) == _uf_components(edges)
 
 
 def test_edge_consumers_leave_nothing_on_disk(

@@ -99,11 +99,11 @@ FUZZ_TABLES = tuple(COLS)
 
 
 @pytest.fixture(scope="module")
-def sql_env(spark):
+def sql_env(spark, smoke_dir):
     """Register the fuzz tables as Spark temp views over the same
     parquet DuckDB reads."""
     for t in TABLES:
-        spark.read.parquet(f"{SF_DIR_SMOKE}/{t}.parquet").createOrReplaceTempView(t)
+        spark.read.parquet(f"{smoke_dir}/{t}.parquet").createOrReplaceTempView(t)
     return spark
 
 

@@ -426,7 +426,7 @@ def test_canonical_url_rules(spark):
     assert got == [want for _, want in cases]
 
 
-def test_pca_project_matches_numpy(spark):
+def test_pca_project_matches_numpy(spark, smoke_dir):
     """pca_project (distributed Gram -> driver eigh -> codegen
     projection) must match a single-box numpy PCA of the same
     vectors: same top-k eigenvalues, same projected coordinates up to
@@ -441,7 +441,7 @@ def test_pca_project_matches_numpy(spark):
     )
     from file_scraper_spark.tables import load
 
-    sf = "/root/testdata/sf0.001"
+    sf = smoke_dir
     x = np.array(
         [
             r["embedding"]

@@ -6,8 +6,7 @@ the row-comparison change predicate (three-valued NULL logic), mime
 preservation on no-op, scoped soft delete with re-stamping. Hypothesis
 drives random multi-scrape histories through both the model and the
 real DuckDB-backed sink and compares full table states. Each scrape is
-staged batch by batch; a key observed in two batches of one scrape is
-merged as its last observation.
+staged batch by batch.
 """
 
 from __future__ import annotations
@@ -30,11 +29,13 @@ MIMES = [None, "text/plain", "image/png"]
 
 
 @st.composite
-def batch(draw):
-    """One staged batch: each name at most once."""
-    names = draw(st.lists(st.sampled_from(FILENAMES), unique=True, max_size=4))
-    return [
-        (
+def scrape(draw):
+    """One scrape: 0-3 staged batches, each name in at most one of them
+    (a scrape stages each key once)."""
+    batches = [[] for _ in range(draw(st.integers(0, 3)))]
+    names = st.lists(st.sampled_from(FILENAMES), unique=True, max_size=4)
+    for name in draw(names) if batches else []:
+        batches[draw(st.integers(0, len(batches) - 1))].append((
             SRC,
             "p",
             name,
@@ -42,19 +43,12 @@ def batch(draw):
             None,  # created (S3-style NULL keeps NULL logic in play)
             draw(st.sampled_from(MTIMES)),
             draw(st.sampled_from(SIZES)),
-        )
-        for name in names
-    ]
+        ))
+    return batches
 
 
-# A history of 1-4 scrapes, each a list of 0-3 batches; a name may
-# repeat across the batches of one scrape.
-history = st.lists(st.lists(batch(), max_size=3), min_size=1, max_size=4)
-
-
-def last_per_key(batches: list[list[tuple]]) -> list[tuple]:
-    """A scrape's rows with each key's last observation only."""
-    return list({(r[1], r[2]): r for b in batches for r in b}.values())
+# A history of 1-4 scrapes.
+history = st.lists(scrape(), min_size=1, max_size=4)
 
 
 def model_sync(state: dict, rows: list[tuple], scrape_time) -> None:
@@ -113,7 +107,7 @@ def test_sink_matches_model(scrapes):
         for rows in batches:
             session.add_rows(rows)
         session.finalize()
-        model_sync(state, last_per_key(batches), t)
+        model_sync(state, [r for b in batches for r in b], t)
 
     actual = {
         (r[0], r[1]): {

@@ -152,7 +152,9 @@ def test_other_source_untouched(db):
 
 
 def test_transaction_rollback_on_failure(db):
-    # A15: any failure mid-scrape leaves the previous snapshot intact
+    """A15: any failure mid-scrape leaves the previous snapshot intact,
+    whether it comes inside the first batch or after a batch was
+    staged (``batch_size=1``)."""
     sink, connect = db
     sink.sync_rows([row(filename="a.txt")], SRC, T0)
 
@@ -160,28 +162,31 @@ def test_transaction_rollback_on_failure(db):
         yield row(filename="b.txt")
         raise RuntimeError("source died mid-walk")
 
-    with pytest.raises(RuntimeError):
-        sink.sync_rows(bad_rows(), SRC, T1)
-    rows = fetch(connect)
-    assert [r[2] for r in rows] == ["a.txt"]  # b.txt not committed
-    assert rows[0][7] is None  # a.txt not soft-deleted by the failed scrape
+    for batch_size, staged in ((1000, 0), (1, 1)):
+        counting = CountingConnection(connect())
+        with pytest.raises(RuntimeError):
+            MergeSink(lambda: counting, batch_size=batch_size).sync_rows(
+                bad_rows(), SRC, T1
+            )
+        assert len(counting.staged) == staged
+        rows = fetch(connect)
+        assert [r[2] for r in rows] == ["a.txt"]  # b.txt not committed
+        assert rows[0][7] is None  # a.txt not soft-deleted by the failed scrape
 
 
-def test_key_in_two_batches_keeps_last(db):
-    """A key staged in two batches of one scrape is merged as its last
-    observation; a repeat of the same row is stored as it is."""
+def test_key_staged_twice_fails_the_scrape(db):
+    """A scrape stages each key once; a key staged in two batches fails
+    the finalize upsert, new key or existing, and the previous snapshot
+    survives."""
     sink, connect = db
     sink.sync_rows([row(filename="a.txt"), row(filename="b.txt")], SRC, T1)
-    with sink.transaction(SRC, T2) as session:
-        session.add_rows([row(filename="a.txt", size=11, mime="x/first"),
-                          row(filename="c.txt", created=None)])
-        session.add_rows([row(filename="a.txt", size=12, mime="x/last"),
-                          row(filename="c.txt", created=None)])
-    rows = {r[2]: r for r in fetch(connect)}
-    assert rows["a.txt"][3] == "x/last" and rows["a.txt"][6] == 12
-    assert rows["a.txt"][7] is None
-    assert rows["b.txt"][7] == T2
-    assert rows["c.txt"] == row(filename="c.txt", created=None) + (None,)
+    before = fetch(connect)
+    for name in ("a.txt", "c.txt"):
+        with pytest.raises(duckdb.Error):
+            with sink.transaction(SRC, T2) as session:
+                session.add_rows([row(filename=name, size=11)])
+                session.add_rows([row(filename=name, size=12)])
+        assert fetch(connect) == before
 
 
 def test_spark_dataframe_end_to_end(db, spark, sf_dir):
@@ -266,8 +271,7 @@ class CountingConnection:
 def test_add_rows_stages_a_batch_in_one_statement(db):
     """A batch larger than the old multi-row INSERT split (65535 // 7 =
     9362 rows) is staged by exactly one statement binding one list per
-    column and the batch number, and merged exactly: inserts, updates
-    and soft deletes."""
+    column, and merged exactly: inserts, updates and soft deletes."""
     sink, connect = db
     n = 9362 + 10
     sink.sync_rows([row(filename=f"f{i}") for i in range(n)], SRC, T1)
@@ -283,9 +287,7 @@ def test_add_rows_stages_a_batch_in_one_statement(db):
     session.finalize()
     counting.close()
     assert len(counting.staged) == 1
-    *columns, batch_no = counting.staged[0]
-    assert [len(col) for col in columns] == [len(batch)] * 7
-    assert batch_no == 1
+    assert [len(col) for col in counting.staged[0]] == [len(batch)] * 7
 
     rows = {r[2]: r for r in fetch(connect)}
     assert len(rows) == n + 20

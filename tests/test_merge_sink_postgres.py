@@ -9,7 +9,7 @@ from datetime import datetime
 import pytest
 
 from file_scraper_spark.sinks.merge_sink import MergeSink
-from tests.pg_harness import PgCluster, PsqlConnection, pg_available
+from tests.pg_harness import PgCluster, PsqlError, pg_available
 
 pytestmark = pytest.mark.skipif(
     not pg_available, reason="postgres binaries not available"
@@ -131,20 +131,34 @@ def test_deleted_restamped_pg(db):
     assert first is not None and second is not None and first != second
 
 
-def test_key_in_two_batches_keeps_last_pg(db):
-    """Twin of the DuckDB cross-batch repeat: the key is merged as its
-    last observation, and Postgres' ON CONFLICT sees it once."""
+def test_key_staged_twice_fails_the_scrape_pg(db):
+    """Twin of the DuckDB case: Postgres rejects a key hitting ON
+    CONFLICT twice in one command, new key or existing, and the
+    previous snapshot survives."""
     sink, cluster = db
     sink.sync_rows([row(filename="a.txt"), row(filename="b.txt")], SRC, T1)
-    with sink.transaction(SRC, T2) as session:
-        session.add_rows([row(filename="a.txt", size=11, mime="x/first"),
-                          row(filename="c.txt", created=None)])
-        session.add_rows([row(filename="a.txt", size=12, mime="x/last"),
-                          row(filename="c.txt", created=None)])
-    rows = {r[1]: r for r in fetch(cluster)}
-    assert rows["a.txt"][2:] == ("x/last", "12", None)
-    assert rows["b.txt"][4] is not None
-    assert rows["c.txt"][2:] == ("text/plain", "10", None)
+    before = fetch(cluster)
+    for name in ("a.txt", "c.txt"):
+        with pytest.raises(PsqlError, match="cannot affect row a second time"):
+            with sink.transaction(SRC, T2) as session:
+                session.add_rows([row(filename=name, size=11)])
+                session.add_rows([row(filename=name, size=12)])
+        assert fetch(cluster) == before
+
+
+def test_shim_reads_back_status_like_text_pg(cluster):
+    """Fetched text that looks like psql's status output (a leading
+    space, a command tag) or is empty comes back as it is."""
+    values = ["", " lead", "SET x", "INSERT 0 1"]
+    con = cluster.connect()
+    try:
+        con.execute(
+            "SELECT v FROM (VALUES (''), (' lead'), ('SET x'), "
+            "('INSERT 0 1')) AS t(v)"
+        )
+        assert sorted(con.fetchall()) == [(v,) for v in sorted(values)]
+    finally:
+        con.close()
 
 
 def test_cli_scrape_into_postgres(db, tmp_path):
@@ -181,6 +195,10 @@ def test_cli_scrape_into_postgres(db, tmp_path):
 
 
 def test_rollback_on_failure_pg(db):
+    """A failure inside the first batch, or after a batch was staged
+    (``batch_size=1``), leaves the previous snapshot intact."""
+    from tests.test_merge_sink import CountingConnection
+
     sink, cluster = db
     sink.sync_rows([row(filename="a.txt")], SRC, T0)
 
@@ -188,11 +206,16 @@ def test_rollback_on_failure_pg(db):
         yield row(filename="b.txt")
         raise RuntimeError("source died")
 
-    with pytest.raises(RuntimeError):
-        sink.sync_rows(bad_rows(), SRC, T1)
-    rows = fetch(cluster)
-    assert [r[1] for r in rows] == ["a.txt"]
-    assert rows[0][4] is None
+    for batch_size, staged in ((1000, 0), (1, 1)):
+        counting = CountingConnection(cluster.connect())
+        with pytest.raises(RuntimeError):
+            MergeSink(
+                lambda: counting, batch_size=batch_size, paramstyle="format"
+            ).sync_rows(bad_rows(), SRC, T1)
+        assert len(counting.staged) == staged
+        rows = fetch(cluster)
+        assert [r[1] for r in rows] == ["a.txt"]
+        assert rows[0][4] is None
 
 
 def fetch_exact(cluster):
@@ -249,8 +272,7 @@ def test_edge_values_round_trip_pg(empty_db):
 
 def test_large_batch_one_statement_pg(empty_db):
     """A batch above the old 9362-row split is staged by one statement
-    (seven column lists and the batch number) on Postgres too, and
-    merges exactly."""
+    (seven column lists) on Postgres too, and merges exactly."""
     from tests.test_merge_sink import CountingConnection
 
     sink, cluster = empty_db
@@ -265,10 +287,9 @@ def test_large_batch_one_statement_pg(empty_db):
          for i in range(5, n + 20)],
         SRC, T2,
     )
-    assert [[len(col) for col in p[:7]] for p in counting.staged] == [
+    assert [[len(col) for col in p] for p in counting.staged] == [
         [n + 15] * 7
     ]
-    assert [p[7] for p in counting.staged] == [1]
     rows = {r[1]: r for r in fetch(cluster)}
     assert len(rows) == n + 20
     for i in range(n + 20):

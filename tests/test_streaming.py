@@ -1,15 +1,12 @@
 """Streaming operator tests: watermark emission semantics, session
-windows vs the batch sessionizer, and the incremental scrape."""
+windows vs the batch sessionizer, checkpoint restarts, and the
+replay-idempotent index sinks that foreachBatch streams merge into."""
 
 from __future__ import annotations
-
-from datetime import datetime
 
 import duckdb
 
 from file_scraper_spark import registry
-from file_scraper_spark.sinks.merge_sink import MergeSink
-from file_scraper_spark.streaming.scrape_stream import scrape_stream
 
 registry._ensure_loaded()
 R = registry.REGISTRY
@@ -47,42 +44,6 @@ def test_session_window_matches_batch_sessionize(spark, sf_dir):
         if (r.user_id, r.session_start, r.n_events) in batch_keys
     )
     assert matched == len(stream_sessions) > 0
-
-
-def test_scrape_stream_incremental(tmp_path, spark):
-    root = tmp_path / "tree"
-    root.mkdir()
-    for i in range(5):
-        (root / f"f{i}.txt").write_text("x" * (i + 1))
-    db = str(tmp_path / "s.duckdb")
-    sink = MergeSink(lambda: duckdb.connect(db))
-
-    # micro-batches of 2 files -> 3 batches, one transaction
-    scrape_stream(
-        spark, str(root), sink, identifier="st", scrape_time=datetime(2024, 1, 1),
-        max_files_per_trigger=2,
-    )
-    con = duckdb.connect(db)
-    assert con.execute("SELECT COUNT(*) FROM external_file").fetchone()[0] == 5
-    con.close()
-
-    # mutate and re-scrape: update + soft delete still work
-    (root / "f0.txt").unlink()
-    (root / "f1.txt").write_text("grown content")
-    scrape_stream(
-        spark, str(root), sink, identifier="st", scrape_time=datetime(2024, 1, 2),
-        max_files_per_trigger=2,
-    )
-    con = duckdb.connect(db)
-    rows = dict(
-        con.execute("SELECT filename, deleted FROM external_file").fetchall()
-    )
-    sizes = dict(
-        con.execute("SELECT filename, size FROM external_file").fetchall()
-    )
-    con.close()
-    assert rows["f0.txt"] is not None  # soft-deleted
-    assert rows["f1.txt"] is None and sizes["f1.txt"] == 13  # updated
 
 
 def test_checkpoint_restart_exactly_once(spark, sf_dir, tmp_path):
