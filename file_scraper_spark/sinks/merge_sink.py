@@ -22,33 +22,39 @@ snapshot DataFrame, faithfully reproducing the reference semantics
   COMMIT, starting with creating ``external_file`` if it is missing;
   any failure rolls back to the previous snapshot (src/fs.rs:103-116).
 
-One sink shape: every batch is staged into the temp table
-``staging_found`` by one statement in the reference's column-array
-shape (src/db.rs:72-100) — one bound array per FILE_COLUMNS entry,
-zipped into rows by ``unnest`` — and the whole snapshot is merged
-once, at commit: one upsert of the staged rows, then one soft-delete
-anti-join against the staged keys: two statements per scrape whatever
-the batch count. The SQL is dialect-neutral (tested against DuckDB and
-Postgres 15).
+One sink shape: the snapshot reaches the sink as Arrow record batches
+of FILE_COLUMNS (``FILE_ARROW_SCHEMA``) — rows are turned into
+columns once, where they are made, as the reference does at its sink
+(src/db.rs:72-100) — and each batch is staged into the temp table
+``staging_found`` by one native bulk statement: DuckDB runs one
+``INSERT … SELECT`` that scans the batch in place, Postgres one
+``COPY … FROM STDIN`` (text format, :func:`copy_text`). The whole
+snapshot is merged once, at commit: one upsert of the staged rows, then
+one soft-delete anti-join against the staged keys: two statements per
+scrape whatever the batch count. The merge SQL is dialect-neutral
+(tested against DuckDB and Postgres 15).
 
-The snapshot reaches the sink as FILE_COLUMNS tuples from the fs
-source — a list when the driver walked a small tree (no Spark job),
-else an RDD of rows built in Python on the executors, collected with
-no Spark SQL on the path — or as a DataFrame (the S3 source, whose
-rows are made in the JVM).
+The fs source hands over the batches themselves when the driver walked
+a small tree (no Spark job), else an RDD of Arrow IPC streams, one per
+shard, built in Python on the executors and collected with no Spark
+SQL on the path; the S3 source hands over a DataFrame, fetched with
+``toArrow``. FILE_COLUMNS tuples (``sync_rows``, ``add_rows``) go
+through the same batch builder, :func:`file_batch`.
 Timestamps are stored as naive UTC, like ``deleted``: a DataFrame's
 ``created``/``modified`` are cast to ``timestamp_ntz`` before they
-leave Spark (:func:`file_columns`), because a collected ``timestamp``
-reads in the driver process's local time zone.
+leave Spark (:func:`file_columns`), because a ``timestamp`` reads in
+the driver process's local time zone.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator, Sequence
 from contextlib import contextmanager
 from itertools import islice
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import RDD
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -62,6 +68,17 @@ FILE_COLUMNS = (
     "modified",
     "size",
 )
+
+#: FILE_COLUMNS as Arrow types: timestamps are naive UTC microseconds.
+FILE_ARROW_SCHEMA = pa.schema([
+    ("external_source", pa.string()),
+    ("path", pa.string()),
+    ("filename", pa.string()),
+    ("mime_type", pa.string()),
+    ("created", pa.timestamp("us")),
+    ("modified", pa.timestamp("us")),
+    ("size", pa.int64()),
+])
 
 I64_MAX = 2**63 - 1
 
@@ -93,14 +110,12 @@ CREATE TEMPORARY TABLE IF NOT EXISTS staging_found (
 );
 """
 
-# The reference's UNNEST batch: both dialects zip a select's unnests.
-STAGE_SQL = """
-INSERT INTO staging_found
-SELECT unnest(CAST(? AS TEXT[])), unnest(CAST(? AS TEXT[])),
-       unnest(CAST(? AS TEXT[])), unnest(CAST(? AS TEXT[])),
-       unnest(CAST(? AS TIMESTAMP[])), unnest(CAST(? AS TIMESTAMP[])),
-       unnest(CAST(? AS BIGINT[]))
-"""
+# DuckDB stages a batch by scanning the Arrow table bound to the local
+# name `staged_batch` (a replacement scan) in place.
+INSERT_ARROW_SQL = "INSERT INTO staging_found SELECT * FROM staged_batch"
+
+# Postgres stages a batch by COPY in text format (copy_text).
+COPY_SQL = "COPY staging_found FROM STDIN"
 
 # A8 upsert, once per scrape, of every staged row. A key is staged at
 # most once per scrape (ScrapeSession); one staged twice makes both
@@ -176,15 +191,70 @@ def clamp_size(size: int | None) -> int | None:
     return size
 
 
+def file_batch(columns: Sequence[Sequence]) -> pa.RecordBatch:
+    """One record batch of ``FILE_ARROW_SCHEMA`` from seven value lists
+    in FILE_COLUMNS order. Timestamps are naive UTC datetimes or integer
+    µs since the epoch; a size outside i64 becomes NULL (clamp_size)."""
+    *head, sizes = columns
+    arrays = [
+        pa.array(values, field.type)
+        for values, field in zip(head, FILE_ARROW_SCHEMA)
+    ]
+    arrays.append(pa.array([clamp_size(s) for s in sizes], pa.int64()))
+    return pa.RecordBatch.from_arrays(arrays, schema=FILE_ARROW_SCHEMA)
+
+
+#: Postgres text-format COPY escapes; the backslash goes first.
+_COPY_ESCAPES = (("\\", "\\\\"), ("\n", "\\n"), ("\r", "\\r"), ("\t", "\\t"))
+
+
+def copy_text(batch: pa.RecordBatch) -> str:
+    """``batch`` as the input of a text-format ``COPY … FROM STDIN``:
+    one line per row, tab-separated, NULL as ``\\N``, and a backslash,
+    newline, carriage return or tab inside a text value escaped. No
+    data line can then be ``\\.``, which ends psql's inline COPY data,
+    and ``''`` stays apart from NULL and from the text ``\\N``. Built
+    with Arrow compute kernels, not per value in Python."""
+    columns = []
+    for column in batch.columns:
+        if pa.types.is_string(column.type):
+            for char, escaped in _COPY_ESCAPES:
+                column = pc.replace_substring(column, char, escaped)
+        else:
+            column = column.cast(pa.string())
+        columns.append(column)
+    lines = pc.binary_join_element_wise(
+        *columns, "\t", null_handling="replace", null_replacement="\\N"
+    )
+    one_list = pa.ListArray.from_arrays([0, len(lines)], lines)
+    return pc.binary_join(one_list, "\n")[0].as_py() + "\n"
+
+
+def _stage_duckdb(con: Any, batch: pa.RecordBatch) -> None:
+    staged_batch = pa.Table.from_batches([batch])  # noqa: F841 (INSERT_ARROW_SQL)
+    con.execute(INSERT_ARROW_SQL)
+
+
+def _stage_postgres(con: Any, batch: pa.RecordBatch) -> None:
+    data = copy_text(batch)
+    copy_in = getattr(con, "copy_in", None)
+    if copy_in is not None:  # the psql pipe (sinks/psql_shim.py)
+        copy_in(COPY_SQL, data)
+        return
+    with con.cursor() as cur, cur.copy(COPY_SQL) as copy:  # psycopg
+        copy.write(data)
+
+
 class ScrapeSession:
     """One open scrape == one DB transaction (A15).
 
-    ``add_rows`` stages one batch of found files (the reference's
-    per-batch record_files round-trip, src/db.rs:67-136, minus its
-    merge); ``finalize`` merges everything staged — upsert, then the
-    soft-delete anti-join — and commits; any error (or ``abort``)
-    rolls back the whole snapshot: many batches, still exactly one
-    visible snapshot transition.
+    ``add_batch`` stages one record batch of found files with one
+    statement (the reference's per-batch record_files round-trip,
+    src/db.rs:67-136, minus its merge), and ``add_rows`` stages
+    FILE_COLUMNS tuples through it; ``finalize`` merges everything
+    staged — upsert, then the soft-delete anti-join — and commits; any
+    error (or ``abort``) rolls back the whole snapshot: many batches,
+    still exactly one visible snapshot transition.
 
     A scrape stages each key (source, path, filename) at most once:
     the fs walk is one pass, and S3 keys are unique and split
@@ -195,7 +265,9 @@ class ScrapeSession:
     (TARGET_DDL right after BEGIN), so a scrape needs one connection.
 
     ``paramstyle``: SQL here is written qmark-style; "format" rewrites
-    placeholders to %s for psycopg.
+    placeholders to %s for psycopg. A connection that can ``register``
+    Arrow data is DuckDB; any other is Postgres (the psql pipe or
+    psycopg).
     """
 
     def __init__(
@@ -206,6 +278,9 @@ class ScrapeSession:
         self.external_source = external_source
         self.scrape_time = scrape_time
         self._ph = "?" if paramstyle == "qmark" else "%s"
+        self._stage = (
+            _stage_duckdb if hasattr(con, "register") else _stage_postgres
+        )
         con.execute("BEGIN")
         create_target(con)
         con.execute(STAGING_DDL)
@@ -214,14 +289,16 @@ class ScrapeSession:
     def _sql(self, sql: str) -> str:
         return sql if self._ph == "?" else sql.replace("?", "%s")
 
+    def add_batch(self, batch: pa.RecordBatch) -> None:
+        """Stage one FILE_ARROW_SCHEMA batch with one statement."""
+        if batch.num_rows:
+            self._stage(self.con, batch)
+
     def add_rows(self, rows: Iterable[tuple]) -> None:
-        """Stage one batch with one STAGE_SQL statement, one list per
-        column."""
-        batch = [(*r[:6], clamp_size(r[6])) for r in rows]
-        if batch:
-            self.con.execute(
-                self._sql(STAGE_SQL), [list(c) for c in zip(*batch)]
-            )
+        """Stage FILE_COLUMNS tuples as one batch."""
+        columns = list(zip(*rows))
+        if columns:
+            self.add_batch(file_batch(columns))
 
     def finalize(self) -> None:
         """Merge the staged snapshot and commit."""
@@ -302,22 +379,30 @@ class MergeSink:
 
     def sync_snapshot(
         self,
-        found: DataFrame | RDD | list[tuple],
+        found: DataFrame | RDD | list[pa.RecordBatch],
         external_source: str,
         scrape_time,
     ) -> None:
-        """Merge a snapshot: a list or an RDD of
-        FILE_COLUMNS tuples with naive-UTC timestamps, or a DataFrame
-        with those columns.
+        """Merge a snapshot: a list of FILE_ARROW_SCHEMA record batches,
+        an RDD of Arrow IPC streams of them, or a DataFrame with the
+        FILE_COLUMNS columns.
 
-        A list is merged as it is, with no Spark job. An RDD or a
-        DataFrame is fetched by one ``collect``, a single Spark job
-        over all partitions in parallel (a ``toLocalIterator`` pull
-        would run one job per partition, serially), before the
-        transaction opens. The rows then go through :meth:`sync_rows`
-        batching. The whole snapshot is held on the driver.
+        A list is merged as it is, with no Spark job. An RDD is fetched
+        by one ``collect`` and a DataFrame by one ``toArrow``, a single
+        Spark job over all partitions in parallel (a
+        ``toLocalIterator`` pull would run one job per partition,
+        serially), before the transaction opens. The whole snapshot is
+        held on the driver, as Arrow columns; each batch is then staged
+        with one statement.
         """
         if isinstance(found, DataFrame):
-            found = file_columns(found)
-        rows = found if isinstance(found, list) else found.collect()
-        self.sync_rows(rows, external_source, scrape_time)
+            table = file_columns(found).toArrow().cast(FILE_ARROW_SCHEMA)
+            batches = table.to_batches()
+        elif isinstance(found, RDD):
+            streams = found.collect()
+            batches = [b for ipc in streams for b in pa.ipc.open_stream(ipc)]
+        else:
+            batches = found
+        with self.transaction(external_source, scrape_time) as session:
+            for batch in batches:
+                session.add_batch(batch)

@@ -3,10 +3,11 @@ try the S3 interpretation of the path first, fall back to filesystem.
 
 A source's ``scrape`` takes a zero-argument function that returns the
 SparkSession, and calls it only when it has work to ship. It returns
-what ``MergeSink.sync_snapshot`` fetches: for fs, the FileInfo tuples as
-a list when the driver walked the tree, else as an RDD built in Python
-on the executors (no Spark SQL either way — sources/fs.py); for S3, a
-DataFrame (its listing rows are made in the JVM).
+what ``MergeSink.sync_snapshot`` fetches: for fs, FileInfo Arrow record
+batches as a list when the driver walked the tree, else an RDD of Arrow
+IPC streams built in Python on the executors (no Spark SQL either way —
+sources/fs.py); for S3, a DataFrame (its listing rows are made in the
+JVM).
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable
 
+import pyarrow as pa
 from pyspark import RDD
 from pyspark.sql import DataFrame, SparkSession
 
@@ -27,7 +29,9 @@ from file_scraper_spark.sources.url import (
 class Source:
     kind: str  # 's3' | 'fs'
     identifier: str
-    scrape: Callable[[Callable[[], SparkSession]], DataFrame | RDD | list[tuple]]
+    scrape: Callable[
+        [Callable[[], SparkSession]], DataFrame | RDD | list[pa.RecordBatch]
+    ]
 
 
 def source_for_path(

@@ -5,9 +5,9 @@ the extension is the lowercased text after the name's last '.', and a
 name with no '.' or an unknown extension has no mime type.
 
 - :func:`mime_type` is the per-file Python lookup, like the
-  reference's: the fs batch scrape builds its rows in Python on the
-  executors (sources/fs.py), so the lookup runs there, with no Spark
-  SQL on the path.
+  reference's: the fs scrape builds its record batches in Python, on
+  the driver or the executors (sources/fs.py), so the lookup runs
+  there, with no Spark SQL on the path.
 - :func:`with_mime_type` is the JVM form for rows that already live in
   a DataFrame (the S3 listing, the streaming scrapes): a literal map
   probed with ``try_element_at``, folded into the plan as a constant

@@ -23,20 +23,23 @@ Design for scale (the part that matters at a 100 TB tree):
   machines — or on the driver over a walked plan. The walk's one
   `lstat` per entry yields every column, `created` included.
 
-The fs scrape (``sources.fs.scrape_fs_batch``) builds its rows on
-the driver when the plan is walked and ships the shards as one RDD
-otherwise; ``sources.fs.list_files`` and ``sources.fs.scrape_fs`` are
-lazy DataFrames over the RDD of shards, with no Python planner process;
+The fs scrape (``sources.fs.scrape_fs_batch``) builds its record
+batches on the driver when the plan is walked and ships the shards as
+one RDD otherwise; ``sources.fs.list_files`` and
+``sources.fs.scrape_fs`` are lazy DataFrames over the RDD of shards,
+with no Python planner process;
 ``ListingReader`` is the ``pylisting`` adapter over the same two
 functions (its ``partitions()`` / ``read()``) and
 ``ListingStreamReader`` the ``pylisting_stream`` one, so there is one
 listing implementation.
 
-The row schema (``SCHEMA``) is the reference's FileInfo
-(src/db.rs:10-18) minus external_source and mime_type, which the fs
-scrape adds in the same walk (``sources.fs.file_infos``, with
-the Python lookup ``sources.mime.mime_type``). Timestamps are aware UTC
-datetimes built from the integer ``st_*_ns`` fields, truncated to
+The walk yields each regular file's ``lstat`` result; its two
+projections read the columns from it. The listing sources' row schema
+(``SCHEMA``, :func:`listing_rows`) is the reference's FileInfo
+(src/db.rs:10-18) minus external_source and mime_type, with aware UTC
+datetimes. The fs scrape (``sources.fs.file_batches``) builds Arrow
+record batches of all of FileInfo instead, with no per-file datetime.
+Both take timestamps from the integer ``st_*_ns`` fields, truncated to
 microseconds (Spark's TimestampType and the reference's precision).
 """
 
@@ -77,35 +80,38 @@ class BirthtimeUnavailableError(OSError):
     reference's fail-fast contract keep it."""
 
 
-def _ts(ns: int) -> datetime:
-    """Epoch-ns -> UTC datetime, floored to microseconds in integer
-    arithmetic (a float st_mtime loses sub-microsecond digits and can
-    round the microsecond itself)."""
-    return _EPOCH + timedelta(microseconds=ns // 1_000)
+def _ts(us: int | None) -> datetime | None:
+    """Epoch-µs -> aware UTC datetime (None stays None)."""
+    return None if us is None else _EPOCH + timedelta(microseconds=us)
 
 
-def created_time(st: os.stat_result, mode: str, path: str) -> datetime | None:
-    """`created` from one stat result: st_birthtime where the platform
-    has it (macOS/Windows/BSD), else st_ctime (Linux: inode-change
-    time, the closest field; it moves when a file is replaced, which
-    is what the A8 change predicate needs). ``mode="strict"`` raises
-    instead of falling back (the reference's src/fs.rs:65);
-    ``mode="none"`` leaves it NULL."""
+def created_us(
+    st: os.stat_result, mode: str, dirpath: str, name: str
+) -> int | None:
+    """`created`, in integer µs since the epoch, from one stat result:
+    st_birthtime where the platform has it (macOS/Windows/BSD), else
+    st_ctime (Linux: inode-change time, the closest field; it moves
+    when a file is replaced, which is what the A8 change predicate
+    needs). ``mode="strict"`` raises instead of falling back (the
+    reference's src/fs.rs:65); ``mode="none"`` leaves it NULL. Floored
+    in integer arithmetic: a float st_mtime loses sub-microsecond
+    digits and can round the microsecond itself."""
     if mode == "none":
         return None
     bt = getattr(st, "st_birthtime_ns", None)
     if bt is not None:
-        return _ts(bt)
+        return bt // 1_000
     bt = getattr(st, "st_birthtime", None)  # Python < 3.12: float only
     if bt is not None:
-        return _EPOCH + timedelta(microseconds=int(bt * 1_000_000))
+        return int(bt * 1_000_000)
     if mode == "strict":
         raise BirthtimeUnavailableError(
-            f"no file-creation time available for {path!r} "
+            f"no file-creation time available for "
+            f"{os.path.join(dirpath, name)!r} "
             "(platform exposes no st_birthtime); use "
             "strict_created=False for the st_ctime fallback"
         )
-    return _ts(st.st_ctime_ns)
+    return st.st_ctime_ns // 1_000
 
 
 def file_row(dirpath: str, name: str, st: os.stat_result, created: str) -> tuple:
@@ -117,8 +123,8 @@ def file_row(dirpath: str, name: str, st: os.stat_result, created: str) -> tuple
         dirpath,
         name,
         size,
-        _ts(st.st_mtime_ns),
-        created_time(st, created, os.path.join(dirpath, name)),
+        _ts(st.st_mtime_ns // 1_000),
+        _ts(created_us(st, created, dirpath, name)),
     )
 
 
@@ -197,12 +203,10 @@ def plan_shards(root: str) -> ShardPlan:
     return ShardPlan(sorted(files + list(pending)), walked)
 
 
-def walk_shard(
-    entries: Sequence[str], created: str = "stat", pattern: str = "*"
-) -> Iterator[tuple]:
+def walk_shard(entries: Sequence[str]) -> Iterator[tuple[str, str, os.stat_result]]:
     """Recursive walk + stat of ``entries`` (one shard on an executor,
-    or a walked plan on the driver), yielding SCHEMA rows for the
-    regular files whose name matches ``pattern``.
+    or a walked plan on the driver), yielding ``(dirpath, name, lstat
+    result)`` for each regular file.
 
     Per-entry anomalies are TOLERATED, not fatal (parity with the
     reference walk's filter_map_ok, src/fs.rs:88): a file deleted
@@ -228,6 +232,15 @@ def walk_shard(
         if not stat_mod.S_ISREG(st.st_mode):
             continue  # symlink / fifo / socket: not a file record
         dirpath, name = os.path.split(p)
+        yield dirpath, name, st
+
+
+def listing_rows(
+    entries: Sequence[str], created: str = "stat", pattern: str = "*"
+) -> Iterator[tuple]:
+    """:func:`walk_shard` projected to SCHEMA rows, for the files whose
+    name matches ``pattern``."""
+    for dirpath, name, st in walk_shard(entries):
         if fnmatch.fnmatch(name, pattern):
             yield file_row(dirpath, name, st, created)
 
@@ -268,7 +281,7 @@ class ListingReader(DataSourceReader):
         return [_Shard(s) for s in plan_shards(self.root).shards(self.nparts)]
 
     def read(self, partition: _Shard) -> Iterator[tuple]:
-        return walk_shard(partition.entries, self.created, self.pattern)
+        return listing_rows(partition.entries, self.created, self.pattern)
 
 
 def register(spark) -> None:  # noqa: ANN001
@@ -311,11 +324,13 @@ class ListingStreamReader(SimpleDataSourceStreamReader):
         newest = after_ns
         rows = []
         entries = plan_shards(self.root).entries
-        for row in walk_shard(entries, self.created, self.pattern):
-            mtime_ns = (row[3] - _EPOCH) // timedelta(microseconds=1) * 1_000
+        for dirpath, name, st in walk_shard(entries):
+            if not fnmatch.fnmatch(name, self.pattern):
+                continue
+            mtime_ns = st.st_mtime_ns // 1_000 * 1_000
             if mtime_ns > after_ns and (until_ns is None or mtime_ns <= until_ns):
                 newest = max(newest, mtime_ns)
-                rows.append(row)
+                rows.append(file_row(dirpath, name, st, self.created))
         return rows, newest
 
     def read(self, start: dict):

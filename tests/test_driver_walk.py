@@ -7,9 +7,12 @@ is walked here in-process, shard by shard, as executors walk it."""
 from __future__ import annotations
 
 import os
+from datetime import datetime, timedelta
 
+import pyarrow as pa
 import pytest
 
+from file_scraper_spark.sinks.merge_sink import FILE_ARROW_SCHEMA
 from file_scraper_spark.sources import fs, pyds
 from tests.test_sources import _edge_case_tree
 
@@ -18,9 +21,23 @@ def _no_session():
     raise AssertionError("the driver walk asked for a SparkSession")
 
 
-def _sharded_rows(root: str, **kw) -> list[tuple]:
-    """The batch scrape's rows with the tree forced above the cap,
-    walking each shard of the plan as an executor task would."""
+def _us(ns: int) -> datetime:
+    """Epoch-ns -> naive UTC datetime floored to micros."""
+    return datetime(1970, 1, 1) + timedelta(microseconds=ns // 1_000)
+
+
+def _rows(batches) -> list[tuple]:
+    """FILE_COLUMNS tuples of record batches, sorted."""
+    for batch in batches:
+        assert batch.schema == FILE_ARROW_SCHEMA
+    table = pa.Table.from_batches(batches, FILE_ARROW_SCHEMA)
+    return sorted(zip(*table.to_pydict().values()))
+
+
+def _sharded_batches(root: str, **kw) -> list[pa.RecordBatch]:
+    """The batch scrape's record batches with the tree forced above the
+    cap, walking each shard of the plan as an executor task would and
+    reading back the Arrow IPC stream it ships."""
     shipped = []
 
     class Context:
@@ -31,8 +48,9 @@ def _sharded_rows(root: str, **kw) -> list[tuple]:
             shipped.extend(shards)
             return self
 
-        def flatMap(self, walk):  # noqa: N802  (the RDD method name)
-            return [row for shard in shipped for row in walk(shard)]
+        def map(self, walk):
+            streams = [walk(shard) for shard in shipped]
+            return [b for s in streams for b in pa.ipc.open_stream(s)]
 
     class Session:
         sparkContext = Context()
@@ -40,11 +58,15 @@ def _sharded_rows(root: str, **kw) -> list[tuple]:
     saved = pyds.DRIVER_WALK_MAX_ENTRIES
     pyds.DRIVER_WALK_MAX_ENTRIES = 0
     try:
-        rows = fs.scrape_fs_batch(lambda: Session(), root, **kw)
+        batches = fs.scrape_fs_batch(lambda: Session(), root, **kw)
     finally:
         pyds.DRIVER_WALK_MAX_ENTRIES = saved
     assert shipped, "the tree above the cap was not sharded"
-    return rows
+    return batches
+
+
+def _sharded_rows(root: str, **kw) -> list[tuple]:
+    return _rows(_sharded_batches(root, **kw))
 
 
 def test_driver_rows_equal_sharded_walk(tmp_path, monkeypatch):
@@ -82,7 +104,7 @@ def test_driver_rows_equal_sharded_walk(tmp_path, monkeypatch):
     monkeypatch.setattr(pyds, "plan_shards", plan_then_vanish)
 
     victim.write_bytes(b"v")
-    driver = fs.scrape_fs_batch(_no_session, str(root), identifier="t")
+    driver = _rows(fs.scrape_fs_batch(_no_session, str(root), identifier="t"))
     victim.write_bytes(b"v")
     sharded = _sharded_rows(str(root), identifier="t")
 
@@ -90,7 +112,7 @@ def test_driver_rows_equal_sharded_walk(tmp_path, monkeypatch):
     assert walked.walked and not shipped.walked
     assert str(victim) in walked.entries and str(victim) in shipped.entries
     assert str(locked) in walked.entries  # kept for the walk to skip
-    assert sorted(driver) == sorted(sharded)
+    assert driver == sharded
     names = sorted(r[2] for r in driver)
     assert names == sorted([
         "empty.txt", ".dotfile", "inside.csv", "_underscore.json",
@@ -120,7 +142,9 @@ def test_cap_switches_path_exactly_once(tmp_path, monkeypatch, layout):
         plan = pyds.plan_shards(str(root))
         walked.append(plan.walked)
         if plan.walked:
-            rows = fs.scrape_fs_batch(_no_session, str(root), identifier="t")
+            rows = _rows(
+                fs.scrape_fs_batch(_no_session, str(root), identifier="t")
+            )
         else:
             with pytest.raises(AssertionError, match="SparkSession"):
                 fs.scrape_fs_batch(_no_session, str(root), identifier="t")
@@ -165,9 +189,28 @@ def test_file_root_is_walked_on_the_driver(tmp_path):
     """WalkDir of a file yields the file."""
     f = tmp_path / "a.csv"
     f.write_bytes(b"1,2\n")
-    (row,) = fs.scrape_fs_batch(_no_session, str(f), identifier="t")
+    os.utime(f, ns=(1_700_000_000_123_456_789,) * 2)  # sub-µs mtime
+    st = os.lstat(f)
+    (row,) = _rows(fs.scrape_fs_batch(_no_session, str(f), identifier="t"))
     assert row[:4] == ("t", str(tmp_path), "a.csv", "text/csv")
+    assert row[4] == _us(getattr(st, "st_birthtime_ns", None) or st.st_ctime_ns)
+    assert row[5] == _us(st.st_mtime_ns) == datetime(2023, 11, 14, 22, 13, 20, 123456)
     assert row[6] == 4
+
+
+def test_batches_split_at_batch_rows(tmp_path, monkeypatch):
+    """The walk emits one record batch per ``BATCH_ROWS`` files, on the
+    driver and in each shard, and the rows do not depend on the split."""
+    root = tmp_path / "tree"
+    _edge_case_tree(root)
+    whole = _rows(fs.scrape_fs_batch(_no_session, str(root), identifier="t"))
+    monkeypatch.setattr(fs, "BATCH_ROWS", 2)
+    driver = fs.scrape_fs_batch(_no_session, str(root), identifier="t")
+    assert [b.num_rows for b in driver] == [2, 2, 2, 1]
+    assert _rows(driver) == whole
+    sharded = _sharded_batches(str(root), identifier="t")
+    assert max(b.num_rows for b in sharded) == 2
+    assert _rows(sharded) == whole
 
 
 def test_strict_created_raises_from_the_driver_walk(tmp_path):

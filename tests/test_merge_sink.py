@@ -9,7 +9,13 @@ from datetime import datetime
 import duckdb
 import pytest
 
-from file_scraper_spark.sinks.merge_sink import FILE_COLUMNS, MergeSink, clamp_size
+from file_scraper_spark.sinks.merge_sink import (
+    FILE_COLUMNS,
+    INSERT_ARROW_SQL,
+    MergeSink,
+    clamp_size,
+    file_batch,
+)
 
 T0 = datetime(2024, 1, 1, 12, 0, 0)
 T1 = datetime(2024, 1, 2, 12, 0, 0)
@@ -138,6 +144,8 @@ def test_size_overflow_null(db):
     sink, connect = db
     assert clamp_size(2**63) is None
     assert clamp_size(2**63 - 1) == 2**63 - 1
+    columns = list(zip(row(size=2**63), row(size=2**63 - 1)))
+    assert file_batch(columns).column("size").to_pylist() == [None, 2**63 - 1]
     sink.sync_rows([row(size=2**63)], SRC, T1)
     assert fetch(connect)[0][6] is None
 
@@ -253,25 +261,31 @@ def test_sync_snapshot_fetches_in_one_job(db, spark):
 
 
 class CountingConnection:
-    """A DB-API connection that counts the statements staging a batch
-    and records their parameters."""
+    """A DB-API connection that records each statement staging a batch:
+    DuckDB's INSERT INTO staging_found, or the data of a COPY through
+    the psql pipe."""
 
     def __init__(self, con):
         self.con, self.staged = con, []
 
     def execute(self, sql, params=None):
         if sql.lstrip().startswith("INSERT INTO staging_found"):
-            self.staged.append(params)
+            self.staged.append(sql)
         return self.con.execute(sql, params)
+
+    def copy_in(self, sql, data):
+        self.staged.append(data)
+        return self.con.copy_in(sql, data)
 
     def __getattr__(self, name):
         return getattr(self.con, name)
 
 
 def test_add_rows_stages_a_batch_in_one_statement(db):
-    """A batch larger than the old multi-row INSERT split (65535 // 7 =
-    9362 rows) is staged by exactly one statement binding one list per
-    column, and merged exactly: inserts, updates and soft deletes."""
+    """Each batch is staged by exactly one statement, an INSERT that
+    scans the Arrow batch — a batch of tuples through add_rows, and
+    each record batch of a snapshot — and merged exactly: inserts,
+    updates and soft deletes."""
     sink, connect = db
     n = 9362 + 10
     sink.sync_rows([row(filename=f"f{i}") for i in range(n)], SRC, T1)
@@ -286,8 +300,7 @@ def test_add_rows_stages_a_batch_in_one_statement(db):
     session.add_rows(batch)
     session.finalize()
     counting.close()
-    assert len(counting.staged) == 1
-    assert [len(col) for col in counting.staged[0]] == [len(batch)] * 7
+    assert counting.staged == [INSERT_ARROW_SQL]
 
     rows = {r[2]: r for r in fetch(connect)}
     assert len(rows) == n + 20
@@ -295,6 +308,20 @@ def test_add_rows_stages_a_batch_in_one_statement(db):
         r = rows[f"f{i}"]
         assert r[7] == (T2 if i < 5 else None), r
         assert r[6] == (11 if i % 1000 == 0 and i >= 5 else 10), r
+
+    # a snapshot of three record batches, one of them empty: two
+    # statements, and the same table
+    before = fetch(connect)
+    columns = list(zip(*batch))
+    batches = [
+        file_batch([c[:100] for c in columns]),
+        file_batch([c[100:100] for c in columns]),
+        file_batch([c[100:] for c in columns]),
+    ]
+    counting = CountingConnection(connect())
+    MergeSink(lambda: counting).sync_snapshot(batches, SRC, T2)
+    assert counting.staged == [INSERT_ARROW_SQL] * 2
+    assert fetch(connect) == before
 
 
 def _tree(root, n=5):
@@ -359,6 +386,14 @@ ODD_ROWS = [
     ("odd", "d", "a%20b?%s.txt", "text/plain", None, T1, 2**63 - 1),
     ("odd", "dé", "ünï—✓.txt", None, datetime(2024, 5, 6, 7, 8, 9, 123456),
      datetime(2024, 5, 6, 7, 8, 9, 654321), 2**63),
+    # a line that is exactly `\.` ends psql's inline COPY data
+    ("odd", "d\n\\.\n", "\\.", "\\.\n", T0, T1, 3),
+    ("odd", "tab\there", "back\\slash\\", "a\tb\\c", T0, T1, 4),
+    ("odd", "cr\r", "crlf\r\n.txt", None, T0, T1, 5),
+    ("odd", "\\N", "\\N", "\\N", T0, T1, 6),
+    ("odd", "", "", "", T0, T1, 7),  # '' next to NULL
+    ("odd", "d", "empty-mime", "", None, T1, None),
+    ("odd", " lead", " lead.txt", " text/plain", T0, T1, 8),
 ]
 
 
@@ -367,9 +402,10 @@ def expected(rows):
 
 
 def test_edge_values_round_trip_exactly(tmp_path):
-    """All-NULL columns, quotes, newlines, %20, placeholders in names
-    and non-ASCII survive the array staging unchanged, into an empty
-    database."""
+    """All-NULL columns, quotes, newlines, %20, placeholders in names,
+    non-ASCII, COPY's escapes and markers (``\\.``, tab, backslash,
+    carriage return, ``\\N``), ``''`` next to NULL and leading spaces
+    survive the Arrow staging unchanged, into an empty database."""
     path = str(tmp_path / "sink.duckdb")
     connect = lambda: duckdb.connect(path)
     sink = MergeSink(connect)

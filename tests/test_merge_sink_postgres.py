@@ -161,6 +161,35 @@ def test_shim_reads_back_status_like_text_pg(cluster):
         con.close()
 
 
+def test_shim_reads_back_error_like_text_pg(cluster):
+    """A fetched value that starts like a psql error line, at the start
+    of a row or of a line inside a value, comes back as it is; a real
+    error still raises."""
+    con = cluster.connect()
+    try:
+        con.execute("SELECT 'ERROR: not an error'")
+        assert con.fetchall() == [("ERROR: not an error",)]
+        con.execute("SELECT E'a\\nERROR: b', 'FATAL: c'")
+        assert con.fetchall() == [("a\nERROR: b", "FATAL: c")]
+        with pytest.raises(PsqlError, match="division by zero"):
+            con.execute("SELECT 1 / 0")
+    finally:
+        con.close()
+
+
+def test_shim_reads_back_multiline_text_pg(cluster):
+    """A fetched value holding a newline is one value of one row, and
+    NULL, '' and the text ``\\.`` read back apart."""
+    con = cluster.connect()
+    try:
+        con.execute("SELECT E'two\\nlines', 'x'")
+        assert con.fetchall() == [("two\nlines", "x")]
+        con.execute("SELECT NULL, '', E'\\\\.'")
+        assert con.fetchall() == [(None, "", "\\.")]
+    finally:
+        con.close()
+
+
 def test_cli_scrape_into_postgres(db, tmp_path):
     """Full reference parity: the CLI scrapes a filesystem tree into a
     real Postgres database addressed by a postgresql:// URL (psycopg
@@ -260,8 +289,9 @@ def test_first_scrape_creates_target_pg(empty_db):
 
 def test_edge_values_round_trip_pg(empty_db):
     """The DuckDB round-trip cases on Postgres 15: all-NULL columns,
-    quotes, newlines, %20, placeholders and non-ASCII in names, and a
-    size of 2**63 stored as NULL, staged as ARRAY literals."""
+    quotes, newlines, %20, placeholders and non-ASCII in names, COPY's
+    escapes and end marker, '' next to NULL, leading spaces, and a size
+    of 2**63 stored as NULL, staged by text-format COPY."""
     from tests.test_merge_sink import NULL_ROWS, ODD_ROWS, expected
 
     sink, cluster = empty_db
@@ -271,8 +301,8 @@ def test_edge_values_round_trip_pg(empty_db):
 
 
 def test_large_batch_one_statement_pg(empty_db):
-    """A batch above the old 9362-row split is staged by one statement
-    (seven column lists) on Postgres too, and merges exactly."""
+    """A batch above the old 9362-row split is staged by one COPY on
+    Postgres too, one line per row, and merges exactly."""
     from tests.test_merge_sink import CountingConnection
 
     sink, cluster = empty_db
@@ -287,9 +317,7 @@ def test_large_batch_one_statement_pg(empty_db):
          for i in range(5, n + 20)],
         SRC, T2,
     )
-    assert [[len(col) for col in p] for p in counting.staged] == [
-        [n + 15] * 7
-    ]
+    assert [data.count("\n") for data in counting.staged] == [n + 15]
     rows = {r[1]: r for r in fetch(cluster)}
     assert len(rows) == n + 20
     for i in range(n + 20):

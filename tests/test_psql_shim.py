@@ -1,6 +1,6 @@
-"""Unit tests of the psql pipe shim's parameter substitution; no psql
-binary or server needed (the connection is built without a process
-and its round-trip is stubbed)."""
+"""Unit tests of the psql pipe shim's parameter substitution and csv
+reading; no psql binary or server needed (the connection is built
+without a process and its round-trip is stubbed)."""
 
 from __future__ import annotations
 
@@ -8,7 +8,11 @@ from datetime import datetime
 
 import pytest
 
-from file_scraper_spark.sinks.psql_shim import PsqlConnection, PsqlError
+from file_scraper_spark.sinks.psql_shim import (
+    PsqlConnection,
+    PsqlError,
+    csv_rows,
+)
 
 
 def _stub_connection() -> tuple[PsqlConnection, list[str]]:
@@ -61,25 +65,13 @@ def test_placeholder_count_mismatch_raises():
     assert sent == []
 
 
-def test_list_parameters_become_array_literals():
-    """A list binds as ``ARRAY[...]`` of element literals, the form the
-    sink's column-array staging sends; placeholder characters inside
-    elements are not substituted."""
-    con, sent = _stub_connection()
-    con.execute(
-        "SELECT unnest(CAST(%s AS TEXT[])), unnest(CAST(%s AS TIMESTAMP[])), "
-        "unnest(CAST(%s AS BIGINT[])), unnest(CAST(%s AS TEXT[]))",
-        (
-            ["it's", "50%s?", None],
-            [datetime(2024, 1, 2, 3, 4, 5, 6), None, datetime(2024, 1, 2)],
-            [0, None, 2**63 - 1],
-            [None, None, None],
-        ),
-    )
-    assert sent == [
-        "SELECT unnest(CAST(ARRAY['it''s', '50%s?', NULL] AS TEXT[])), "
-        "unnest(CAST(ARRAY['2024-01-02T03:04:05.000006', NULL, "
-        "'2024-01-02T00:00:00'] AS TIMESTAMP[])), "
-        "unnest(CAST(ARRAY[0, NULL, 9223372036854775807] AS BIGINT[])), "
-        "unnest(CAST(ARRAY[NULL, NULL, NULL] AS TEXT[]))"
+def test_csv_rows_keep_quotes_newlines_and_nulls():
+    """FORCE_QUOTE csv output: quoted values may hold commas, doubled
+    quotes, newlines and carriage returns; an unquoted empty field is
+    NULL, a quoted one the empty string."""
+    out = '"a,b","say ""hi""",\n"two\nlines","",\n"x\r\ny","ERROR: no","\\."\n'
+    assert csv_rows(out) == [
+        ("a,b", 'say "hi"', None),
+        ("two\nlines", "", None),
+        ("x\r\ny", "ERROR: no", "\\."),
     ]

@@ -107,7 +107,7 @@ def test_scrape_fs_strict_created_modes(spark, tmp_path):
         BirthtimeUnavailableError,
         ListingReader,
         _Shard,
-        created_time,
+        created_us,
     )
 
     f = tmp_path / "x.bin"
@@ -126,7 +126,7 @@ def test_scrape_fs_strict_created_modes(spark, tmp_path):
     else:
         # unit level: the walk's created helper raises the typed error
         with pytest.raises(BirthtimeUnavailableError):
-            created_time(st, "strict", str(f))
+            created_us(st, "strict", str(tmp_path), "x.bin")
         # job level: the failure propagates out of the executor
         with pytest.raises(Exception, match="BirthtimeUnavailable"):
             scrape_fs(spark, str(tmp_path), strict_created=True).collect()
